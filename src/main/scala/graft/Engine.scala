@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Session factory + fixture-table access for the graft engine.
   *
@@ -14,7 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  /** Build the engine's SparkSession. Idempotent (getOrCreate). */
+  /** Build the engine's SparkSession — the one session recipe every main
+    * runs on. Idempotent (getOrCreate), and installs the engine.
+    */
   def session(master: String = "local[32]", appName: String = "graft"): SparkSession = {
     val b = SparkSession
       .builder()
@@ -46,46 +52,40 @@ object Engine {
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Functions.registerAll(spark)
-    // extensions only apply at session construction; wire the engine's
-    // optimizer rules into pre-existing sessions too
-    registerOptimization(spark, SimplifyEndsWithSource)
-    registerOptimization(spark, BandedLevenshtein)
-    registerOptimization(spark, plans.BucketIntervalJoin)
-    registerOptimization(spark, plans.MvRewrite)
-    registerOptimization(spark, plans.AsofPushDown)
-    registerStrategy(spark, plans.AsofJoinStrategy)
+    install(spark)
     spark
   }
 
-  /** Idempotent, THREAD-SAFE registration of an experimental optimizer
-    * rule. The raw pattern — check `extraOptimizations.contains` then
-    * reassign the Seq — is a non-atomic check-then-act on a plain var:
-    * two threads planning concurrently on one session could interleave
-    * and drop a registration (an "unplanned AsofJoin" planner error) or
-    * duplicate a rule entry (ADVICE r12). Every engine registration
-    * site funnels through these two helpers, which serialize on the
-    * session's `experimental` holder — the object that owns the var.
+  /** Install the engine's SQL functions, optimizer rules and planner
+    * strategy ([[GraftExtensions]]' table) into an existing session —
+    * extensions only apply at session construction. Idempotent and
+    * THREAD-SAFE: it serializes on the session's `experimental` holder,
+    * the object that owns the rule vars. `Engine.session` and the driver
+    * boundary (`SparkEntry`) are the callers; operators never register.
     */
-  def registerOptimization(s: SparkSession,
-      rule: org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit =
-    s.experimental.synchronized {
-      if (!s.experimental.extraOptimizations.contains(rule))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ rule
-    }
+  def install(s: SparkSession): Unit = s.experimental.synchronized {
+    val registry = s.sessionState.functionRegistry
+    GraftExtensions.functions.foreach(f =>
+      registry.registerFunction(FunctionIdentifier(f.name), f.info, f.builder))
+    GraftExtensions.optimizerRules.foreach(registerOptimization(s, _))
+    GraftExtensions.strategies.foreach(registerStrategy(s, _))
+  }
 
-  /** Thread-safe twin of [[registerOptimization]] for planner
-    * strategies ([[plans.AsofJoinStrategy]]).
+  /** Append an optimizer rule unless present. The raw pattern — check
+    * `extraOptimizations.contains` then reassign the Seq — is a
+    * non-atomic check-then-act on a plain var: two threads planning
+    * concurrently on one session could interleave and drop a
+    * registration or duplicate a rule entry (ADVICE r12), so both
+    * helpers run only under [[install]]'s lock.
     */
-  def registerStrategy(s: SparkSession,
-      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit =
-    s.experimental.synchronized {
-      if (!s.experimental.extraStrategies.contains(strategy))
-        s.experimental.extraStrategies =
-          s.experimental.extraStrategies :+ strategy
-    }
+  private def registerOptimization(s: SparkSession, rule: Rule[LogicalPlan]): Unit =
+    if (!s.experimental.extraOptimizations.contains(rule))
+      s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ rule
+
+  /** Twin of [[registerOptimization]] for planner strategies. */
+  private def registerStrategy(s: SparkSession, strategy: SparkStrategy): Unit =
+    if (!s.experimental.extraStrategies.contains(strategy))
+      s.experimental.extraStrategies = s.experimental.extraStrategies :+ strategy
 
   /** Conf key: when "true", [[materialize]] uses RELIABLE checkpoints
     * (persisted to [[CheckpointDirKey]] / the context's checkpoint dir)

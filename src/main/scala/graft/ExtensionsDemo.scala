@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Fresh-JVM proof that the engine installs purely via
   * `spark.sql.extensions=graft.GraftExtensions`: the custom functions
-  * resolve in plain spark.sql with NO registerAll call, and the injected
+  * resolve in plain spark.sql with NO Engine.install call, and the injected
   * optimizer rule folds empty-url ends_with_source at plan time.
   *
   * Usage: sbt "runMain graft.ExtensionsDemo"
@@ -47,10 +47,9 @@ object ExtensionsDemo {
     val arow = a.head()
     println(s"AGGREGATES mg=${arow.getSeq[String](0).sorted.mkString(",")} " +
       s"cm=${arow.get(1)} tk=${arow.get(2)} uf=${arow.get(3)}")
-    // the injected PLANNER STRATEGY: plan an AsofJoin node built
-    // directly (Asof.node, NOT Asof.join — join would self-register the
-    // strategy and mask a broken injection); succeeding here proves
-    // injectPlannerStrategy wired AsofJoinStrategy into this session
+    // the injected PLANNER STRATEGY: this session was never installed,
+    // so planning an AsofJoin node here proves injectPlannerStrategy
+    // wired AsofJoinStrategy into it
     import org.apache.spark.sql.functions.{col, expr}
     val probes = spark.range(4).select(col("id").as("event_id"),
       (col("id") % 2).as("k"), expr("timestamp_seconds(id * 100)").as("ts"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Abs, And, Expression, ExpressionInfo, GreaterThan, GreaterThanOrEqual, If, IsNull, Length, LessThan, LessThanOrEqual, Levenshtein, Literal, Or, Subtract}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -78,89 +79,114 @@ object BandedLevenshtein extends Rule[LogicalPlan] {
   * are injected, no code changes required (the standard extension-
   * library mechanism, e.g. how Delta/Iceberg register).
   *
-  * Engine.session also wires [[SimplifyEndsWithSource]] into existing
-  * sessions through experimental.extraOptimizations (extensions only
-  * apply at session construction).
+  * Extensions only apply at session construction; [[Engine.install]]
+  * installs the same table into an existing session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def info(name: String, clazz: Class[_]): ExpressionInfo =
-    new ExpressionInfo(clazz.getCanonicalName, name)
-
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("slugify"),
-      info("slugify", classOf[Slugify]), Scalars.checked("slugify", 1)(es => Slugify(es.head))))
-    e.injectFunction((FunctionIdentifier("extract_iso_date"),
-      info("extract_iso_date", classOf[ExtractIsoDate]),
-      Scalars.checked("extract_iso_date", 1)(es => ExtractIsoDate(es.head))))
-    e.injectFunction((FunctionIdentifier("fmt_month_abbrev"),
-      info("fmt_month_abbrev", classOf[FmtMonthAbbrev]),
-      Scalars.checked("fmt_month_abbrev", 1)(es => FmtMonthAbbrev(es.head))))
-    e.injectFunction((FunctionIdentifier("html_escape"),
-      info("html_escape", classOf[HtmlEscape]), Scalars.checked("html_escape", 1)(es => HtmlEscape(es.head))))
-    e.injectFunction((FunctionIdentifier("clean_ws"),
-      info("clean_ws", classOf[CleanWs]), Scalars.checked("clean_ws", 1)(es => CleanWs(es.head))))
-    e.injectFunction((FunctionIdentifier("ends_with_source"),
-      info("ends_with_source", classOf[EndsWithSource]),
-      Scalars.checked("ends_with_source", 3)(es => EndsWithSource(es(0), es(1), es(2)))))
-    e.injectFunction((FunctionIdentifier("stable_hash64"),
-      info("stable_hash64", classOf[StableHash64]),
-      Scalars.checked("stable_hash64", 1)(es => StableHash64(es.head))))
-    e.injectFunction((FunctionIdentifier("min_gram_hash"),
-      info("min_gram_hash", classOf[MinGramHash]),
-      Scalars.checked("min_gram_hash", 1)(es => MinGramHash(es.head))))
-    e.injectFunction((FunctionIdentifier("min_rolling_hash"),
-      info("min_rolling_hash", classOf[MinRollingHash]),
-      Scalars.checked("min_rolling_hash", 1)(es => MinRollingHash(es.head))))
-    e.injectFunction((FunctionIdentifier("distinct_shingles3"),
-      info("distinct_shingles3", classOf[DistinctShingles3]),
-      Scalars.checked("distinct_shingles3", 1)(es => DistinctShingles3(es.head))))
-    e.injectFunction((FunctionIdentifier("shingles2"),
-      info("shingles2", classOf[Shingles2]),
-      Scalars.checked("shingles2", 1)(es => Shingles2(es.head))))
-    e.injectFunction((FunctionIdentifier("simhash60"),
-      info("simhash60", classOf[Simhash60]),
-      Scalars.checked("simhash60", 1)(es => Simhash60(es.head))))
-    e.injectFunction((FunctionIdentifier("minhash8"),
-      info("minhash8", classOf[Minhash8]),
-      Scalars.checked("minhash8", 1)(es => Minhash8(es.head))))
-    e.injectFunction((FunctionIdentifier("token_max_run"),
-      info("token_max_run", classOf[TokenMaxRun]),
-      Scalars.checked("token_max_run", 1)(es => TokenMaxRun(es.head))))
-    e.injectFunction((FunctionIdentifier("token_top_count"),
-      info("token_top_count", classOf[TokenTopCount]),
-      Scalars.checked("token_top_count", 1)(es => TokenTopCount(es.head))))
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", classOf[CosineSim]),
-      Scalars.checked("cosine_sim", 2)(es => CosineSim(es(0), es(1)))))
-    e.injectFunction((FunctionIdentifier("hyperplane_bucket64"),
-      info("hyperplane_bucket64", classOf[HyperplaneBucket64]),
-      Scalars.checked("hyperplane_bucket64", 1)(es => HyperplaneBucket64(es.head))))
-    // sketch/top-k aggregates — same SQL surface as Functions.registerAll
-    e.injectFunction((FunctionIdentifier("misra_gries"),
-      info("misra_gries", classOf[MisraGriesAgg]),
-      Scalars.checked("misra_gries", 2)(es =>
-        MisraGriesAgg(es(0), Scalars.sqlLitInt(es(1), "misra_gries k"))
-          .toAggregateExpression())))
-    e.injectFunction((FunctionIdentifier("count_min"),
-      info("count_min", classOf[CountMinAgg]),
-      Scalars.checked("count_min", 1)(es => CountMinAgg(es.head).toAggregateExpression())))
-    e.injectFunction((FunctionIdentifier("bounded_top_k"),
-      info("bounded_top_k", classOf[BoundedTopK]),
-      Scalars.checked("bounded_top_k", 2)(es =>
-        BoundedTopK(es(0), Scalars.sqlLitInt(es(1), "bounded_top_k k"))
-          .toAggregateExpression())))
-    e.injectFunction((FunctionIdentifier("union_find"),
-      info("union_find", classOf[UnionFindAgg]),
-      Scalars.checked("union_find", 2)(es => UnionFindAgg(es(0), es(1)).toAggregateExpression())))
-    e.injectOptimizerRule(_ => SimplifyEndsWithSource)
-    e.injectOptimizerRule(_ => BandedLevenshtein)
+    GraftExtensions.functions.foreach(f =>
+      e.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))
+    GraftExtensions.optimizerRules.foreach(r => e.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(st => e.injectPlannerStrategy(_ => st))
+  }
+}
+
+/** The engine's one table of SQL functions, optimizer rules and planner
+  * strategies. Read by [[GraftExtensions]] (injection at session
+  * construction) and by [[Engine.install]] (an existing session); nothing
+  * else registers engine functions or rules.
+  */
+object GraftExtensions {
+
+  /** One SQL function: its name, its DESCRIBE FUNCTION info and an
+    * arity-checked builder. Instances are built once, so re-installing
+    * the same entry is a no-op for the function registry.
+    */
+  final case class Fn(name: String, info: ExpressionInfo,
+      builder: Seq[Expression] => Expression)
+
+  private def fn(name: String, clazz: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression): Fn =
+    Fn(name, new ExpressionInfo(clazz.getCanonicalName, name), checked(name, arity)(build))
+
+  val functions: Seq[Fn] = Seq(
+    fn("slugify", classOf[Slugify], 1)(es => Slugify(es.head)),
+    fn("extract_iso_date", classOf[ExtractIsoDate], 1)(es => ExtractIsoDate(es.head)),
+    fn("fmt_month_abbrev", classOf[FmtMonthAbbrev], 1)(es => FmtMonthAbbrev(es.head)),
+    fn("html_escape", classOf[HtmlEscape], 1)(es => HtmlEscape(es.head)),
+    fn("clean_ws", classOf[CleanWs], 1)(es => CleanWs(es.head)),
+    fn("ends_with_source", classOf[EndsWithSource], 3)(es =>
+      EndsWithSource(es(0), es(1), es(2))),
+    fn("stable_hash64", classOf[StableHash64], 1)(es => StableHash64(es.head)),
+    fn("min_gram_hash", classOf[MinGramHash], 1)(es => MinGramHash(es.head)),
+    fn("min_rolling_hash", classOf[MinRollingHash], 1)(es => MinRollingHash(es.head)),
+    fn("distinct_shingles3", classOf[DistinctShingles3], 1)(es => DistinctShingles3(es.head)),
+    fn("shingles2", classOf[Shingles2], 1)(es => Shingles2(es.head)),
+    fn("simhash60", classOf[Simhash60], 1)(es => Simhash60(es.head)),
+    fn("minhash8", classOf[Minhash8], 1)(es => Minhash8(es.head)),
+    fn("token_max_run", classOf[TokenMaxRun], 1)(es => TokenMaxRun(es.head)),
+    fn("token_top_count", classOf[TokenTopCount], 1)(es => TokenTopCount(es.head)),
+    fn("cosine_sim", classOf[CosineSim], 2)(es => CosineSim(es(0), es(1))),
+    fn("hyperplane_bucket64", classOf[HyperplaneBucket64], 1)(es =>
+      HyperplaneBucket64(es.head)),
+    // the sketch/top-k AGGREGATES are SQL-callable too — a SQL user of
+    // the engine gets the same surface as the Column API. k arguments
+    // must be foldable integer literals (resolved at plan time).
+    fn("misra_gries", classOf[MisraGriesAgg], 2)(es =>
+      MisraGriesAgg(es(0), sqlLitInt(es(1), "misra_gries k")).toAggregateExpression()),
+    fn("count_min", classOf[CountMinAgg], 1)(es => CountMinAgg(es.head).toAggregateExpression()),
+    fn("bounded_top_k", classOf[BoundedTopK], 2)(es =>
+      BoundedTopK(es(0), sqlLitInt(es(1), "bounded_top_k k")).toAggregateExpression()),
+    fn("union_find", classOf[UnionFindAgg], 2)(es =>
+      UnionFindAgg(es(0), es(1)).toAggregateExpression()),
+    fn("kmv_sample", classOf[KmvSample], 2)(es =>
+      KmvSample(es(0), sqlLitInt(es(1), "kmv_sample k")).toAggregateExpression()))
+
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(
+    SimplifyEndsWithSource,
+    BandedLevenshtein,
     // structural rewrite: interval joins -> time-bucketed layout
     // (opt-in via spark.graft.bucketIntervalJoin.enabled; see q183/q184)
-    e.injectOptimizerRule(_ => graft.plans.BucketIntervalJoin)
-    e.injectOptimizerRule(_ => graft.plans.MvRewrite)
+    graft.plans.BucketIntervalJoin,
+    graft.plans.MvRewrite,
     // probe-side predicate pushdown through the native as-of join
-    e.injectOptimizerRule(_ => graft.plans.AsofPushDown)
-    // whole-operator extension: the native as-of join's planner strategy
-    e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    graft.plans.AsofPushDown)
+
+  /** Whole-operator extension: the native as-of join's planner strategy. */
+  val strategies: Seq[SparkStrategy] = Seq(graft.plans.AsofJoinStrategy)
+
+  /** Arity guard for SQL-registry builders: a wrong-argument-count call
+    * (`SELECT misra_gries(v)`) must fail at plan time with a message
+    * naming the function and the expected arity, not leak a raw
+    * IndexOutOfBoundsException from `es(1)`.
+    */
+  private def checked(name: String, n: Int)(
+      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
+    es => {
+      if (es.length != n) throw new IllegalArgumentException(
+        s"Invalid number of arguments for function $name. Expected: $n; Found: ${es.length}")
+      build(es)
+    }
+
+  /** Resolve a foldable integer literal argument at registration time.
+    * Long values outside Int range are an error, not a silent toInt
+    * truncation (misra_gries(v, 4294967297) must not become k=1).
+    */
+  private def sqlLitInt(e: Expression, what: String): Int = {
+    def narrow(l: Long): Int =
+      if (l >= Int.MinValue && l <= Int.MaxValue) l.toInt
+      else throw new IllegalArgumentException(
+        s"$what must fit in a 32-bit integer, got $l")
+    e match {
+      case Literal(v: Int, _) => v
+      case Literal(v: Long, _) => narrow(v)
+      case other if other.foldable =>
+        other.eval(null) match {
+          case i: Int => i
+          case l: Long => narrow(l)
+          case v => throw new IllegalArgumentException(s"$what must be an integer literal, got $v")
+        }
+      case _ => throw new IllegalArgumentException(s"$what must be a foldable integer literal")
+    }
   }
 }

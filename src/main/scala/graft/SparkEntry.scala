@@ -16,13 +16,16 @@ object SparkEntry {
     * bundled frozen corpus (rows > 0 smoke-checked by the driver).
     */
   def entry(spark: SparkSession): DataFrame = {
-    Functions.registerAll(spark)
+    Engine.install(spark)
     operators.RumorPipeline.q60RumorPipeline(spark, "/root/testdata/sf0.001")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * installs the engine ([[Engine.install]]) into the session it is
+    * given, so the contract holds on a session the engine never built.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++ operators.LlmOps.queries ++
+    (operators.Relational.queries ++ operators.LlmOps.queries ++
       operators.Multimodal.queries ++ operators.RumorPipeline.queries ++
       operators.PipelineOps.queries ++ operators.GraphOps.queries ++
       operators.AnalyticsOps.queries ++ operators.JoinPlanner.queries ++
@@ -30,7 +33,10 @@ object SparkEntry {
       sources.TrainingShards.queries ++ sources.JsonlCorpus.queries ++
       sources.StandingIndex.queries ++ sources.SimIndex.queries ++
       sources.BucketStore.queries ++ sources.ClusteredStore.queries ++
-      sources.MatView.queries ++ sources.SnapshotStore.queries
+      sources.MatView.queries ++ sources.SnapshotStore.queries)
+      .map { case (name, q) =>
+        name -> ((s: SparkSession, dir: String) => { Engine.install(s); q(s, dir) })
+      }
 
   /** DuckDB-equivalent ANSI SQL per query key (same column names). */
   def oracleSql: Map[String, String] =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Warm-run probe sidecar to the cold bench (VERDICT r6 item 4, r7
   * item 1).
   *
@@ -98,18 +96,7 @@ object WarmProbe {
       benches.dropRight(1).lastOption.getOrElse("BENCH_r06.json"))
     val currBench = sys.env.getOrElse("SPARK_GRAFT_BENCH_CURR",
       benches.lastOption.getOrElse("BENCH_r07.json"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Functions.registerAll(spark)
+    val spark = Engine.session(s"local[$cpus]")
 
     val prev = parseTimes(prevBench)
     val curr = parseTimes(currBench)

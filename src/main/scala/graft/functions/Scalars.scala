@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -258,7 +258,9 @@ case class EndsWithSource(first: Expression, second: Expression, third: Expressi
   override def prettyName: String = "ends_with_source"
 }
 
-/** Column-API + SQL-registry surface for the custom scalars. */
+/** Column-API surface for the custom scalars (the SQL names live in
+  * [[graft.GraftExtensions.functions]]).
+  */
 object Scalars {
   private def col(e: Expression): Column = ColumnBridge.column(e)
   private def ex(c: Column): Expression = ColumnBridge.expression(c)
@@ -281,77 +283,4 @@ object Scalars {
   def token_top_count(c: Column): Column = col(TokenTopCount(ex(c)))
   def cosine_sim(a: Column, b: Column): Column = col(CosineSim(ex(a), ex(b)))
   def hyperplane_bucket64(c: Column): Column = col(HyperplaneBucket64(ex(c)))
-
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("slugify", checked("slugify", 1)(es => Slugify(es.head)), "built-in")
-    r.createOrReplaceTempFunction("extract_iso_date", checked("extract_iso_date", 1)(es => ExtractIsoDate(es.head)), "built-in")
-    r.createOrReplaceTempFunction("fmt_month_abbrev", checked("fmt_month_abbrev", 1)(es => FmtMonthAbbrev(es.head)), "built-in")
-    r.createOrReplaceTempFunction("html_escape", checked("html_escape", 1)(es => HtmlEscape(es.head)), "built-in")
-    r.createOrReplaceTempFunction("clean_ws", checked("clean_ws", 1)(es => CleanWs(es.head)), "built-in")
-    r.createOrReplaceTempFunction("ends_with_source",
-      checked("ends_with_source", 3)(es => EndsWithSource(es(0), es(1), es(2))), "built-in")
-    r.createOrReplaceTempFunction("stable_hash64", checked("stable_hash64", 1)(es => StableHash64(es.head)), "built-in")
-    r.createOrReplaceTempFunction("min_gram_hash", checked("min_gram_hash", 1)(es => MinGramHash(es.head)), "built-in")
-    r.createOrReplaceTempFunction("min_rolling_hash", checked("min_rolling_hash", 1)(es => MinRollingHash(es.head)), "built-in")
-    r.createOrReplaceTempFunction("distinct_shingles3", checked("distinct_shingles3", 1)(es => DistinctShingles3(es.head)), "built-in")
-    r.createOrReplaceTempFunction("shingles2", checked("shingles2", 1)(es => Shingles2(es.head)), "built-in")
-    r.createOrReplaceTempFunction("simhash60", checked("simhash60", 1)(es => Simhash60(es.head)), "built-in")
-    r.createOrReplaceTempFunction("minhash8", checked("minhash8", 1)(es => Minhash8(es.head)), "built-in")
-    r.createOrReplaceTempFunction("token_max_run", checked("token_max_run", 1)(es => TokenMaxRun(es.head)), "built-in")
-    r.createOrReplaceTempFunction("token_top_count", checked("token_top_count", 1)(es => TokenTopCount(es.head)), "built-in")
-    r.createOrReplaceTempFunction("cosine_sim", checked("cosine_sim", 2)(es => CosineSim(es(0), es(1))), "built-in")
-    r.createOrReplaceTempFunction("hyperplane_bucket64", checked("hyperplane_bucket64", 1)(es => HyperplaneBucket64(es.head)), "built-in")
-    // the sketch/top-k AGGREGATES are SQL-callable too — a SQL user of
-    // the engine gets the same surface as the Column API. k arguments
-    // must be foldable integer literals (resolved at plan time).
-    r.createOrReplaceTempFunction("misra_gries",
-      checked("misra_gries", 2)(es => MisraGriesAgg(es(0), sqlLitInt(es(1), "misra_gries k"))
-        .toAggregateExpression()), "built-in")
-    r.createOrReplaceTempFunction("count_min",
-      checked("count_min", 1)(es => CountMinAgg(es.head).toAggregateExpression()), "built-in")
-    r.createOrReplaceTempFunction("bounded_top_k",
-      checked("bounded_top_k", 2)(es => BoundedTopK(es(0), sqlLitInt(es(1), "bounded_top_k k"))
-        .toAggregateExpression()), "built-in")
-    r.createOrReplaceTempFunction("union_find",
-      checked("union_find", 2)(es => UnionFindAgg(es(0), es(1)).toAggregateExpression()), "built-in")
-    r.createOrReplaceTempFunction("kmv_sample",
-      checked("kmv_sample", 2)(es => KmvSample(es(0), sqlLitInt(es(1), "kmv_sample k"))
-        .toAggregateExpression()), "built-in")
-  }
-
-  /** Arity guard for SQL-registry builders: a wrong-argument-count call
-    * (`SELECT misra_gries(v)`) must fail at plan time with a message
-    * naming the function and the expected arity, not leak a raw
-    * IndexOutOfBoundsException from `es(1)`.
-    */
-  private[graft] def checked(name: String, n: Int)(
-      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    es => {
-      if (es.length != n) throw new IllegalArgumentException(
-        s"Invalid number of arguments for function $name. Expected: $n; Found: ${es.length}")
-      build(es)
-    }
-
-  /** Resolve a foldable integer literal argument at registration time.
-    * Long values outside Int range are an error, not a silent toInt
-    * truncation (misra_gries(v, 4294967297) must not become k=1).
-    */
-  private[graft] def sqlLitInt(e: Expression, what: String): Int = {
-    def narrow(l: Long): Int =
-      if (l >= Int.MinValue && l <= Int.MaxValue) l.toInt
-      else throw new IllegalArgumentException(
-        s"$what must fit in a 32-bit integer, got $l")
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => narrow(v)
-      case other if other.foldable =>
-        other.eval(null) match {
-          case i: Int => i
-          case l: Long => narrow(l)
-          case v => throw new IllegalArgumentException(s"$what must be an integer literal, got $v")
-        }
-      case _ => throw new IllegalArgumentException(s"$what must be a foldable integer literal")
-    }
-  }
 }

@@ -152,7 +152,6 @@ object AnalyticsOps {
     * the corpus. Single map-side-combinable aggregation.
     */
   val q125ShardManifest: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     t(s, dir, "documents")
       .withColumn("shard", expr(s"stable_hash64(cast(doc_id as string)) % $NumShards"))
       .withColumn("rh", expr(s"stable_hash64(text) % $ChecksumMod"))
@@ -179,7 +178,6 @@ object AnalyticsOps {
     * the only real shuffle.
     */
   val q126AbTest: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val u = t(s, dir, "events")
       .groupBy(col("user_id"))
       .agg(max((col("event_type") === "purchase").cast("int")).as("conv"))

@@ -95,7 +95,6 @@ object IndexOps {
     * existence.
     */
   val q123CmsSketch: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     import graft.functions.CountMinAgg.{A, B, D, P, W}
     val items = t(s, dir, "lineitem")
       .select(col("l_partkey").cast("string").as("item"))
@@ -211,7 +210,6 @@ object IndexOps {
         expr(s"(dayofmonth($dayCol) - 1) div 7")))
 
   val q153SketchRollup: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val twoP60 = 1152921504606846976.0 // 2^60
     val dayUsers = t(s, dir, "events")
       .select(to_date(col("ts")).as("day"), col("user_id"))
@@ -446,7 +444,6 @@ object IndexOps {
     * algebra is identical.
     */
   val q151PhraseSearch: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val Seq(w1, w2, w3) = PhraseTerms
     val pos = t(s, dir, "documents")
       .select(col("doc_id"), posexplode(expr(LlmOps.toksS)))
@@ -497,7 +494,6 @@ object IndexOps {
     * skew-join splits any hot gram's partition.
     */
   val q98FuzzyJoin: Q = (s, dir) => {
-    graft.Functions.registerAll(s) // wires the BandedLevenshtein rule
     // names shorter than 3 chars have no trigrams (and no valid typo
     // position): excluded on BOTH sides, matching the oracle's empty
     // range(1, len-1) — without the guard Spark's sequence(1, len-2)
@@ -629,7 +625,6 @@ object IndexOps {
   private val kmvKeyCache = new graft.SessionCache
 
   val q119KmvSketch: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val li = t(s, dir, "lineitem")
     def keys(c: String): DataFrame =
       li.select(col(c).cast("string").as("key")).distinct()
@@ -711,7 +706,6 @@ object IndexOps {
     * float ever enters the sample or the hash.
     */
   val q146KmvQuantiles: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val li = t(s, dir, "lineitem")
     val dv = li
       .filter(col("l_extendedprice").isNotNull)
@@ -826,7 +820,6 @@ object IndexOps {
     * jobs don't re-run the side aggregations.
     */
   val q169JoinCardinality: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val k = JoinEstK
     def keyed(df: DataFrame, c: String): DataFrame = df.select(
       expr(LlmOps.hashS(s"concat('jk:', CAST($c AS STRING))")).as("h"))
@@ -928,7 +921,6 @@ object IndexOps {
     * order numerically.
     */
   val q176ColumnStats: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val k = ColStatsK
     val parts = ColStatsCols.map { case (tbl, c) =>
       val h = expr(LlmOps.hashS(s"concat('cs:$tbl.$c:', CAST($c AS STRING))"))
@@ -975,7 +967,6 @@ object IndexOps {
     * merge, which is the point of sketching.
     */
   val q177StatsMaintenance: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val k = ColStatsK
     val docs = t(s, dir, "documents").withColumn("is_delta",
       pmod(expr(LlmOps.hashS("concat('st:', CAST(doc_id AS STRING))")),

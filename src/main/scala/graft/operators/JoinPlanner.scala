@@ -164,7 +164,6 @@ object JoinPlanner {
     */
   private def statsRow(s: SparkSession, dir: String, rel: String,
       key: String): DataFrame = {
-    graft.Functions.registerAll(s)
     val k = PlannerK
     // null keys never match an equi join, so the ANALYZE profiles
     // non-null keys only — ONE convention across q179/q181/q186 (and
@@ -378,7 +377,6 @@ object JoinPlanner {
 
   private[graft] def sketchStatsDf(s: SparkSession, dir: String): DataFrame =
     sketchStatsCache.getOrElseUpdate(s, dir) {
-      graft.Functions.registerAll(s)
       val stored = ensureStats(s, dir)
       val parts = statsKeysByTable.map { case (rel, keys) =>
         val (cms, estOf) = cmsRow(s, dir, rel, keys)
@@ -484,7 +482,6 @@ object JoinPlanner {
     * would emit only the sketch path.
     */
   val q181SketchAnalyze: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     // the exact baseline (n_rows, n_keys, max_cnt, KMV ndv) comes from
     // the STANDING STATS ARTIFACT — q181's point is the sketch-vs-
     // truth audit, and the truth side is exactly what the ANALYZE

@@ -94,12 +94,8 @@ object LlmOps {
   private def stopCountS(list: Seq[String]): String =
     s"size(filter(tok, x -> array_contains(${arr(list)}, x)))"
 
-  /** documents with tok column (tokenization is the one shared scan).
-    * Registers the engine's custom functions so stable_hash64 resolves
-    * inside expr() lambdas under any session (idempotent).
-    */
+  /** documents with tok column (tokenization is the one shared scan). */
   private def docsTok(s: SparkSession, dir: String): DataFrame = {
-    graft.Functions.registerAll(s)
     t(s, dir, "documents").withColumn("tok", expr(toksS))
   }
 
@@ -607,7 +603,6 @@ object LlmOps {
     * search (SURVEY §7 M6).
     */
   val q52CosineTopkAgg: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val e = t(s, dir, "embeddings")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -754,7 +749,6 @@ object LlmOps {
 
   private[graft] def ensureIvfArtifact(s: SparkSession, dir: String): String = {
     import graft.sources.StandingIndex
-    graft.Functions.registerAll(s)
     val root = StandingIndex.artifactRoot(dir, "ivf")
     val sig = withLayout(StandingIndex.tableSig(s, dir, "embeddings",
       Seq("vec_id", "embedding")), IvfLayout)
@@ -821,7 +815,6 @@ object LlmOps {
   }
 
   def annIvf(s: SparkSession, dir: String, nprobeN: Int): DataFrame = {
-    graft.Functions.registerAll(s)
     val e = t(s, dir, "embeddings")
     val cents = ivfCentroids(s, dir)
     val corpus = ivfAssign(e, cents, "vec_id", 1)
@@ -868,7 +861,6 @@ object LlmOps {
     * nprobe/K of the corpus per query.
     */
   val q159AnnRecall: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val e = t(s, dir, "embeddings")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -938,7 +930,6 @@ object LlmOps {
     */
   private[graft] def ensurePqArtifact(s: SparkSession, dir: String): String = {
     import graft.sources.StandingIndex
-    graft.Functions.registerAll(s)
     val root = StandingIndex.artifactRoot(dir, "pq")
     val sig = withLayout(StandingIndex.tableSig(s, dir, "embeddings",
       Seq("vec_id", "embedding")), PqLayout)
@@ -980,7 +971,6 @@ object LlmOps {
       .drop("embedding")
 
   val q161PqAdc: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val e = t(s, dir, "embeddings")
     val root = ensurePqArtifact(s, dir)
     val cents1 = s.read.parquet(s"$root/codebooks")
@@ -1048,7 +1038,6 @@ object LlmOps {
     */
   private[graft] def ensurePqrArtifact(s: SparkSession, dir: String): String = {
     import graft.sources.StandingIndex
-    graft.Functions.registerAll(s)
     val root = StandingIndex.artifactRoot(dir, "pqr")
     val sig = withLayout(StandingIndex.tableSig(s, dir, "embeddings",
       Seq("vec_id", "embedding")), PqrLayout)
@@ -1092,7 +1081,6 @@ object LlmOps {
   }
 
   val q162IvfPq: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val e = t(s, dir, "embeddings")
     val cents = ivfCentroids(s, dir)
     val root = ensurePqrArtifact(s, dir)
@@ -1185,7 +1173,6 @@ object LlmOps {
     * (StreamingVecIndexSpec), so both index the SAME sides.
     */
   private[graft] def vecCorpusSplit(s: SparkSession, dir: String): DataFrame = {
-    graft.Functions.registerAll(s)
     t(s, dir, "embeddings")
       .withColumn("is_delta",
         pmod(expr(hashS(s"concat('$VecDeltaSalt', CAST(vec_id AS STRING))")),
@@ -1217,7 +1204,6 @@ object LlmOps {
     * twin's equality check is against the exact query the oracle pins.
     */
   private[graft] def vecCellReport(asg: DataFrame): DataFrame = {
-    graft.Functions.registerAll(asg.sparkSession)
     asg
       .withColumn("ah", pmod(expr(hashS(
         "concat('va:', CAST(vec_id AS STRING), '|', CAST(cent_id AS STRING))")),
@@ -1258,7 +1244,6 @@ object LlmOps {
     * signature fold from raw rows.
     */
   val q187PqDelta: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val e = vecCorpusSplit(s, dir)
     pqDeltaReport(
       e.filter(!col("is_delta")).select(col("vec_id"), col("embedding")),
@@ -1363,7 +1348,6 @@ object LlmOps {
     * ever all-pairs. The centroid table is K rows and broadcasts.
     */
   val q96SemDedup: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val e = t(s, dir, "embeddings")
     val corpus = ivfAssign(e, ivfCentroids(s, dir), "vec_id", 1)
       .select(col("vec_id"), col("embedding"), col("cent_id"))
@@ -1453,7 +1437,6 @@ object LlmOps {
     * parallelism ∝ strata; a single global sort never happens.
     */
   val q105WeightedSample: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val scored = qualityTable(s, dir)
       .withColumn("u",
         (expr(s"${hashS("concat('es:', doc_id)")} % 1000000") + 0.5) / 1000000.0)
@@ -1476,7 +1459,6 @@ object LlmOps {
     * the presentation sort.
     */
   val q58StratifiedSample: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val rateExpr = SampleRates.foldRight(lit(0): Column) { case ((l, r), acc) =>
       when(col("lang") === l, lit(r)).otherwise(acc)
     }
@@ -2581,7 +2563,6 @@ object LlmOps {
     * index even though document-CDC calls it changed).
     */
   val q137IndexMaintenance: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val docs = t(s, dir, "documents")
     def banded(src: DataFrame): DataFrame = src
       .withColumn("tok", expr(toksS))

@@ -114,7 +114,6 @@ object Multimodal {
     * with q171's batch packer (which additionally needs `mime`).
     */
   private def frameRows(s: SparkSession, dir: String): DataFrame = {
-    graft.Functions.registerAll(s)
     extractFeatures(mediaTable(s, dir)).toDF()
       .select(col("doc_id"), col("mime"), col("width"), col("height"),
         posexplode(expr("sequence(1, n_frames)")).as(Seq("pos", "frame_no")))

@@ -54,7 +54,6 @@ object PipelineOps {
     * carry revised text in the new snapshot ("changed").
     */
   val q87SnapshotDelta: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val docs = t(s, dir, "documents")
     val old = docs.filter(col("doc_id") % 13 =!= 5)
       .select(col("doc_id"), expr("stable_hash64(text)").as("old_hash"))
@@ -100,7 +99,6 @@ object PipelineOps {
     * MERGE (StreamingMergeSpec drives [[applyMergeBatch]] over it).
     */
   private[graft] def cdcOldSnapshot(s: SparkSession, dir: String): DataFrame = {
-    graft.Functions.registerAll(s)
     t(s, dir, "documents").filter(col("doc_id") % 13 =!= 5)
       .select(col("doc_id"), lit("kept").as("op_applied"),
         expr("stable_hash64(text)").as("text_hash"))
@@ -112,7 +110,6 @@ object PipelineOps {
     * instead of each replaying the manifest full-outer join.
     */
   private[graft] def cdcDeltaFeed(s: SparkSession, dir: String): DataFrame = {
-    graft.Functions.registerAll(s)
     val docs = t(s, dir, "documents")
     val old = docs.filter(col("doc_id") % 13 =!= 5)
       .select(col("doc_id"), expr("stable_hash64(text)").as("old_hash"))
@@ -179,7 +176,6 @@ object PipelineOps {
     * is one WholeStageCodegen span over the parquet scan).
     */
   val q88DatasetSplit: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     t(s, dir, "documents")
       .withColumn("h", expr("stable_hash64(concat('split:', doc_id)) % 100"))
       .select(col("doc_id"),
@@ -236,7 +232,6 @@ object PipelineOps {
     * score. quantile = P(score' <= mine) within source, inclusive.
     */
   val q90QuantileNorm: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     // cached quality manifest: this query references it twice (bucket
     // counts + the join back), so without the cache the regex/stopword
     // scoring scan would run twice
@@ -543,7 +538,6 @@ object PipelineOps {
     * and every aggregation is map-side combinable on `lang`.
     */
   val q106IncrementalAgg: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val docs = t(s, dir, "documents")
     def ntok(c: Column): Column =
       size(split(trim(lower(c)), "\\s+")).cast("long")
@@ -610,7 +604,6 @@ object PipelineOps {
     * joins, no windows.
     */
   val q107ZoneMap: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     t(s, dir, "documents")
       .select((col("doc_id") / ZoneDocs).cast("long").as("zone"),
         expr(s"cast(size(split(trim(lower(text)), '\\\\s+')) as bigint)").as("nt"),
@@ -775,7 +768,6 @@ object PipelineOps {
     * count-aggregation keyed by the p partition ids.
     */
   val q173RangePlanner: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     rangePlan(t(s, dir, "orders").select(
       col("o_orderkey"),
       expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("v")))
@@ -789,7 +781,6 @@ object PipelineOps {
     */
   private[graft] def rangePlan(rows: DataFrame): DataFrame = {
     val s = rows.sparkSession
-    graft.Functions.registerAll(s)
     val p = RangeParts
     val k = RangeSampleK
     val keyed = rows.select(
@@ -1055,7 +1046,6 @@ object PipelineOps {
     * at real scale) is close enough to stop running it.
     */
   val q135SampledQuantiles: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     // integer-only sample key: a double rendered into a concat would
     // hostage the hash to each engine's float formatting
     val base = t(s, dir, "lineitem").select(
@@ -1129,7 +1119,6 @@ object PipelineOps {
     * replays the hash threshold exactly.
     */
   val q214CorpusMixture: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val docs = t(s, dir, "documents")
       .withColumn("rate_bp", expr(rateBpSql("source")))
       .withColumn("keep",
@@ -1156,7 +1145,6 @@ object PipelineOps {
     * realized multiplier.
     */
   val q215CorpusUpsample: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val docs = t(s, dir, "documents")
       .withColumn("frac_bp", expr(rateBpSql("source")))
       .withColumn("extra",

@@ -423,7 +423,6 @@ object StatsOps {
     * with row count except the first map-side count.
     */
   val q172BootstrapCi: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val base = t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars").cast("long").as("v"))
     val reps = base

@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (c)): a resolved [[AsofJoin]] logical node, planned by
   * [[AsofJoinStrategy]] into [[AsofJoinExec]], registered through
   * `SparkSessionExtensions.injectPlannerStrategy` (GraftExtensions) and
-  * `spark.experimental.extraStrategies` (Engine.session).
+  * `spark.experimental.extraStrategies` (Engine.install).
   *
   * Semantics (reference behavior per fetchRumors.js has no as-of join;
   * this is the engine-inventory operator behind q33, SURVEY §2B joins):
@@ -342,9 +342,8 @@ case class AsofJoinExec(
   */
 object Asof {
   /** The resolved logical node alone — used by [[join]], and directly by
-    * callers that want the node planned through a session's OWN injected
-    * strategy (ExtensionsDemo proves the `spark.sql.extensions` path by
-    * planning this without [[join]]'s self-registration fallback).
+    * ExtensionsDemo, which plans it through the strategy that
+    * `spark.sql.extensions` injected.
     */
   def node(left: DataFrame, right: DataFrame, keys: Seq[(String, String)],
       leftTime: String, rightTime: String,
@@ -371,19 +370,7 @@ object Asof {
       leftTime: String, rightTime: String,
       inner: Boolean = false, tolerance: Option[Long] = None,
       forward: Boolean = false, nearest: Boolean = false): DataFrame = {
-    val spark = left.sparkSession
-    // self-register on the session actually planning this frame:
-    // extensions/Engine.session wire the strategy at construction, but
-    // the operator must also work in a bare session (the driver's
-    // Verify/Bench mains build their own) — planning an AsofJoin node
-    // with no strategy for it is an internal planner error. The
-    // pushdown rule rides along so a bare session gets the same plans
-    // as an extensions-configured one. Registration goes through the
-    // synchronized Engine helpers (ADVICE r12: the raw check-then-act
-    // could drop a registration under concurrent planning).
-    graft.Engine.registerStrategy(spark, AsofJoinStrategy)
-    graft.Engine.registerOptimization(spark, AsofPushDown)
-    org.apache.spark.sql.graft.Bridge.ofRows(spark,
+    org.apache.spark.sql.graft.Bridge.ofRows(left.sparkSession,
       node(left, right, keys, leftTime, rightTime, inner, tolerance, forward,
         nearest))
   }

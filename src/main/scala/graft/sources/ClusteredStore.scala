@@ -66,7 +66,6 @@ object ClusteredStore {
     * partitionings, unlike a reservoir). One row, one `bl` array.
     */
   private[graft] def boundariesOf(docs: DataFrame): DataFrame = {
-    graft.Functions.registerAll(docs.sparkSession)
     val p = ZoneParts
     val k = SampleK
     docs
@@ -173,7 +172,6 @@ object ClusteredStore {
     * residue (pure function of doc_id, the q160/q167/q187 convention).
     */
   private[graft] def docsSplit(s: SparkSession, dir: String): DataFrame = {
-    graft.Functions.registerAll(s)
     graft.Engine.table(s, dir, "documents").withColumn("is_delta",
       expr("stable_hash64(concat('cd:', CAST(doc_id AS STRING))) % 10 = 0"))
   }

@@ -125,7 +125,6 @@ object JsonlCorpus {
     * lossless on good lines and complete on bad ones.
     */
   val q108JsonlIngest: (SparkSession, String) => DataFrame = (s, dir) => {
-    graft.Functions.registerAll(s)
     val out = jsonlOutDir(dir)
     writeJsonl(graft.Engine.table(s, dir, "documents"), out)
     val parsed = readJsonl(s, out)

@@ -217,10 +217,9 @@ object MatView {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
     }.orderBy(col("lang"))
 
-  /** Shared scoped-conf + self-registration wrapper for the MV
-    * queries: rule registered on bare sessions, flags restored however
-    * the body exits, result materialized UNDER the flags so they never
-    * leak into other queries' optimizations. `mustScan`/`mustNotScan`
+  /** Shared scoped-conf wrapper for the MV queries: flags restored
+    * however the body exits, result materialized UNDER the flags so they
+    * never leak into other queries' optimizations. `mustScan`/`mustNotScan`
     * are the self-check tokens (the rewrite FIRED: plan reads the
     * view, not the corpus).
     */
@@ -228,7 +227,6 @@ object MatView {
       mustScan: String, mustNotScan: String)(
       body: => DataFrame): DataFrame = {
     import graft.plans.MvRewrite
-    graft.Engine.registerOptimization(s, MvRewrite)
     ensure
     val prevEnabled = s.conf.getOption(MvRewrite.EnabledKey)
     s.conf.set(MvRewrite.EnabledKey, "true")

@@ -3,16 +3,15 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.ScalarOps
 
-/** Paginated tag-page source (ref fetchRumors.js:126-151): for each slug
-  * crawls pages 1..maxPages from a corpus, stopping a tag's pagination at
-  * the first fetch error (missing page) with items-so-far kept — the
-  * reference's permissive error semantics (fetchRumors.js:133-137).
+/** Paginated tag-page source (ref fetchRumors.js:126-151): page
+  * providers, crawl URLs and the page parse. [[RumorPagesSource]] crawls
+  * pages 1..MaxPages per slug, stopping a tag's pagination at the first
+  * fetch error (missing page) with items-so-far kept — the reference's
+  * permissive error semantics (fetchRumors.js:133-137).
   *
   * The corpus stands in for the HTTP origin (zero-egress environment):
   * a [[PageProvider]] is the fetchText boundary. Scale path: this is
@@ -100,25 +99,6 @@ object RumorSource {
       slug: String, subject_idx: Int, page_no: Int, doc_pos: Int,
       tag: String, text: String, iso_date: String,
       last_href: String, last_text: String, para_html: String)
-
-  /** Crawl page documents for the given slugs (sequential per tag, as the
-    * reference is; tags themselves could crawl in parallel — the
-    * reference is fully sequential, fetchRumors.js:185).
-    */
-  def crawlPages(provider: PageProvider, slugs: Seq[String]): Seq[PageDoc] = {
-    val out = ArrayBuffer.empty[PageDoc]
-    for ((slug, idx) <- slugs.zipWithIndex) {
-      var page = 1
-      var stopped = false
-      while (!stopped && page <= MaxPages) {
-        provider.fetch(slug, page) match {
-          case Some(html) => out += PageDoc(slug, idx, page, html); page += 1
-          case None => stopped = true // fetch error = end of data for tag
-        }
-      }
-    }
-    out.toSeq
-  }
 
   /** Parse one page into element rows (the JSDOM walk of
     * fetchRumors.js:89-117, relationalized; document order carried as

@@ -87,7 +87,6 @@ object SimIndex {
     * hash split: residue 1 of [[LlmOps.DeltaSplitMod]] is the delta).
     */
   private def sideDocs(s: SparkSession, dir: String, delta: Boolean): DataFrame = {
-    graft.Functions.registerAll(s)
     val cond = pmod(expr(LlmOps.hashS("CAST(doc_id AS STRING)")),
       lit(LlmOps.DeltaSplitMod)) === 1
     Engine.table(s, dir, "documents")
@@ -169,7 +168,6 @@ object SimIndex {
     build(s, dir)
     builtCache.put(s, dir, s.emptyDataFrame)
     val root = indexRoot(dir)
-    graft.Functions.registerAll(s)
     val nd = s.read.parquet(s"$root/stats")
     val dfT = s.read.parquet(s"$root/df")
     val pfx = s.read.parquet(s"$root/prefix")

@@ -104,7 +104,6 @@ object StandingIndex {
     * the format-free equivalent the plain-parquet fixtures support.
     */
   private[graft] def corpusSig(s: SparkSession, dir: String): (Long, Long) = {
-    graft.Functions.registerAll(s)
     val r = Engine.table(s, dir, "documents")
       .agg(count(lit(1)).cast("long").as("n"),
         coalesce(sum(pmod(expr(LlmOps.hashS(
@@ -196,7 +195,6 @@ object StandingIndex {
     * the artifact.
     */
   private def build(s: SparkSession, dir: String): DataFrame = {
-    graft.Functions.registerAll(s)
     val root = indexRoot(dir)
     val sig = corpusSig(s, dir)
     // ONE artifact write path: the one-shot build IS a single-segment
@@ -227,7 +225,6 @@ object StandingIndex {
     * are read).
     */
   private def bucketsOf(s: SparkSession, terms: Seq[String]): Seq[Long] = {
-    graft.Functions.registerAll(s)
     val row = s.sql("SELECT " + terms.zipWithIndex.map { case (t, i) =>
       s"pmod(stable_hash64('idx:$t'), $NumIndexBuckets) AS b$i"
     }.mkString(", ")).first()
@@ -394,7 +391,6 @@ object StandingIndex {
     * streaming maintenance twin (StreamingIndexSpec).
     */
   private[graft] def writeSegment(d: DataFrame, root: String, mode: String): Unit = {
-    graft.Functions.registerAll(d.sparkSession)
     postingsOf(d)
       .repartition(col("pbucket"))
       // pbucket leads for the same writer-required-ordering reason as
@@ -443,7 +439,6 @@ object StandingIndex {
     // sessions the meta row validates reuse like `ensure` (the
     // two-segment artifact is equally a pure function of the corpus)
     incCache.getOrElseUpdate(s, dir) {
-      graft.Functions.registerAll(s)
       val sig = corpusSig(s, dir)
       if (!metaFresh(s, root, sig)) {
         val docs = Engine.table(s, dir, "documents")

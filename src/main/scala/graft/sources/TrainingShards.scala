@@ -48,7 +48,6 @@ object TrainingShards {
 
   /** Deterministic, content-derived shard bucket. */
   def withBucket(df: DataFrame): DataFrame = {
-    graft.Functions.registerAll(df.sparkSession)
     df.withColumn("bucket", expr(
       s"stable_hash64(concat('shard:', doc_id)) % $NumBuckets"))
   }

@@ -66,7 +66,6 @@ class CdcOpsSpec extends AnyFunSuite {
     assert(out(14L)._1 == "updated")
     assert(out(5L)._1 == "inserted")
     // hashes match the direct rebuild of the new snapshot
-    graft.Functions.registerAll(spark)
     val direct = Engine.table(spark, dir, "documents")
       .filter(col("doc_id") % 11 =!= 7)
       .withColumn("t", when(col("doc_id") % 7 === 0,

@@ -80,7 +80,6 @@ class DedupSketchSpec extends AnyFunSuite {
   // ---- kmv_sample aggregate + q146 ----
 
   test("kmv_sample equals the window-rank bottom-k definition (the oracle's form)") {
-    Functions.registerAll(spark)
     import spark.implicits._
     val vals = (1L to 500L)
     vals.toDF("v").createOrReplaceTempView("ks_vals")
@@ -96,7 +95,6 @@ class DedupSketchSpec extends AnyFunSuite {
   }
 
   test("kmv_sample is insensitive to duplication and to partitioning (merge order)") {
-    Functions.registerAll(spark)
     import spark.implicits._
     val base = (1L to 300L).toDF("v")
     def sample(df: DataFrame): Seq[Long] =
@@ -111,7 +109,6 @@ class DedupSketchSpec extends AnyFunSuite {
   }
 
   test("kmv_sample rejects wrong arity and non-struct input at plan time") {
-    Functions.registerAll(spark)
     val e1 = intercept[Exception](spark.sql("SELECT kmv_sample(1)").collect())
     assert(e1.getMessage.contains("kmv_sample"))
     val e2 = intercept[Exception](

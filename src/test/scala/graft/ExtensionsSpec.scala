@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, SimpleFunctionRegistry}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -68,15 +72,52 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions installs into a fresh extensions container") {
-    // full end-to-end (fresh session via spark.sql.extensions config) is
-    // driven by graft.ExtensionsDemo in a separate JVM — a shared test
-    // JVM can't construct a second SparkContext
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext) // must register without throwing
   }
 
+  private def resolves(s: SparkSession, name: String): Boolean =
+    s.sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
+
+  test("every function in the one table resolves in Engine.session and is injected by GraftExtensions") {
+    // full end-to-end (fresh session via spark.sql.extensions config) is
+    // driven by graft.ExtensionsDemo in a separate JVM — a shared test
+    // JVM can't construct a second SparkContext
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    // SparkSessionExtensions.registerFunctions is private[sql]; it is a
+    // public method in bytecode, so reflection reaches it
+    val injected = new SimpleFunctionRegistry
+    ext.getClass.getMethod("registerFunctions", classOf[FunctionRegistry])
+      .invoke(ext, injected)
+    val names = GraftExtensions.functions.map(_.name)
+    assert(names.distinct.size == names.size, s"duplicate names: $names")
+    names.foreach { n =>
+      assert(resolves(spark, n), s"$n does not resolve in Engine.session")
+      assert(injected.functionExists(FunctionIdentifier(n)),
+        s"$n is not injected by GraftExtensions")
+    }
+    assert(injected.listFunction().map(_.funcName).toSet == names.toSet)
+  }
+
+  test("Engine.install is idempotent and thread-safe: 8 concurrent installs register everything once") {
+    val s = spark.newSession()
+    assert(!resolves(s, "slugify"), "a new session starts without the engine")
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val go = new CountDownLatch(1)
+      val done = (1 to 8).map(_ =>
+        pool.submit(new Callable[Unit] { def call(): Unit = { go.await(); Engine.install(s) } }))
+      go.countDown()
+      done.foreach(_.get(60, TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    assert(s.experimental.extraOptimizations == GraftExtensions.optimizerRules)
+    assert(s.experimental.extraStrategies == GraftExtensions.strategies)
+    GraftExtensions.functions.foreach(f => assert(resolves(s, f.name), f.name))
+    assert(s.sql("SELECT slugify('Nikola Jokic') AS v").head().getString(0) == "nikola_jokic")
+  }
+
   test("sketch aggregates are SQL-callable with the Column-API semantics") {
-    Functions.registerAll(spark)
     import spark.implicits._
     val items = (Seq.fill(60)("hot") ++ (1 to 30).map(i => s"u$i")).toDF("item")
     items.createOrReplaceTempView("sql_agg_items")

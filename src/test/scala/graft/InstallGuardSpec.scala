@@ -1,0 +1,63 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source audit over `src/main`: the engine has ONE session recipe
+  * (`Engine.session`) and ONE install path (`Engine.install` over the
+  * `GraftExtensions` table). A second builder, a raw rule assignment or
+  * a function registration anywhere else would let a query's session
+  * depend on which harness or operator ran first — this spec fails on
+  * any of them.
+  */
+class InstallGuardSpec extends AnyFunSuite {
+
+  private val sources: Seq[Path] = {
+    val walk = Files.walk(Paths.get("src/main"))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+    finally walk.close()
+  }
+
+  private def text(p: Path): String = Files.readString(p)
+
+  /** `file:line` of every match of `pattern` outside the `allowed` files. */
+  private def offenders(pattern: String, allowed: Set[String]): Seq[String] =
+    sources.filterNot(p => allowed(p.getFileName.toString)).flatMap { p =>
+      val t = text(p)
+      pattern.r.findAllMatchIn(t).map { m =>
+        s"$p:${t.substring(0, m.start).count(_ == '\n') + 1}"
+      }
+    }
+
+  /** The allowed file must itself match, or the pattern is vacuous. */
+  private def matchesIn(pattern: String, file: String): Boolean =
+    sources.filter(_.getFileName.toString == file)
+      .exists(p => pattern.r.findFirstIn(text(p)).nonEmpty)
+
+  private val Builder = """SparkSession\s*\.\s*builder"""
+  private val RuleAssign = """extra(?:Optimizations|Strategies)\s*(?:\+\+|:\+|\+)?=(?!=)"""
+  private val FunctionRegistration =
+    """\b(?:createOrReplaceTempFunction|registerFunction)\s*\(|\budf\s*\.\s*register\s*\("""
+
+  test("SparkSession.builder appears only in Engine.session and ExtensionsDemo") {
+    assert(sources.size > 50, s"scan found only ${sources.size} files")
+    assert(matchesIn(Builder, "Engine.scala"))
+    val bad = offenders(Builder, Set("Engine.scala", "ExtensionsDemo.scala"))
+    assert(bad.isEmpty, s"build sessions with Engine.session:\n${bad.mkString("\n")}")
+  }
+
+  test("experimental rule and strategy lists are assigned only in Engine.scala") {
+    assert(matchesIn(RuleAssign, "Engine.scala"))
+    val bad = offenders(RuleAssign, Set("Engine.scala"))
+    assert(bad.isEmpty, s"add rules to GraftExtensions' table:\n${bad.mkString("\n")}")
+  }
+
+  test("SQL functions are registered only by Engine.install") {
+    assert(matchesIn(FunctionRegistration, "Engine.scala"))
+    val bad = offenders(FunctionRegistration, Set("Engine.scala"))
+    assert(bad.isEmpty, s"add functions to GraftExtensions' table:\n${bad.mkString("\n")}")
+  }
+}

@@ -25,7 +25,6 @@ class MixtureSpec extends AnyFunSuite {
     assert(a == b && a.nonEmpty)
     // row-level: the kept set itself (not just counts) is stable under
     // an adversarial repartition of the input
-    graft.Functions.registerAll(spark)
     def keptIds(parts: Int): Seq[Long] =
       Engine.table(spark, dir, "documents").repartition(parts)
         .withColumn("rate_bp",
@@ -55,7 +54,6 @@ class MixtureSpec extends AnyFunSuite {
     })
     // replica indices make emitted rows distinct — downstream packing
     // sees rows, not weights
-    graft.Functions.registerAll(spark)
     val emitted = Engine.table(spark, dir, "documents")
       .withColumn("frac_bp",
         expr(s"2500 + pmod(${LlmOps.hashS("concat('rate:', source)")}, 5001)"))

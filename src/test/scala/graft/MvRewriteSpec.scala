@@ -499,7 +499,7 @@ class MvRewriteSpec extends AnyFunSuite {
   test("auto-register: a FRESH session answers from the MV with no ensure call; eviction retires it") {
     MatView.ensureMv(spark, dir) // artifact + sidecar exist on disk
     val s2 = spark.newSession()
-    Engine.registerOptimization(s2, MvRewrite) // rule wiring, not an ensure
+    Engine.install(s2) // rule wiring, not an ensure
     assert(MatView.autoRegisterAll(s2, dir) >= 1,
       "at least the documents MV sidecar must auto-register")
     val agg = () => Engine.table(s2, dir, "documents")

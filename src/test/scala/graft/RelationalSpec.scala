@@ -62,7 +62,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("custom scalar expressions work via SQL registration too") {
-    Functions.registerAll(spark)
     val r = spark.sql(
       "SELECT slugify('Nikola Jokić') AS s, fmt_month_abbrev('2025-05-07') AS f").head()
     assert(r.getString(0) == "nikola_jokic")

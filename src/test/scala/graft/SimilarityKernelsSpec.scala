@@ -19,7 +19,6 @@ class SimilarityKernelsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session(master = "local[4]")
 
   private def docsTok = {
-    Functions.registerAll(spark)
     Engine.table(spark, dir, "documents")
       .withColumn("tok", expr("split(trim(lower(text)), '\\\\s+')"))
   }
@@ -79,7 +78,6 @@ class SimilarityKernelsSpec extends AnyFunSuite {
   }
 
   test("hyperplane_bucket64 kernel == per-row hash-derived HOF buckets") {
-    Functions.registerAll(spark)
     def planeS(i: Int): String =
       s"""aggregate(zip_with(embedding, sequence(0, 63), (x, j) -> cast(stable_hash64(concat('hp:$i:', j)) % 2001 - 1000 as double) * cast(x as double)), cast(0 as double), (acc, v) -> acc + v)"""
     val bucketExpr = (0 until 8).map(i =>

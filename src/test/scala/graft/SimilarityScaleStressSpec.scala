@@ -58,7 +58,6 @@ class SimilarityScaleStressSpec extends AnyFunSuite {
 
   /** Background corpus + ×R duplicated hot group, with a tok column. */
   private lazy val blowUp: DataFrame = {
-    graft.Functions.registerAll(spark)
     val base = Engine.table(spark, dir, "documents")
       .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq

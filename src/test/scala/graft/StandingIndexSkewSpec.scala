@@ -50,7 +50,6 @@ class StandingIndexSkewSpec extends AnyFunSuite {
   }
 
   private def bucketOf(term: String): Long = {
-    graft.Functions.registerAll(spark)
     spark.sql(s"SELECT pmod(stable_hash64('idx:$term'), " +
       s"${StandingIndex.NumIndexBuckets})").head().getLong(0)
   }

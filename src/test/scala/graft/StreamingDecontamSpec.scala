@@ -53,7 +53,6 @@ class StreamingDecontamSpec extends AnyFunSuite {
     * documents — the same tokenization + hashing q149 applies.
     */
   private def winsOf(docs: DataFrame): (DataFrame, DataFrame) = {
-    graft.Functions.registerAll(docs.sparkSession)
     val base = docs
       .withColumn("tok", expr(LlmOps.toksS))
       .withColumn("n_tokens", size(col("tok")).cast("long"))
@@ -90,7 +89,6 @@ class StreamingDecontamSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
-    graft.Functions.registerAll(spark)
     val all = Engine.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .withColumn("is_eval",

@@ -46,7 +46,6 @@ class StreamingIndexSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session(master = "local[4]")
 
   private def withTok(d: DataFrame): DataFrame = {
-    graft.Functions.registerAll(d.sparkSession)
     d.withColumn("tok", expr(LlmOps.toksS))
   }
 

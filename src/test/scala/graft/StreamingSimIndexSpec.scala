@@ -47,7 +47,6 @@ class StreamingSimIndexSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
-    graft.Functions.registerAll(spark)
     val root = SimIndex.ensure(spark, dir) // standing artifact, frozen
     val deltaDocs = Engine.table(spark, dir, "documents")
       .filter(pmod(expr(LlmOps.hashS("CAST(doc_id AS STRING)")),

@@ -55,7 +55,6 @@ class StreamingSpanDedupSpec extends AnyFunSuite {
     * tokenization + stride-1 hashing q145 applies corpus-wide.
     */
   private def winsOf(docs: DataFrame): (DataFrame, DataFrame) = {
-    graft.Functions.registerAll(docs.sparkSession)
     val base = docs
       .withColumn("tok", expr(LlmOps.toksS))
       .withColumn("n_tokens", size(col("tok")).cast("long"))
