@@ -18,20 +18,21 @@ import graft.sources.RumorSource
   * Order sensitivity (SURVEY §1.4): Spark relations are unordered, so
   * crawl encounter order is carried explicitly as
   * (subject_idx, page_no, doc_pos) and every dedup/sort pins ties on it
-  * — never bare dropDuplicates. At 100 TB the same pipeline shape holds:
-  * the fill-forward window partitions by (slug, page) — thousands of
-  * independent partitions — and dedups shuffle only the 152-char key
-  * plus the order triple.
+  * — never bare dropDuplicates. Every per-tag window (fill-forward,
+  * 80-per-page cap, per-tag dedup, 150-cap) partitions by subject_idx
+  * first, which the key-grouped page scan (one task per subject)
+  * already satisfies; the only exchange is the global first-wins dedup
+  * on the 152-char key.
   */
 object RumorPipeline {
 
   /** Crawl records (ref fetchRumors.js:110-117) from element rows:
-    * fill-forward the running date within each (slug, page), consume the
-    * date-header rows, keep ≥15-char p/li items with a date, extract the
-    * last-anchor source.
+    * fill-forward the running date within each (subject, page), consume
+    * the date-header rows, keep ≥15-char p/li items with a date, extract
+    * the last-anchor source.
     */
   def crawlRecords(rows: DataFrame): DataFrame = {
-    val pageOrder = Window.partitionBy(col("slug"), col("page_no"))
+    val pageOrder = Window.partitionBy(col("subject_idx"), col("page_no"))
       .orderBy(col("doc_pos").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rows
@@ -191,8 +192,8 @@ object RumorPipeline {
     * dbg counts only the pages actually fetched, and it records a
     * page{n}Error key only if the cap didn't stop the crawl before page
     * n (fetchRumors.js:133-148). Our DSv2 scan reads every existing
-    * page in parallel (bounded by the 10-page cap; results are
-    * identical because the 150-cap filter discards the rest), so the
+    * page, subjects in parallel (bounded by the 10-page cap; results
+    * are identical because the 150-cap filter discards the rest), so the
     * observes collect PER-(slug,page) sums and the driver re-applies
     * the reference's stop rule when assembling the envelope: pages
     * fetched = up to the cap-crossing page if the tag crossed 150,
@@ -239,8 +240,9 @@ object RumorPipeline {
         .observe(oDedup, count(lit(1)).as("n"))
       val rows8 = payload(globalSort(afterDedup)).collect() // the ONE action
       val base = jsonEnvelopeRows(qRaw, rows8)
-      def n(o: Observation): Long = o.get("n").asInstanceOf[Long]
-      def metric(o: Observation, k: String): Long = o.get(k) match {
+      // a node that never ran (no input partitions, or a stage AQE
+      // replaced by an empty relation) leaves an empty observation
+      def metric(o: Observation, k: String): Long = o.get.getOrElse(k, null) match {
         case null => 0L
         case l: java.lang.Long => l.longValue()
         case i: java.lang.Integer => i.longValue()
@@ -294,7 +296,7 @@ object RumorPipeline {
         s""""debug":{$dbgBase""" +
           errsDeduped.map { case (k, v) => s",${jsonStr(k)}:${jsonStr(v)}" }.mkString +
           s""","scannedNodes":${seqSum(oScan)},"parsedItemsOnPage":${seqSum(oParsed)},""" +
-          s""""totalMerged":${n(oMerged)},"totalAfterDedup":${n(oDedup)},""" +
+          s""""totalMerged":${metric(oMerged, "n")},"totalAfterDedup":${metric(oDedup, "n")},""" +
           s""""returning":${rows8.length}}"""
       base.dropRight(1) + "," + dbgJson + "}"
     } catch {
@@ -308,15 +310,27 @@ object RumorPipeline {
   // Sinks
   // ---------------------------------------------------------------
 
+  /** JSON string literal as `JSON.stringify` writes it (ES2019): the
+    * two-character escapes for backspace, form feed, newline, return and
+    * tab, and a six-character lowercase-hex escape for every other
+    * control character and for a lone surrogate.
+    */
   private def jsonStr(s: String): String = {
     val sb = new StringBuilder("\"")
-    s.foreach {
+    for (i <- 0 until s.length) s.charAt(i) match {
       case '"' => sb.append("\\\"")
       case '\\' => sb.append("\\\\")
+      case '\b' => sb.append("\\b")
+      case '\f' => sb.append("\\f")
       case '\n' => sb.append("\\n")
       case '\r' => sb.append("\\r")
       case '\t' => sb.append("\\t")
       case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c if Character.isHighSurrogate(c) &&
+          i + 1 < s.length && Character.isLowSurrogate(s.charAt(i + 1)) => sb.append(c)
+      case c if Character.isLowSurrogate(c) &&
+          i > 0 && Character.isHighSurrogate(s.charAt(i - 1)) => sb.append(c)
+      case c if Character.isSurrogate(c) => sb.append(f"\\u${c.toInt}%04x")
       case c => sb.append(c)
     }
     sb.append('"').toString

@@ -5,18 +5,24 @@ import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 implementation of the paginated tag-page scan
   * (SURVEY.md §2A#1-3 "custom work"): one `InputPartition` per
-  * (slug, page) — the distribution unit a real crawl would shard across
-  * executors — with `SupportsPushDownLimit` so `LIMIT n` stops each
-  * page's element emission early (the reference's per-page cap shape,
+  * (slug, page), each keyed on its subject (`HasPartitionKey`), with
+  * `SupportsPushDownLimit` so `LIMIT n` stops each page's element
+  * emission early (the reference's per-page cap shape,
   * fetchRumors.js:119).
+  *
+  * The scan reports `KeyGroupedPartitioning(identity(subject_idx))`, so
+  * Spark reads each subject's pages in one task, in page order — the
+  * reference's per-tag crawl (fetchRumors.js:133-151) — and every
+  * per-subject window downstream needs no exchange.
   *
   * Pagination follows the reference's permissive error semantics: page
   * existence is probed at planning time, sequentially per slug, and the
@@ -105,11 +111,14 @@ final class RumorPagesScanBuilder(corpusSpec: String, slugsCsv: String, maxPages
   override def build(): Scan = new RumorPagesScan(corpusSpec, slugsCsv, maxPages, limit)
 }
 
+/** One page of one subject's crawl; the subject is its key group. */
 final case class RumorPagePartition(slug: String, subjectIdx: Int, pageNo: Int)
-    extends InputPartition
+    extends InputPartition with HasPartitionKey {
+  override def partitionKey(): InternalRow = new GenericInternalRow(Array[Any](subjectIdx))
+}
 
 final class RumorPagesScan(corpusSpec: String, slugsCsv: String, maxPages: Int,
-    limit: Int) extends Scan with Batch {
+    limit: Int) extends Scan with Batch with SupportsReportPartitioning {
   override def readSchema(): StructType = RumorPagesSource.Schema
   override def toBatch: Batch = this
   override def description(): String =
@@ -119,18 +128,26 @@ final class RumorPagesScan(corpusSpec: String, slugsCsv: String, maxPages: Int,
   /** Sequential EXISTENCE probe per slug (PageProvider.exists — stat /
     * HEAD, never a body read); first missing page ends the tag
     * (permissive error semantics). Bodies are fetched exactly once, in
-    * the executors' readers.
+    * the executors' readers. Planned once per scan, so the reported
+    * partitioning and the planned partitions always agree.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
+  private lazy val pages: Array[InputPartition] = {
     val provider = RumorPagesSource.providerFromSpec(corpusSpec)
     val slugs = slugsCsv.split(",").map(_.trim).filter(_.nonEmpty)
     slugs.zipWithIndex.flatMap { case (slug, idx) =>
       Iterator.from(1).take(maxPages)
         .takeWhile(p => provider.exists(slug, p))
-        .map(p => RumorPagePartition(slug, idx, p))
+        .map(p => RumorPagePartition(slug, idx, p): InputPartition)
         .toSeq
-    }.toArray
+    }
   }
+
+  override def planInputPartitions(): Array[InputPartition] = pages
+
+  /** One key group per subject with at least one page. */
+  override def outputPartitioning(): Partitioning =
+    new KeyGroupedPartitioning(Array(Expressions.identity("subject_idx")),
+      pages.collect { case p: RumorPagePartition => p.subjectIdx }.distinct.length)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new RumorPagesReaderFactory(corpusSpec, limit)

@@ -14,13 +14,9 @@ import graft.functions.ScalarOps
   * permissive error semantics (fetchRumors.js:133-137).
   *
   * The corpus stands in for the HTTP origin (zero-egress environment):
-  * a [[PageProvider]] is the fetchText boundary. Scale path: this is
-  * where a DataSource V2 `TableProvider` with one `InputPartition` per
-  * (slug, page) would stream real pages with `SupportsPushDownLimit` for
-  * the per-tag early-stop (SURVEY §2A#1-2, §4) — the downstream
-  * element-row schema is identical, so swapping providers touches
-  * nothing else. The HTML parse itself runs distributed in a flatMap
-  * over the page documents.
+  * a [[PageProvider]] is the fetchText boundary, so swapping providers
+  * (an HTTP origin, a test double) touches nothing downstream of the
+  * element-row schema. The HTML parse runs in the executors' readers.
   */
 object RumorSource {
 
@@ -121,9 +117,10 @@ object RumorSource {
   }
 
   /** The distributed element-row scan through the DataSource V2 source
-    * (RumorPagesSource): one input partition per (slug, page), fetch +
-    * parse in executors, limit pushdown supported. `corpusSpec` is
-    * "dir:<path>" or "classpath:<prefix>".
+    * (RumorPagesSource): one input partition per (slug, page), grouped
+    * into one task per subject, fetch + parse in executors, limit
+    * pushdown supported. `corpusSpec` is "dir:<path>" or
+    * "classpath:<prefix>".
     */
   def elementRows(spark: SparkSession, corpusSpec: String,
       slugs: Seq[String]): DataFrame =

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Snapshot-manifest table store — the mini table format that swaps
   * content-scan freshness for an O(1) snapshot id.
@@ -2663,6 +2664,16 @@ object SnapshotStore {
       .map(_.getAs[String]("cat_col"))
   }
 
+  /** The order of the manifest's string bounds: Spark's `UTF8String`
+    * binary (UTF-8 byte) order, which the writer's `min`/`max` used —
+    * not Java's UTF-16 code-unit order, which disagrees on
+    * supplementary characters (U+1F600 sorts after U+FF21 in UTF-8,
+    * before it in UTF-16).
+    */
+  private[graft] val CatOrder: Ordering[String] =
+    Ordering.fromLessThan((a, b) =>
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0)
+
   /** CATEGORY-PRUNED READ: rows with cat = value, scanning only files
     * whose manifest string bounds contain the value (null bounds = the
     * open interval, never pruned) — the categorical twin of
@@ -2676,7 +2687,8 @@ object SnapshotStore {
       def sv(r: org.apache.spark.sql.Row, f: String): Option[String] =
         if (r.isNullAt(r.fieldIndex(f))) None else Some(r.getAs[String](f))
       rows.filter(r => sv(r, "min_cat").isEmpty ||
-          (sv(r, "max_cat").exists(_ >= value) && sv(r, "min_cat").exists(_ <= value)))
+          (sv(r, "max_cat").exists(CatOrder.gteq(_, value)) &&
+            sv(r, "min_cat").exists(CatOrder.lteq(_, value))))
         .map(_.getAs[String]("path")).toIndexedSeq
     }
     if (paths.isEmpty) return readSnapshot(s, root, k).filter(lit(false))

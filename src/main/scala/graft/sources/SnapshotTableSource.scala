@@ -1411,16 +1411,18 @@ final class SnapshotScanBuilder(root: String, k: Long, tableSchema: StructType,
     // categorical equality/IN on the clustering column: PRUNE-ONLY —
     // the string bounds shrink the file list from the manifest's
     // (min_cat, max_cat); the filter itself stays in `rest`, so Spark
-    // re-applies it on rows (sound under any bound)
+    // re-applies it on rows (sound under any bound); bounds widen in
+    // the manifest's UTF-8 byte order
+    val ord = SnapshotStore.CatOrder
     rest.foreach {
       case EqualTo(c, v: String) if catCol.contains(c) =>
         val (l0, h0) = strBounds.getOrElse(c, (v, v))
-        strBounds(c) = (if (v < l0) v else l0, if (v > h0) v else h0)
+        strBounds(c) = (ord.min(v, l0), ord.max(v, h0))
       case In(c, vs) if catCol.contains(c) &&
           vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
         val ss = vs.map(_.asInstanceOf[String])
-        val (l0, h0) = strBounds.getOrElse(c, (ss.min, ss.max))
-        strBounds(c) = (Seq(ss.min, l0).min, Seq(ss.max, h0).max)
+        val (l0, h0) = strBounds.getOrElse(c, (ss.min(ord), ss.max(ord)))
+        strBounds(c) = ((ss :+ l0).min(ord), (ss :+ h0).max(ord))
       // identity-partition pruning: equality/IN on the partition
       // column keeps EXACTLY the named values' files — also PRUNE-ONLY
       // (the filter stays residual; contradictory equalities intersect
@@ -1829,7 +1831,8 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     // open interval (an all-null-category file is never pruned)
     def liveCat: Boolean = strBounds.forall { case (_, (lo, hi)) =>
       !hasCat || r.isNullAt(r.fieldIndex("min_cat")) || {
-        r.getAs[String]("max_cat") >= lo && r.getAs[String]("min_cat") <= hi
+        SnapshotStore.CatOrder.gteq(r.getAs[String]("max_cat"), lo) &&
+          SnapshotStore.CatOrder.lteq(r.getAs[String]("min_cat"), hi)
       }
     }
     // identity-partition pruning: exact per-file value membership

@@ -3,10 +3,17 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.connector.read.HasPartitionKey
+import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.RumorPipeline
-import graft.sources.{HtmlDom, RumorPagesSource, RumorSource}
+import graft.sources.{HtmlDom, RumorPagesScan, RumorPagesSource, RumorSource}
 
 /** Reference-semantics golden tests (SURVEY.md §5 item 3): the frozen
   * corpus through the full pipeline, each assertion pinned to a cited
@@ -251,6 +258,50 @@ class RumorPipelineSpec extends AnyFunSuite {
       s"debug envelope cost ${CountingCorpus.fetches.get()} fetches for 3 pages")
   }
 
+  test("debug envelope for a subject with no pages is a 200 with empty items") {
+    val (code, _, body) = RumorPipeline.handleHttp(spark,
+      RumorPipeline.BundledCorpus, "Nobody Atall", debug = true)
+    assert(code == 200, body)
+    assert(body.contains(""""items":[]"""), body)
+    assert(body.contains(""""page1Error_nobody_atall":"HTTP 404"""), body)
+    assert(body.contains(""""scannedNodes":0"""), body)
+  }
+
+  test("debug envelope for pages whose items all lack a date is a 200") {
+    val dir = writeCorpus(Map(("team", 1) -> page(
+      "<p>An undated rumor item with no header above it.</p>" +
+        "<p>Another undated rumor item, also without a date.</p>")))
+    val (code, _, body) = RumorPipeline.handleHttp(spark, s"dir:$dir", "Team",
+      debug = true)
+    assert(code == 200, body)
+    assert(body.contains(""""items":[]"""), body)
+    val scanned = """"scannedNodes":(\d+)""".r.findFirstMatchIn(body).get.group(1).toInt
+    assert(scanned > 0, body)
+  }
+
+  test("JSON strings escape like JSON.stringify: short escapes and lone surrogates") {
+    val emoji = new String(Character.toChars(0x1F600))
+    val subject = "a\bb\fc" + 0xd800.toChar + "d" + 0xdc00.toChar + "e" + emoji
+    val bs = "\\"
+    assert(RumorPipeline.jsonEnvelopeRows(subject, Array.empty) ==
+      s"""{"subject":"a${bs}bb${bs}fc${bs}ud800d${bs}udc00e$emoji","items":[]}""")
+  }
+
+  test("a three-subject request plans exactly one shuffle: the global dedup") {
+    val df = RumorPipeline.run(spark, RumorPipeline.BundledCorpus,
+      RumorPipeline.DefaultSubjects + ", Nobody Atall")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan) // the initial plan
+      case other => Seq(other)
+    }.flatten
+    val exchanges = nodes(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(exchanges.length == 1, df.queryExecution.executedPlan.toString)
+    assert(exchanges.head.outputPartitioning.asInstanceOf[HashPartitioning]
+      .expressions.map(_.asInstanceOf[Attribute].name) == Seq("key"))
+  }
+
   test("500 envelope carries debug context (fetchRumors.js:216)") {
     // an unregistered corpus scheme throws inside the pipeline
     val out = RumorPipeline.handle(spark, "bogus:/nowhere", "Some Team")
@@ -259,9 +310,24 @@ class RumorPipelineSpec extends AnyFunSuite {
   }
 
   test("DSv2 source: one input partition per (slug, page); limit pushdown") {
+    // the scan plans one partition per page (2 jb pages + 1 knicks
+    // page), each keyed on its subject; Spark groups them into one task
+    // per subject
+    val scan = new RumorPagesScan(RumorPipeline.BundledCorpus,
+      "jalen_brunson,new_york_knicks", RumorSource.MaxPages, Int.MaxValue)
+    val parts = scan.planInputPartitions()
+    assert(parts.length == 3)
+    assert(parts.map(_.asInstanceOf[HasPartitionKey].partitionKey().getInt(0)).toSeq ==
+      Seq(0, 0, 1))
+    scan.outputPartitioning() match {
+      case k: KeyGroupedPartitioning =>
+        assert(k.keys().map(_.describe()).toSeq == Seq("subject_idx"))
+        assert(k.numPartitions() == 2)
+      case other => fail(s"expected key-grouped output, got $other")
+    }
     val df = RumorSource.elementRows(spark, RumorPipeline.BundledCorpus,
       Seq("jalen_brunson", "new_york_knicks"))
-    assert(df.rdd.getNumPartitions == 3) // 2 jb pages + 1 knicks page
+    assert(df.rdd.getNumPartitions == 2) // one task per subject
     val lim = df.limit(5)
     assert(lim.queryExecution.executedPlan.toString.contains("pushedLimit=5"))
     assert(lim.count() == 5)
@@ -278,11 +344,12 @@ class RumorPipelineSpec extends AnyFunSuite {
       .option("maxPages", "10").load()
     assert(df.count() > 0)
     // 3 existing pages fetched once each in readers; planning probed
-    // existence only (Spark may re-plan, so the probe count is only
-    // bounded below — what matters is bodies were read exactly once)
+    // existence only, once per scan: jb pages 1-3 (3 missing) and
+    // knicks pages 1-2 (2 missing)
     assert(CountingCorpus.fetches.get() == 3,
       s"expected 3 body fetches, got ${CountingCorpus.fetches.get()}")
-    assert(CountingCorpus.probes.get() >= 5)
+    assert(CountingCorpus.probes.get() == 5,
+      s"expected 5 existence probes, got ${CountingCorpus.probes.get()}")
   }
 
   test("HtmlDom container fallback chain (fetchRumors.js:79-84)") {

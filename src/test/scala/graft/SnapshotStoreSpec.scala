@@ -1469,4 +1469,28 @@ class SnapshotStoreSpec extends AnyFunSuite {
       .orderBy(col("lang"))
     assert(rows(fd) == rows(expectFd))
   }
+
+  test("category bounds compare in UTF-8 byte order: U+FF21 and U+1F600 each find their files") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_snapcat_").toString + "/store"
+    val fullA = "\uff21"
+    val emoji = new String(Character.toChars(0x1F600))
+    // 45 + 55 rows range-laid into CatCommitFiles files: one file holds
+    // the tail of one value and the head of the other, so its bounds are
+    // (fullA, emoji) in UTF-8 order — and (emoji, fullA) in UTF-16 order
+    val df = ((1 to 45).map(i => (i.toLong, fullA)) ++
+      (46 to 100).map(i => (i.toLong, emoji))).toDF("doc_id", "lang")
+    SnapshotStore.appendClustered(spark, root, df, "lang")
+    val cur = SnapshotStore.currentSnapshot(spark, root)
+    val m = SnapshotStore.manifest(spark, root, cur)
+    assert(m.filter(col("min_cat") === fullA && col("max_cat") === emoji).count() == 1,
+      "the layout must put both values in one file")
+    val dsv2 = spark.read.format("graft.sources.SnapshotTableSource")
+      .option("root", root).load()
+    for ((v, n) <- Seq(fullA -> 45L, emoji -> 55L)) {
+      assert(SnapshotStore.readCat(spark, root, cur, v).count() == n, s"readCat($v)")
+      assert(dsv2.filter(col("lang") === v).count() == n, s"DSv2 lang = $v")
+      assert(dsv2.filter(col("lang").isin(v, "a")).count() == n, s"DSv2 lang IN ($v, a)")
+    }
+  }
 }
