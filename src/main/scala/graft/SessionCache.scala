@@ -36,6 +36,9 @@ final class SessionCache {
     m.put((s, key), df)
   }
 
+  /** Drop the entry for (s, key), if any. */
+  def remove(s: SparkSession, key: String): Unit = m.remove((s, key))
+
   private[graft] def evictContext(sc: SparkContext): Unit =
     m.keysIterator.filter(_._1.sparkContext eq sc).toList.foreach(m.remove)
 

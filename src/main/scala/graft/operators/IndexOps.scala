@@ -366,8 +366,6 @@ object IndexOps {
   private[graft] def hdrRoot(dir: String): String =
     graft.sources.StandingIndex.artifactRoot(dir, "hdr")
 
-  private val hdrBuiltCache = new graft.SessionCache
-
   /** The per-(lang, source) HDR sketch persisted as a STANDING
     * ARTIFACT (signature-validated meta row, reuse/rebuild like every
     * other store) — q207's scaladoc says the sketch is what you store
@@ -376,21 +374,15 @@ object IndexOps {
     * is a sketch-row walk with ZERO corpus reads.
     */
   def ensureHdrArtifact(s: SparkSession, dir: String): String = {
-    hdrBuiltCache.getOrElseUpdate(s, dir) {
-      val root = hdrRoot(dir)
-      val sig = {
-        val (n, sg) = graft.sources.StandingIndex.tableSig(s, dir,
-          "documents", Seq("doc_id", "lang", "source", "n_chars"))
-        (n, Math.floorMod(sg + HdrLayout, graft.sources.StandingIndex.SigMod))
-      }
-      if (!graft.sources.StandingIndex.metaFresh(s, root, sig)) {
-        hdrSketch(t(s, dir, "documents"), "n_chars", Seq("lang", "source"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/sk")
-        graft.sources.StandingIndex.writeMeta(s, root, sig)
-      }
-      s.emptyDataFrame
-    }
-    s"${hdrRoot(dir)}/sk"
+    import graft.sources.StandingIndex
+    val root = hdrRoot(dir)
+    StandingIndex.ensureArtifact(s, root)(StandingIndex.refresh(s, root,
+      StandingIndex.withLayout(StandingIndex.tableSig(s, dir, "documents",
+        Seq("doc_id", "lang", "source", "n_chars")), HdrLayout)) {
+      hdrSketch(t(s, dir, "documents"), "n_chars", Seq("lang", "source"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/sk")
+    })
+    s"$root/sk"
   }
 
   /** q216: quantiles ANSWERED FROM THE STORED SKETCH — the standing

@@ -261,15 +261,12 @@ object JoinPlanner {
   private[graft] def statsSig(s: SparkSession, dir: String): (Long, Long) = {
     val M = graft.sources.StandingIndex.SigMod
     val per = statsTables.map { tn =>
-      val cols = Engine.table(s, dir, tn).columns.toSeq
-      val (n, sg) = graft.sources.StandingIndex.tableSig(s, dir, tn, cols)
+      val (n, sg) = graft.sources.StandingIndex.tableSig(s, dir, tn)
       (n, Math.floorMod(
         scala.util.hashing.MurmurHash3.stringHash(tn).toLong + sg, M))
     }
-    (per.map(_._1).sum, Math.floorMod(per.map(_._2).sum + JpStatsLayout, M))
+    (per.map(_._1).sum, Math.floorMod(per.map(_._2).sum, M))
   }
-
-  private val statsCache = new graft.SessionCache
 
   /** The planner's statistics table as a STANDING ARTIFACT — the
     * ANALYZE pass (10 per-key count aggregations) runs once per
@@ -284,22 +281,19 @@ object JoinPlanner {
     * and the poisoned-table rebuild.
     */
   def ensureStats(s: SparkSession, dir: String): DataFrame = {
-    statsCache.getOrElseUpdate(s, dir) {
-      ensureStatsValidated(s, dir); s.emptyDataFrame
-    }
-    s.read.parquet(s"${statsRoot(dir)}/stats")
+    val root = graft.sources.StandingIndex.ensureArtifact(s, statsRoot(dir))(
+      ensureStatsValidated(s, dir))
+    s.read.parquet(s"$root/stats")
   }
 
   /** The validation+build step a NEW session runs (spec hook). */
   private[graft] def ensureStatsValidated(s: SparkSession, dir: String): Unit = {
     val root = statsRoot(dir)
-    val sig = statsSig(s, dir)
-    if (!graft.sources.StandingIndex.metaFresh(s, root, sig)) {
+    graft.sources.StandingIndex.refresh(s, root,
+        graft.sources.StandingIndex.withLayout(statsSig(s, dir), JpStatsLayout)) {
       statsPairs.map { case (r, c) => statsRow(s, dir, r, c) }
         .reduce(_ unionByName _)
         .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
-      // meta LAST: a crashed build can never validate as fresh
-      graft.sources.StandingIndex.writeMeta(s, root, sig)
     }
   }
 

@@ -719,6 +719,32 @@ object LlmOps {
   private val centsCache =
     new graft.SessionCache
 
+  /** Artifact layout versions, folded into each vector-index signature
+    * (ADVICE r12): the stored centroids/codebooks/codes are functions
+    * of the corpus AND the training recipe ([[NumCentroids]], [[PqM]]/
+    * [[PqK]]/[[PqSubDim]], the seeding rule, the Lloyd round count) —
+    * a recipe change without a data change must invalidate the store,
+    * the same discipline every other standing artifact already follows
+    * (BktLayout, MvLayout, ClsLayout, ShardLayout, JpStatsLayout).
+    */
+  private val IvfLayout = 1L
+  private val PqLayout = 1L
+  private val PqrLayout = 1L
+
+  /** Validate-or-build a vector-index artifact under `<prefix>` keyed
+    * by the embeddings signature and `layout` — per call, not latched:
+    * each query revalidates its index.
+    */
+  private def refreshVectorIndex(s: SparkSession, dir: String, prefix: String,
+      layout: Long)(build: String => Unit): String = {
+    import graft.sources.StandingIndex
+    val root = StandingIndex.artifactRoot(dir, prefix)
+    StandingIndex.refresh(s, root, StandingIndex.withLayout(
+      StandingIndex.tableSig(s, dir, "embeddings", Seq("vec_id", "embedding")),
+      layout))(build(root))
+    root
+  }
+
   /** Validate-or-build the PERSISTED quantizer artifact and return its
     * root — the [[graft.sources.StandingIndex]] meta-row discipline
     * applied to the IVF centroid table: a coarse quantizer is exactly
@@ -732,37 +758,14 @@ object LlmOps {
     * hash-matching over the artifact path, which IS the proof of
     * equivalence, re-run every gate.
     */
-  /** Artifact layout versions, folded into each vector-index signature
-    * (ADVICE r12): the stored centroids/codebooks/codes are functions
-    * of the corpus AND the training recipe ([[NumCentroids]], [[PqM]]/
-    * [[PqK]]/[[PqSubDim]], the seeding rule, the Lloyd round count) —
-    * a recipe change without a data change must invalidate the store,
-    * the same discipline every other standing artifact already follows
-    * (BktLayout, MvLayout, ClsLayout, ShardLayout, JpStatsLayout).
-    */
-  private val IvfLayout = 1L
-  private val PqLayout = 1L
-  private val PqrLayout = 1L
-
-  private def withLayout(sig: (Long, Long), layout: Long): (Long, Long) =
-    (sig._1, Math.floorMod(sig._2 + layout, graft.sources.StandingIndex.SigMod))
-
-  private[graft] def ensureIvfArtifact(s: SparkSession, dir: String): String = {
-    import graft.sources.StandingIndex
-    val root = StandingIndex.artifactRoot(dir, "ivf")
-    val sig = withLayout(StandingIndex.tableSig(s, dir, "embeddings",
-      Seq("vec_id", "embedding")), IvfLayout)
-    if (!StandingIndex.metaFresh(s, root, sig)) {
+  private[graft] def ensureIvfArtifact(s: SparkSession, dir: String): String =
+    refreshVectorIndex(s, dir, "ivf", IvfLayout) { root =>
       val e = t(s, dir, "embeddings")
       val seeds = e.filter(col("vec_id") < NumCentroids)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cent"))
       lloydCentroids(e, seeds)
         .write.mode("overwrite").parquet(s"$root/centroids")
-      // meta last — the commit marker (see StandingIndex.writeMeta)
-      StandingIndex.writeMeta(s, root, sig)
     }
-    root
-  }
 
   private[graft] def ivfCentroids(s: SparkSession, dir: String): DataFrame =
     // K rows read from the persisted artifact — cached per (session,
@@ -928,12 +931,8 @@ object LlmOps {
     * lossless parquet doubles ⇒ stored ≡ rebuilt, so q161's raw-row
     * DuckDB oracle keeps hash-matching over the artifact path.
     */
-  private[graft] def ensurePqArtifact(s: SparkSession, dir: String): String = {
-    import graft.sources.StandingIndex
-    val root = StandingIndex.artifactRoot(dir, "pq")
-    val sig = withLayout(StandingIndex.tableSig(s, dir, "embeddings",
-      Seq("vec_id", "embedding")), PqLayout)
-    if (!StandingIndex.metaFresh(s, root, sig)) {
+  private[graft] def ensurePqArtifact(s: SparkSession, dir: String): String =
+    refreshVectorIndex(s, dir, "pq", PqLayout) { root =>
       val subs = pqSubvectors(t(s, dir, "embeddings"))
       val seeds = subs.filter(col("vec_id") < PqK)
         .select(col("m").as("sm"), col("vec_id").as("cent_id"), col("sub").as("cent"))
@@ -954,11 +953,7 @@ object LlmOps {
       assign(s.read.parquet(s"$root/codebooks"))
         .select(col("vec_id"), col("m"), col("code"))
         .write.mode("overwrite").parquet(s"$root/codes")
-      // meta last — the commit marker (see StandingIndex.writeMeta)
-      StandingIndex.writeMeta(s, root, sig)
     }
-    root
-  }
 
   /** The (vec_id, m, sub) subvector split both PQ builds and the
     * query-side LUTs share — doubles, the exact-arithmetic convention.
@@ -1036,12 +1031,8 @@ object LlmOps {
     * is itself a deterministic function of the same signature, via
     * [[ensureIvfArtifact]]).
     */
-  private[graft] def ensurePqrArtifact(s: SparkSession, dir: String): String = {
-    import graft.sources.StandingIndex
-    val root = StandingIndex.artifactRoot(dir, "pqr")
-    val sig = withLayout(StandingIndex.tableSig(s, dir, "embeddings",
-      Seq("vec_id", "embedding")), PqrLayout)
-    if (!StandingIndex.metaFresh(s, root, sig)) {
+  private[graft] def ensurePqrArtifact(s: SparkSession, dir: String): String =
+    refreshVectorIndex(s, dir, "pqr", PqrLayout) { root =>
       val e = t(s, dir, "embeddings")
       val cents = ivfCentroids(s, dir)
       val corpus = ivfAssign1(e, cents, "vec_id")
@@ -1075,10 +1066,7 @@ object LlmOps {
       assign(s.read.parquet(s"$root/codebooks"))
         .select(col("vec_id"), col("cent_id"), col("m"), col("code"))
         .write.mode("overwrite").parquet(s"$root/codes")
-      StandingIndex.writeMeta(s, root, sig)
     }
-    root
-  }
 
   val q162IvfPq: Q = (s, dir) => {
     val e = t(s, dir, "embeddings")

@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.DecimalType
   *      `CREATE TABLE … USING PARQUET CLUSTERED BY … LOCATION` — a
   *      metadata-only DDL, no data movement (BucketStoreSpec proves
   *      the mtime witness stays put and the join stays exchange-free);
-  *   3. signature stale/missing → rewrite both tables, meta row LAST.
+  *   3. signature stale/missing → rewrite both tables.
   *
   * The one-file-per-bucket invariant: each table is
   * `repartition(numBuckets, key)`-exchanged before the bucketed write.
@@ -99,64 +99,77 @@ object BucketStore {
     s"graft_bkt_${t}_$key"
   }
 
-  private[graft] def bktSig(s: SparkSession, dir: String, nb: Int): (Long, Long) = {
+  /** Content signature of the tables a bucketed family stores: per
+    * (table, key) side — both folded in, so moving rows between tables
+    * cannot cancel and a changed key rebuilds — plus the bucket count
+    * `nb`, so a count change (target resize, table growth past a bucket
+    * boundary) rebuilds too.
+    */
+  private def bktSig(s: SparkSession, dir: String,
+      sides: Seq[(String, String)], nb: Int): (Long, Long) = {
     val M = StandingIndex.SigMod
-    val per = Tables.map { case (t, _) =>
-      val (n, sg) = StandingIndex.tableSig(s, dir, t,
-        graft.Engine.table(s, dir, t).columns.toSeq)
+    val per = sides.map { case (t, k) =>
+      val (n, sg) = StandingIndex.tableSig(s, dir, t)
       (n, Math.floorMod(
-        scala.util.hashing.MurmurHash3.stringHash(t).toLong + sg, M))
+        scala.util.hashing.MurmurHash3.stringHash(s"$t:$k").toLong + sg, M))
     }
-    (per.map(_._1).sum,
-      Math.floorMod(per.map(_._2).sum + BktLayout + nb.toLong, M))
+    (per.map(_._1).sum, Math.floorMod(per.map(_._2).sum + nb.toLong, M))
   }
 
-  private val builtCache = new graft.SessionCache
+  /** Write each (table, key) side hash-bucketed and sorted on its key
+    * under `root` and register it as `name(table)`. Repartitioning on
+    * the key with numPartitions == numBuckets makes partition id ==
+    * bucket id (same murmur3-pmod function), so each task writes its
+    * one bucket's one file.
+    */
+  private def writeBucketed(s: SparkSession, dir: String, root: String,
+      sides: Seq[(String, String)], name: String => String, nb: Int): Unit =
+    sides.foreach { case (t, k) =>
+      val tn = name(t)
+      s.sql(s"DROP TABLE IF EXISTS $tn")
+      deleteDir(new java.io.File(s"$root/$t"))
+      graft.Engine.table(s, dir, t)
+        .repartition(nb, col(k))
+        .write.mode("overwrite")
+        .option("path", s"$root/$t")
+        .bucketBy(nb, k).sortBy(k)
+        .saveAsTable(tn)
+    }
+
+  /** Register stored bucketed files missing from this session's catalog
+    * — a metadata-only DDL, no data movement. The derived `nb` matches
+    * the stored files: a fresh signature implies the same table bytes,
+    * hence the same derived count.
+    */
+  private def registerStored(s: SparkSession, root: String,
+      sides: Seq[(String, String)], name: String => String, nb: Int): Unit =
+    sides.foreach { case (t, k) =>
+      val tn = name(t)
+      if (!s.catalog.tableExists(tn)) {
+        val ddl = s.read.parquet(s"$root/$t").schema.toDDL
+        s.sql(s"""CREATE TABLE $tn ($ddl) USING PARQUET
+                 |CLUSTERED BY ($k) SORTED BY ($k)
+                 |INTO $nb BUCKETS
+                 |LOCATION '$root/$t'""".stripMargin)
+      }
+    }
 
   /** Make both bucketed tables available in this session's catalog,
-    * reusing stored files when the corpus signature matches.
+    * reusing stored files when the corpus signature matches: the store
+    * is validated once per session, and a new session over a fresh
+    * store only re-registers its tables.
     */
   def ensureBucketed(s: SparkSession, dir: String): Unit =
-    builtCache.getOrElseUpdate(s, dir) {
-      ensureBucketedValidated(s, dir); s.emptyDataFrame
-    }
+    StandingIndex.ensureArtifact(s, bktRoot(dir))(ensureBucketedValidated(s, dir))
 
   /** The validation+registration step a NEW session runs (spec hook). */
   private[graft] def ensureBucketedValidated(s: SparkSession, dir: String): Unit = {
     val root = bktRoot(dir)
     val nb = numBucketsFor(s, dir)
-    val sig = bktSig(s, dir, nb)
-    if (!StandingIndex.metaFresh(s, root, sig)) {
-      Tables.foreach { case (t, key) =>
-        val tn = tableName(dir, t)
-        s.sql(s"DROP TABLE IF EXISTS $tn")
-        deleteDir(new java.io.File(s"$root/$t"))
-        // repartition on the key with numPartitions == numBuckets:
-        // partition id == bucket id (same murmur3-pmod function), so
-        // each task writes its one bucket's one file
-        graft.Engine.table(s, dir, t)
-          .repartition(nb, col(key))
-          .write.mode("overwrite")
-          .option("path", s"$root/$t")
-          .bucketBy(nb, key).sortBy(key)
-          .saveAsTable(tn)
-      }
-      // meta LAST: a crashed build can never validate as fresh
-      StandingIndex.writeMeta(s, root, sig)
-    } else Tables.foreach { case (t, key) =>
-      val tn = tableName(dir, t)
-      if (!s.catalog.tableExists(tn)) {
-        // new session over a stored artifact: metadata-only
-        // re-registration of the existing bucketed files. The derived
-        // nb matches the stored files: a fresh signature implies the
-        // same table bytes, hence the same derived count.
-        val ddl = s.read.parquet(s"$root/$t").schema.toDDL
-        s.sql(s"""CREATE TABLE $tn ($ddl) USING PARQUET
-                 |CLUSTERED BY ($key) SORTED BY ($key)
-                 |INTO $nb BUCKETS
-                 |LOCATION '$root/$t'""".stripMargin)
-      }
-    }
+    if (!StandingIndex.refresh(s, root, StandingIndex.withLayout(
+        bktSig(s, dir, Tables, nb), BktLayout))(
+        writeBucketed(s, dir, root, Tables, tableName(dir, _), nb)))
+      registerStored(s, root, Tables, tableName(dir, _), nb)
   }
 
   private def deleteDir(f: java.io.File): Unit = {
@@ -252,41 +265,11 @@ object BucketStore {
     val (_, lr, lk, rr, rk) = adv
     val sides = Seq(lr -> lk, rr -> rk).distinct
     val root = advRoot(dir)
-    // signature covers the advised side tables AND the advice inputs'
-    // layout version (a changed advice algebra must rebuild)
-    val M = StandingIndex.SigMod
-    val per = sides.map { case (t, k) =>
-      val (n, sg) = StandingIndex.tableSig(s, dir, t,
-        graft.Engine.table(s, dir, t).columns.toSeq)
-      (n, Math.floorMod(
-        scala.util.hashing.MurmurHash3.stringHash(s"$t:$k").toLong + sg, M))
-    }
     val nb = numBuckets(s, dir, sides.map(_._1))
-    val sig = (per.map(_._1).sum,
-      Math.floorMod(per.map(_._2).sum + BktLayout + nb.toLong, M))
-    if (!StandingIndex.metaFresh(s, root, sig)) {
-      sides.foreach { case (t, k) =>
-        val tn = advTableName(dir, t)
-        s.sql(s"DROP TABLE IF EXISTS $tn")
-        deleteDir(new java.io.File(s"$root/$t"))
-        graft.Engine.table(s, dir, t)
-          .repartition(nb, col(k))
-          .write.mode("overwrite")
-          .option("path", s"$root/$t")
-          .bucketBy(nb, k).sortBy(k)
-          .saveAsTable(tn)
-      }
-      StandingIndex.writeMeta(s, root, sig)
-    } else sides.foreach { case (t, k) =>
-      val tn = advTableName(dir, t)
-      if (!s.catalog.tableExists(tn)) {
-        val ddl = s.read.parquet(s"$root/$t").schema.toDDL
-        s.sql(s"""CREATE TABLE $tn ($ddl) USING PARQUET
-                 |CLUSTERED BY ($k) SORTED BY ($k)
-                 |INTO $nb BUCKETS
-                 |LOCATION '$root/$t'""".stripMargin)
-      }
-    }
+    if (!StandingIndex.refresh(s, root, StandingIndex.withLayout(
+        bktSig(s, dir, sides, nb), BktLayout))(
+        writeBucketed(s, dir, root, sides, advTableName(dir, _), nb)))
+      registerStored(s, root, sides, advTableName(dir, _), nb)
   }
 
   /** q194: the WHOLE planner loop as one query — statistics (q179's

@@ -54,12 +54,6 @@ object ClusteredStore {
   private[graft] def clsRoot(dir: String): String =
     StandingIndex.artifactRoot(dir, "cls")
 
-  private[graft] def clsSig(s: SparkSession, dir: String): (Long, Long) = {
-    val (n, sg) = StandingIndex.tableSig(s, dir, "documents",
-      graft.Engine.table(s, dir, "documents").columns.toSeq)
-    (n, Math.floorMod(sg + ClsLayout, StandingIndex.SigMod))
-  }
-
   /** Equi-depth `n_chars` boundaries over any frame carrying
     * (doc_id, n_chars) — the deterministic kmv bottom-k sample (the
     * q173 recipe: reproducible across runs, engines, and
@@ -98,23 +92,17 @@ object ClusteredStore {
     assignZones(docs, boundariesOf(docs))
   }
 
-  private val builtCache = new graft.SessionCache
-
   /** Make the clustered store + zone stats available; reuse on a
     * matching corpus signature.
     */
-  def ensureClustered(s: SparkSession, dir: String): String = {
-    builtCache.getOrElseUpdate(s, dir) {
-      ensureClusteredValidated(s, dir); s.emptyDataFrame
-    }
-    clsRoot(dir)
-  }
+  def ensureClustered(s: SparkSession, dir: String): String =
+    StandingIndex.ensureArtifact(s, clsRoot(dir))(ensureClusteredValidated(s, dir))
 
   /** The validation+build step a NEW session runs (spec hook). */
   private[graft] def ensureClusteredValidated(s: SparkSession, dir: String): Unit = {
     val root = clsRoot(dir)
-    val sig = clsSig(s, dir)
-    if (!StandingIndex.metaFresh(s, root, sig)) {
+    StandingIndex.refresh(s, root, StandingIndex.withLayout(
+        StandingIndex.tableSig(s, dir, "documents"), ClsLayout)) {
       val zoned = withZone(s, dir)
       zoned.write.mode("overwrite").partitionBy("zid")
         .parquet(s"$root/data")
@@ -126,8 +114,6 @@ object ClusteredStore {
           max(col("n_chars")).as("max_chars"),
           count(lit(1)).as("n_docs"))
         .coalesce(1).write.mode("overwrite").parquet(s"$root/zones")
-      // meta LAST: a crashed build can never validate as fresh
-      StandingIndex.writeMeta(s, root, sig)
     }
   }
 

@@ -30,11 +30,9 @@ object MatView {
   private[graft] def mvRoot(dir: String): String =
     StandingIndex.artifactRoot(dir, "mv")
 
-  private[graft] def mvSig(s: SparkSession, dir: String): (Long, Long) = {
-    val (n, sg) = StandingIndex.tableSig(s, dir, "documents",
-      graft.Engine.table(s, dir, "documents").columns.toSeq)
-    (n, Math.floorMod(sg + MvLayout, StandingIndex.SigMod))
-  }
+  private[graft] def mvSig(s: SparkSession, dir: String): (Long, Long) =
+    StandingIndex.withLayout(
+      StandingIndex.tableSig(s, dir, "documents"), MvLayout)
 
   // ---- persisted registration: the sidecar a fresh session reads ----
 
@@ -116,8 +114,6 @@ object MatView {
     }
   }
 
-  private val builtCache = new graft.SessionCache
-
   /** Make the MV available and REGISTER it with the rewrite rule —
     * reuse on a matching corpus signature. Returns the MV parquet
     * path. Registration caches the analyzed MV relation under the
@@ -126,12 +122,11 @@ object MatView {
     * and a multi-session JVM can't cross sessions (ADVICE r12).
     */
   def ensureMv(s: SparkSession, dir: String): String = {
-    builtCache.getOrElseUpdate(s, dir) {
+    val root = StandingIndex.ensureArtifact(s, mvRoot(dir)) {
       ensureMvValidated(s, dir)
       registerRewrite(s, dir)
-      s.emptyDataFrame
     }
-    s"${mvRoot(dir)}/mv"
+    s"$root/mv"
   }
 
   /** Cache + register the analyzed MV relation for [[MvRewrite]]:
@@ -187,16 +182,11 @@ object MatView {
         max(col("max_chars")).as("max_chars"))
 
   /** The validation+build step a NEW session runs (spec hook). */
-  private[graft] def ensureMvValidated(s: SparkSession, dir: String): Unit = {
-    val root = mvRoot(dir)
-    val sig = mvSig(s, dir)
-    if (!StandingIndex.metaFresh(s, root, sig)) {
+  private[graft] def ensureMvValidated(s: SparkSession, dir: String): Unit =
+    StandingIndex.refresh(s, mvRoot(dir), mvSig(s, dir)) {
       mvAggregate(graft.Engine.table(s, dir, "documents"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/mv")
-      // meta LAST: a crashed build can never validate as fresh
-      StandingIndex.writeMeta(s, root, sig)
+        .coalesce(1).write.mode("overwrite").parquet(s"${mvRoot(dir)}/mv")
     }
-  }
 
   /** q195: a MATERIALIZED-VIEW-ANSWERED aggregate — per-language doc
     * counts and char sums, written as the natural corpus aggregate and
@@ -305,13 +295,9 @@ object MatView {
   private[graft] def evRoot(dir: String): String =
     StandingIndex.artifactRoot(dir, "mvev")
 
-  private[graft] def evSig(s: SparkSession, dir: String): (Long, Long) = {
-    val (n, sg) = StandingIndex.tableSig(s, dir, "events",
-      Seq("event_id", "user_id", "event_type"))
-    (n, Math.floorMod(sg + EvLayout, StandingIndex.SigMod))
-  }
-
-  private val evBuiltCache = new graft.SessionCache
+  private[graft] def evSig(s: SparkSession, dir: String): (Long, Long) =
+    StandingIndex.withLayout(StandingIndex.tableSig(s, dir, "events",
+      Seq("event_id", "user_id", "event_type")), EvLayout)
 
   /** A COUNT-ONLY materialized view over a SECOND table — per
     * event_type counts on events. Proves the MvRewrite registry is a
@@ -326,15 +312,13 @@ object MatView {
     * — which is precisely why this view must be count-only.)
     */
   def ensureEventsMv(s: SparkSession, dir: String): String = {
-    evBuiltCache.getOrElseUpdate(s, dir) {
-      val root = evRoot(dir)
-      val sig = evSig(s, dir)
-      if (!StandingIndex.metaFresh(s, root, sig)) {
+    val root = evRoot(dir)
+    StandingIndex.ensureArtifact(s, root) {
+      StandingIndex.refresh(s, root, evSig(s, dir)) {
         graft.Engine.table(s, dir, "events")
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_rows"))
           .coalesce(1).write.mode("overwrite").parquet(s"$root/mv")
-        StandingIndex.writeMeta(s, root, sig)
       }
       // register: cached analyzed relation, exact source path, count-only
       import graft.plans.MvRewrite
@@ -345,9 +329,8 @@ object MatView {
         sumCol = MvRewrite.NoCol, minCol = MvRewrite.NoCol,
         maxCol = MvRewrite.NoCol)
       registerFrom(s, root)
-      s.emptyDataFrame
     }
-    s"${evRoot(dir)}/mv"
+    s"$root/mv"
   }
 
   /** q200: the count-only second view ANSWERING — per-type event
@@ -378,10 +361,8 @@ object MatView {
       Seq("l_orderkey", "l_quantity", "l_returnflag"))
     val (no, so) = StandingIndex.tableSig(s, dir, "orders",
       Seq("o_orderkey", "o_orderpriority"))
-    (nl + no, Math.floorMod(sl * 31L + so + JmLayout, StandingIndex.SigMod))
+    StandingIndex.withLayout((nl + no, sl * 31L + so), JmLayout)
   }
-
-  private val jmBuiltCache = new graft.SessionCache
 
   private def sourcePaths(s: SparkSession, dir: String, table: String): Seq[String] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -447,13 +428,10 @@ object MatView {
     * step up from q195's single-table rewrite.
     */
   def ensureJoinMv(s: SparkSession, dir: String): String = {
-    jmBuiltCache.getOrElseUpdate(s, dir) {
-      val root = jmRoot(dir)
-      val sig = jmSig(s, dir)
-      if (!StandingIndex.metaFresh(s, root, sig)) {
-        jmAggregate(s, dir)
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/mv")
-        StandingIndex.writeMeta(s, root, sig)
+    val root = jmRoot(dir)
+    StandingIndex.ensureArtifact(s, root) {
+      StandingIndex.refresh(s, root, jmSig(s, dir)) {
+        jmAggregate(s, dir).coalesce(1).write.mode("overwrite").parquet(s"$root/mv")
       }
       writeReg(s, root, kind = "star",
         paths = Seq(sourcePaths(s, dir, "lineitem"),
@@ -463,9 +441,8 @@ object MatView {
         factCol = "l_quantity", countCol = "n_rows", factCountCol = "n_qty",
         sumCol = "sum_qty", minCol = "min_qty", maxCol = "max_qty")
       registerFrom(s, root)
-      s.emptyDataFrame
     }
-    s"${jmRoot(dir)}/mv"
+    s"$root/mv"
   }
 
   /** q201: a JOIN answered from the pre-joined view — the user writes
@@ -523,11 +500,9 @@ object MatView {
       Seq("o_orderkey", "o_custkey", "o_orderpriority"))
     val (nc, sc) = StandingIndex.tableSig(s, dir, "customer",
       Seq("c_custkey", "c_mktsegment"))
-    (nl + no + nc,
-      Math.floorMod((sl * 31L + so) * 31L + sc + StLayout, StandingIndex.SigMod))
+    StandingIndex.withLayout(
+      (nl + no + nc, (sl * 31L + so) * 31L + sc), StLayout)
   }
-
-  private val stBuiltCache = new graft.SessionCache
 
   private def stAggregate(s: SparkSession, dir: String): DataFrame =
     graft.Engine.table(s, dir, "lineitem")
@@ -553,13 +528,10 @@ object MatView {
     * shuffle joins and the corpus scan in one rewrite.
     */
   def ensureStarMv(s: SparkSession, dir: String): String = {
-    stBuiltCache.getOrElseUpdate(s, dir) {
-      val root = stRoot(dir)
-      val sig = stSig(s, dir)
-      if (!StandingIndex.metaFresh(s, root, sig)) {
-        stAggregate(s, dir)
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/mv")
-        StandingIndex.writeMeta(s, root, sig)
+    val root = stRoot(dir)
+    StandingIndex.ensureArtifact(s, root) {
+      StandingIndex.refresh(s, root, stSig(s, dir)) {
+        stAggregate(s, dir).coalesce(1).write.mode("overwrite").parquet(s"$root/mv")
       }
       writeReg(s, root, kind = "star",
         paths = Seq(sourcePaths(s, dir, "lineitem"),
@@ -569,9 +541,8 @@ object MatView {
         factCol = "l_quantity", countCol = "n_rows", factCountCol = "n_qty",
         sumCol = "sum_qty", minCol = "min_qty", maxCol = "max_qty")
       registerFrom(s, root)
-      s.emptyDataFrame
     }
-    s"${stRoot(dir)}/mv"
+    s"$root/mv"
   }
 
   /** q217: the STAR answered from the pre-joined cube — written in

@@ -59,29 +59,20 @@ object SimIndex {
   def indexRoot(sfDir: String): String =
     StandingIndex.artifactRoot(sfDir, "sim")
 
-  private val builtCache = new graft.SessionCache
-
   /** Make the similarity artifact available and return its root —
-    * signature-validated cross-session reuse, same discipline as
-    * [[StandingIndex.ensure]]: the stored meta row (written last by
-    * every build) is compared against the current corpus signature
-    * once per (session, dir); match ⇒ reuse, mismatch ⇒ rebuild.
-    * The signature covers the FULL documents table (the standing side
-    * is a pure hash-split of it, so a matching whole-corpus signature
-    * implies an identical standing side).
+    * the [[StandingIndex.ensure]] discipline: reuse while the corpus
+    * signature matches, rebuild otherwise. The signature covers the
+    * FULL documents table (the standing side is a pure hash-split of
+    * it, so a matching whole-corpus signature implies an identical
+    * standing side).
     */
-  def ensure(s: SparkSession, dir: String): String = {
-    builtCache.getOrElseUpdate(s, dir) {
-      ensureValidated(s, dir); s.emptyDataFrame
-    }
-    indexRoot(dir)
-  }
+  def ensure(s: SparkSession, dir: String): String =
+    StandingIndex.ensureArtifact(s, indexRoot(dir))(ensureValidated(s, dir))
 
   /** The validation+build step a NEW session runs (spec hook). */
   private[graft] def ensureValidated(s: SparkSession, dir: String): Unit =
-    if (!StandingIndex.metaFresh(s, indexRoot(dir),
-        StandingIndex.corpusSig(s, dir)))
-      build(s, dir)
+    StandingIndex.refresh(s, indexRoot(dir), StandingIndex.corpusSig(s, dir))(
+      buildFrom(sideDocs(s, dir, delta = false), indexRoot(dir)))
 
   /** Standing-side documents with de-duplicated token arrays (q150's
     * hash split: residue 1 of [[LlmOps.DeltaSplitMod]] is the delta).
@@ -107,18 +98,6 @@ object SimIndex {
     * cost to every run reads as a permanent 3 s query).
     */
   val RebuildKey = "spark.graft.simindex.rebuild"
-
-  private def build(s: SparkSession, dir: String): DataFrame = {
-    val sig = StandingIndex.corpusSig(s, dir)
-    val root = indexRoot(dir)
-    val force = s.conf.getOption(RebuildKey).exists(_.equalsIgnoreCase("true"))
-    if (force || !StandingIndex.metaFresh(s, root, sig)) {
-      buildFrom(sideDocs(s, dir, delta = false), root)
-      // meta last — the commit marker (see StandingIndex.writeMeta)
-      StandingIndex.writeMeta(s, root, sig)
-    }
-    s.emptyDataFrame
-  }
 
   /** Artifact writer over an explicit standing corpus (doc_id, ts) —
     * the fixture build and the stress spec's synthetic-corpus build
@@ -165,9 +144,9 @@ object SimIndex {
     * every future lookup's recall rests on.
     */
   val q165SimIndexBuild: Q = (s, dir) => {
-    build(s, dir)
-    builtCache.put(s, dir, s.emptyDataFrame)
-    val root = indexRoot(dir)
+    if (s.conf.getOption(RebuildKey).exists(_.equalsIgnoreCase("true")))
+      StandingIndex.invalidate(s, indexRoot(dir))
+    val root = ensure(s, dir)
     val nd = s.read.parquet(s"$root/stats")
     val dfT = s.read.parquet(s"$root/df")
     val pfx = s.read.parquet(s"$root/prefix")

@@ -130,11 +130,15 @@ object StandingIndex {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Write the freshness meta row — called LAST in every build, so a
-    * partial/crashed build leaves no matching meta and can never
-    * validate as fresh (the commit-marker discipline).
+  /** [[tableSig]] over every column of `table`. */
+  private[graft] def tableSig(s: SparkSession, dir: String,
+      table: String): (Long, Long) =
+    tableSig(s, dir, table, Engine.table(s, dir, table).columns.toSeq)
+
+  /** Write the freshness meta row. Private: [[refresh]] is its one
+    * caller, so the commit marker is always written last.
     */
-  private[graft] def writeMeta(s: SparkSession, root: String,
+  private def writeMeta(s: SparkSession, root: String,
       sig: (Long, Long)): Unit = {
     import s.implicits._
     Seq((MetaVersion, sig._1, sig._2))
@@ -166,51 +170,78 @@ object StandingIndex {
       sig: (Long, Long)): Boolean =
     readMeta(s, root).contains((MetaVersion, sig._1, sig._2))
 
-  private val builtCache = new graft.SessionCache
+  // ---- THE freshness protocol every standing artifact goes through --
 
-  /** Make the index artifact available and return its root. Once per
-    * (session, dir) the stored artifact's meta row is validated
-    * against the current corpus signature: a match REUSES the artifact
-    * (the build queries q156 at 2.5 s/session were the biggest
-    * recurring cost of the old rebuild-always discipline); a mismatch
-    * — regenerated fixtures, a poisoned write, a layout version bump —
-    * rebuilds. ArtifactReuseSpec pins both directions.
+  /** Validate-build-commit: unless the meta row at `root` already
+    * matches `sig`, run `build` and then write the meta row. Returns
+    * whether it built.
+    *
+    * The meta row is written LAST and is the artifact's commit marker:
+    * a build that dies partway leaves a stale or missing row, which
+    * never validates as fresh, so the next call rebuilds instead of
+    * trusting a partial artifact. `build` may read the old row (the
+    * incremental families fold from it); clearing old files is the
+    * build's business.
     */
-  def ensure(s: SparkSession, dir: String): String = {
-    builtCache.getOrElseUpdate(s, dir) {
-      ensureValidated(s, dir); s.emptyDataFrame
-    }
-    indexRoot(dir)
+  def refresh(s: SparkSession, root: String, sig: (Long, Long))(
+      build: => Unit): Boolean =
+    !metaFresh(s, root, sig) && { build; writeMeta(s, root, sig); true }
+
+  /** Fold an artifact's layout version into its content signature: the
+    * stored files are a function of the inputs AND the recipe, so a
+    * recipe change without a data change must invalidate the store.
+    */
+  def withLayout(sig: (Long, Long), layout: Long): (Long, Long) =
+    (sig._1, Math.floorMod(sig._2 + layout, SigMod))
+
+  /** The once-per-session latch of [[ensureArtifact]]: its presence for
+    * (session, root) means this session already validated the artifact.
+    */
+  private val latch = new graft.SessionCache
+
+  /** Run `validate` — the family's [[refresh]] plus any per-session step
+    * next to it — once per (session, root), and return `root`. A
+    * `validate` that throws sets no latch, so the next call retries.
+    */
+  def ensureArtifact(s: SparkSession, root: String)(validate: => Unit): String = {
+    latch.getOrElseUpdate(s, root) { validate; s.emptyDataFrame }
+    root
   }
+
+  /** Force the next [[ensureArtifact]] on `root` to rebuild: drop the
+    * meta row and this session's latch. The build queries (q156, q165
+    * under [[SimIndex.RebuildKey]]) rebuild through the same path.
+    */
+  private[graft] def invalidate(s: SparkSession, root: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$root/meta")
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    latch.remove(s, root)
+  }
+
+  /** Make the index artifact available and return its root — reused
+    * across sessions while the corpus signature matches (the build
+    * queries q156 at 2.5 s/session were the biggest recurring cost of
+    * the old rebuild-always discipline); regenerated fixtures, a
+    * poisoned write or a layout version bump rebuild.
+    * ArtifactReuseSpec pins both directions.
+    */
+  def ensure(s: SparkSession, dir: String): String =
+    ensureArtifact(s, indexRoot(dir))(ensureValidated(s, dir))
 
   /** The validation+build step a NEW session runs (exposed so the spec
     * can replay "next session" without constructing one).
     */
   private[graft] def ensureValidated(s: SparkSession, dir: String): Unit =
-    if (!metaFresh(s, indexRoot(dir), corpusSig(s, dir)))
-      build(s, dir)
+    refresh(s, indexRoot(dir), corpusSig(s, dir))(build(s, dir))
 
-  /** One corpus scan → three persisted tables. Returns the per-bucket
-    * manifest (pbucket, n_terms, n_postings, n_docs) read back from
-    * the artifact.
+  /** One corpus scan → the three persisted tables. ONE artifact write
+    * path: the one-shot build IS a single-segment overwrite through the
+    * same writer q160's delta append uses.
     */
-  private def build(s: SparkSession, dir: String): DataFrame = {
-    val root = indexRoot(dir)
-    val sig = corpusSig(s, dir)
-    // ONE artifact write path: the one-shot build IS a single-segment
-    // overwrite through the same writer q160's delta append uses
+  private def build(s: SparkSession, dir: String): Unit =
     writeSegment(
       Engine.table(s, dir, "documents").withColumn("tok", expr(LlmOps.toksS)),
-      root, "overwrite")
-    // meta is written LAST: a build that dies mid-write leaves a stale
-    // or missing meta row and therefore re-runs next ensure
-    writeMeta(s, root, sig)
-    readPostings(s, root)
-      .groupBy(col("pbucket"))
-      .agg(countDistinct(col("token")).as("n_terms"),
-        count(lit(1)).as("n_postings"),
-        countDistinct(col("doc_id")).as("n_docs"))
-  }
+      indexRoot(dir), "overwrite")
 
   /** Stored postings under an artifact root, partition column re-typed
     * to the write side's long (partition-value inference yields ints).
@@ -245,9 +276,13 @@ object StandingIndex {
     * manifest aggregation reads the artifact back, not the corpus.
     */
   val q156IndexBuild: Q = (s, dir) => {
-    val manifest = build(s, dir)
-    builtCache.put(s, dir, manifest) // a fresh build IS this session's
-    manifest.orderBy(col("pbucket"))
+    invalidate(s, indexRoot(dir))
+    readPostings(s, ensure(s, dir))
+      .groupBy(col("pbucket"))
+      .agg(countDistinct(col("token")).as("n_terms"),
+        count(lit(1)).as("n_postings"),
+        countDistinct(col("doc_id")).as("n_docs"))
+      .orderBy(col("pbucket"))
   }
 
   /** q157: BM25 as a standing-index LOOKUP — the q80 ranking computed
@@ -422,37 +457,25 @@ object StandingIndex {
             lit(SigMod))).as("postings_sig")) ++ extra): _*)
       .orderBy(col("pbucket"))
 
-  private val incCache = new graft.SessionCache
-
-  /** Build (or reuse this session's) two-segment incremental artifact
-    * at `<indexRoot>_inc` — q160's base-overwrite + delta-append pair —
-    * and return its root. Cached per (session, dir) so q168's
-    * compaction consumes the very artifact q160 built instead of
-    * re-tokenizing the corpus a third time; the artifact lives on disk,
-    * so the cached manifest stays readable for the whole session.
+  /** Build (or reuse) the two-segment incremental artifact at
+    * `<indexRoot>_inc` — q160's base-overwrite + delta-append pair —
+    * and return its root. Latched per session, so q168's compaction
+    * consumes the very artifact q160 built instead of re-tokenizing the
+    * corpus a third time; across sessions it is reused like [[ensure]]
+    * (the two-segment artifact is equally a pure function of the
+    * corpus).
     */
   private[graft] def ensureIncremental(s: SparkSession, dir: String): String = {
     val root = s"${indexRoot(dir)}_inc"
-    // the cache entry is a ran-once LATCH (emptyDataFrame sentinel,
-    // the SimIndex.build discipline) — consumers re-read the on-disk
-    // artifact themselves, nothing consumes a cached frame; across
-    // sessions the meta row validates reuse like `ensure` (the
-    // two-segment artifact is equally a pure function of the corpus)
-    incCache.getOrElseUpdate(s, dir) {
-      val sig = corpusSig(s, dir)
-      if (!metaFresh(s, root, sig)) {
-        val docs = Engine.table(s, dir, "documents")
-          .withColumn("tok", expr(LlmOps.toksS))
-          .withColumn("is_delta",
-            pmod(expr(LlmOps.hashS("concat('seg:', CAST(doc_id AS STRING))")),
-              lit(IncDeltaMod)) === (IncDeltaMod - 1))
-        writeSegment(docs.filter(!col("is_delta")), root, "overwrite")
-        writeSegment(docs.filter(col("is_delta")), root, "append")
-        writeMeta(s, root, sig)
-      }
-      s.emptyDataFrame
-    }
-    root
+    ensureArtifact(s, root)(refresh(s, root, corpusSig(s, dir)) {
+      val docs = Engine.table(s, dir, "documents")
+        .withColumn("tok", expr(LlmOps.toksS))
+        .withColumn("is_delta",
+          pmod(expr(LlmOps.hashS("concat('seg:', CAST(doc_id AS STRING))")),
+            lit(IncDeltaMod)) === (IncDeltaMod - 1))
+      writeSegment(docs.filter(!col("is_delta")), root, "overwrite")
+      writeSegment(docs.filter(col("is_delta")), root, "append")
+    })
   }
 
   val q160IndexDelta: Q = (s, dir) =>

@@ -121,14 +121,6 @@ object TrainingShards {
     */
   private[graft] def metaRoot(outDir: String): String = s"$outDir.artifact"
 
-  private[graft] def shardSig(s: SparkSession, dir: String): (Long, Long) = {
-    val (n, sg) = StandingIndex.tableSig(s, dir, "documents",
-      graft.Engine.table(s, dir, "documents").columns.toSeq)
-    (n, Math.floorMod(sg + ShardLayout, StandingIndex.SigMod))
-  }
-
-  private val builtCache = new graft.SessionCache
-
   /** The shard store as a STANDING ARTIFACT: the write (and the
     * driver-side deterministic rename pass) runs only when the
     * documents corpus' content signature changes — every other session
@@ -140,21 +132,17 @@ object TrainingShards {
     * raw-input DuckDB oracle keeps value-checking the stored path.
     */
   def ensureShards(s: SparkSession, dir: String): String = {
-    builtCache.getOrElseUpdate(s, dir) {
-      ensureShardsValidated(s, dir); s.emptyDataFrame
-    }
+    StandingIndex.ensureArtifact(s, metaRoot(shardOutDir(dir)))(
+      ensureShardsValidated(s, dir))
     shardOutDir(dir)
   }
 
   /** The validation+build step a NEW session runs (spec hook). */
   private[graft] def ensureShardsValidated(s: SparkSession, dir: String): Unit = {
     val out = shardOutDir(dir)
-    val sig = shardSig(s, dir)
-    if (!StandingIndex.metaFresh(s, metaRoot(out), sig)) {
-      write(graft.Engine.table(s, dir, "documents"), out)
-      // meta LAST: a crashed write can never validate as fresh
-      StandingIndex.writeMeta(s, metaRoot(out), sig)
-    }
+    StandingIndex.refresh(s, metaRoot(out), StandingIndex.withLayout(
+      StandingIndex.tableSig(s, dir, "documents"), ShardLayout))(
+      write(graft.Engine.table(s, dir, "documents"), out))
   }
 
   /** q81: full shard round-trip — write the documents table as

@@ -312,4 +312,85 @@ class ArtifactReuseSpec extends AnyFunSuite {
     assert(newestMtime(root) > built,
       "metaless (partial) artifact must rebuild")
   }
+
+  /** A family written on the primitive: the once-per-session latch
+    * around a [[StandingIndex.refresh]] of `sig` salted by `layout`.
+    */
+  private def ensureFamily(s: SparkSession, root: String, sig: => (Long, Long),
+      layout: Long)(build: => Unit): String =
+    StandingIndex.ensureArtifact(s, root)(
+      StandingIndex.refresh(s, root, StandingIndex.withLayout(sig, layout))(build))
+
+  test("ensureArtifact: same data under a bumped layout rebuilds") {
+    val dir = mkCorpus()
+    val root = Files.createTempDirectory("graft_layout_").toString
+    var builds = 0
+    def ensure(s: SparkSession, layout: Long): Unit =
+      ensureFamily(s, root, StandingIndex.corpusSig(s, dir), layout) {
+        builds += 1
+      }
+    def newSession(): SparkSession = {
+      val s2 = spark.newSession(); Engine.install(s2); s2
+    }
+    ensure(spark, 1L)
+    assert(builds == 1)
+    ensure(newSession(), 1L) // same data, same layout: reused
+    assert(builds == 1, "a fresh artifact was rebuilt")
+    ensure(newSession(), 2L) // same data, bumped layout
+    assert(builds == 2, "a layout bump did not rebuild")
+    assert(StandingIndex.metaFresh(spark, root,
+      StandingIndex.withLayout(StandingIndex.corpusSig(spark, dir), 2L)))
+  }
+
+  test("ensureArtifact: a build that throws leaves no meta row and no latch") {
+    val root = Files.createTempDirectory("graft_torn_").toString
+    val sig = (3L, 7L)
+    val err = intercept[IllegalStateException] {
+      ensureFamily(spark, root, sig, 1L) {
+        spark.range(3).write.mode("overwrite").parquet(s"$root/data")
+        throw new IllegalStateException("build died partway")
+      }
+    }
+    assert(err.getMessage == "build died partway")
+    assert(StandingIndex.readMeta(spark, root).isEmpty,
+      "a torn build must leave no meta row")
+    var builds = 0
+    ensureFamily(spark, root, sig, 1L) { builds += 1 }
+    assert(builds == 1, "the same session must retry a torn build")
+    assert(StandingIndex.metaFresh(spark, root, StandingIndex.withLayout(sig, 1L)))
+  }
+
+  test("ensureArtifact: the signature is evaluated once per session") {
+    val root = Files.createTempDirectory("graft_latch_").toString
+    var evals = 0
+    def sig: (Long, Long) = { evals += 1; (5L, 11L) }
+    ensureFamily(spark, root, sig, 0L)(())
+    ensureFamily(spark, root, sig, 0L)(())
+    assert(evals == 1, "a latched call must not evaluate the signature")
+    ensureFamily(spark.newSession(), root, sig, 0L)(())
+    assert(evals == 2, "a new session must revalidate")
+  }
+
+  test("composed snapshot store (q251): reused across sessions; edited corpus rebuilds") {
+    import graft.sources.SnapshotStore
+    val dir = mkCorpus()
+    val root = SnapshotStore.ensureComposed(spark, dir)
+    val built = newestMtime(root)
+    assert(built > 0L)
+    Thread.sleep(1100)
+    val s2 = spark.newSession()
+    Engine.install(s2)
+    assert(SnapshotStore.ensureComposed(s2, dir) == root)
+    assert(newestMtime(root) == built,
+      "fresh composed store was rebuilt instead of reused")
+    poisonCorpus(dir)
+    Thread.sleep(1100)
+    val s3 = spark.newSession()
+    Engine.install(s3)
+    SnapshotStore.ensureComposed(s3, dir)
+    assert(newestMtime(root) > built,
+      "edited corpus did not trigger a rebuild")
+    assert(SnapshotStore.composedSpecOf(s3, root, 2L)
+      .contains(("lang", 8, "doc_id")))
+  }
 }

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GraftExtensions` table). A second builder, a raw rule assignment or
   * a function registration anywhere else would let a query's session
   * depend on which harness or operator ran first — this spec fails on
-  * any of them.
+  * any of them. It also keeps standing artifacts on ONE freshness
+  * protocol (`StandingIndex.ensureArtifact`/`refresh`).
   */
 class InstallGuardSpec extends AnyFunSuite {
 
@@ -38,6 +39,7 @@ class InstallGuardSpec extends AnyFunSuite {
       .exists(p => pattern.r.findFirstIn(text(p)).nonEmpty)
 
   private val Builder = """SparkSession\s*\.\s*builder"""
+  private val LatchValue = """\bemptyDataFrame\b"""
   private val RuleAssign = """extra(?:Optimizations|Strategies)\s*(?:\+\+|:\+|\+)?=(?!=)"""
   private val FunctionRegistration =
     """\b(?:createOrReplaceTempFunction|registerFunction)\s*\(|\budf\s*\.\s*register\s*\("""
@@ -59,5 +61,14 @@ class InstallGuardSpec extends AnyFunSuite {
     assert(matchesIn(FunctionRegistration, "Engine.scala"))
     val bad = offenders(FunctionRegistration, Set("Engine.scala"))
     assert(bad.isEmpty, s"add functions to GraftExtensions' table:\n${bad.mkString("\n")}")
+  }
+
+  test("per-session artifact latches live only in StandingIndex.ensureArtifact") {
+    // an `emptyDataFrame` sentinel anywhere else is a hand-written
+    // per-family latch; new artifacts go through ensureArtifact
+    assert(matchesIn(LatchValue, "StandingIndex.scala"))
+    val bad = offenders(LatchValue, Set("StandingIndex.scala"))
+    assert(bad.isEmpty,
+      s"use StandingIndex.ensureArtifact for standing artifacts:\n${bad.mkString("\n")}")
   }
 }
