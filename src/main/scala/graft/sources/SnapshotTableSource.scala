@@ -170,23 +170,15 @@ final class SnapshotTable(root: String, k: Long, schema: StructType,
       })
   }
 
-  /** The table's DECLARED partitioning: the bucket transform, when
-    * every data file of snapshot k honors one ([[SnapshotStore
-    * .bucketSpecOf]]) — the surface `DESCRIBE` and Spark's write
-    * distribution logic read. The load-bearing twin lives on the SCAN
-    * ([[SnapshotScan.outputPartitioning]]), which is what the
-    * storage-partitioned-join planner actually consumes.
+  /** The table's DECLARED partitioning: snapshot k's key-grouping
+    * transforms ([[SnapshotStore.keyedOf]]) — the surface `DESCRIBE`
+    * and Spark's write distribution logic read. The load-bearing twin
+    * lives on the SCAN ([[SnapshotScan.outputPartitioning]]), which is
+    * what the storage-partitioned-join planner actually consumes.
     */
   override def partitioning(): Array[Transform] =
     if (mlist.isDefined) Array.empty
-    else SnapshotStore.composedSpecOf(SparkSession.active, root, k)
-      .map { case (pc, n, bc) =>
-        Array[Transform](Expressions.identity(pc), Expressions.bucket(n, bc)) }
-      .orElse(SnapshotStore.bucketSpecOf(SparkSession.active, root, k)
-        .map { case (n, by) => Array[Transform](Expressions.bucket(n, by)) })
-      .orElse(SnapshotStore.partSpecOf(SparkSession.active, root, k)
-        .map(by => Array[Transform](Expressions.identity(by))))
-      .getOrElse(Array.empty)
+    else SnapshotStore.keyedOf(SparkSession.active, root, k).transforms
 
   /** SQL `UPDATE` / `MERGE INTO` / predicate `DELETE` — the
     * GROUP-BASED (copy-on-write) row-level protocol: Spark reads the
@@ -325,31 +317,58 @@ final class SnapshotWriteBuilder(root: String, schema: StructType,
   override def truncate(): WriteBuilder = { overwriteAll = true; this }
   override def build(): Write = {
     val s = SparkSession.active
-    // a bucket-, identity- or COMPOSED-clustered table's writes
-    // PRESERVE the layout claim: the write splits per key and the
-    // commit records each file's bucket id / partition value / both.
-    // A DDL-declared layout (CREATE TABLE ... PARTITIONED BY) governs
-    // until data files exist to carry the claim themselves.
-    val cur = SnapshotStore.currentSnapshot(s, root)
-    val cSpec = SnapshotStore.composedSpecOf(s, root, cur)
-      .orElse(SnapshotStore.declaredComposed(s, root))
-    val spec =
-      if (cSpec.isDefined) None
-      else SnapshotStore.bucketSpecOf(s, root, cur)
-        .orElse(SnapshotStore.declaredBucket(s, root))
-    val pSpec =
-      if (cSpec.isDefined || spec.isDefined) None
-      else SnapshotStore.partSpecOf(s, root, cur)
-        .orElse(SnapshotStore.declaredPart(s, root))
-    new SnapshotWrite(root, schema, queryId, overwriteAll, spec, pSpec, cSpec)
+    // a KEYED table's writes PRESERVE the layout claim: the write
+    // splits per key and the commit records each file's partition
+    // value and/or bucket id. A DDL-declared layout (CREATE TABLE ...
+    // PARTITIONED BY) governs until data files carry the claim
+    // themselves.
+    val keyed = SnapshotStore.layoutOf(s, root, SnapshotStore.currentSnapshot(s, root)) match {
+      case kd: SnapshotStore.Keyed => kd
+      case _ => SnapshotStore.declaredLayout(s, root).getOrElse(SnapshotStore.Unkeyed)
+    }
+    new SnapshotWrite(root, schema, queryId, overwriteAll, keyed)
   }
 }
 
 /** One written data file's stats, shipped driver-ward as the commit
-  * message (`allNullIds` marks the open-interval sentinel case).
+  * message (min/max = the open-interval sentinels for all-null ids),
+  * with the partition value and bucket a key-splitting writer routed
+  * it by.
   */
 final case class SnapshotFileCommit(path: String, nRows: Long,
-    minId: Long, maxId: Long, nNulls: Long = 0L) extends WriterCommitMessage
+    minId: Long, maxId: Long, nNulls: Long = 0L,
+    value: Option[String] = None, bucket: Option[Int] = None)
+    extends WriterCommitMessage {
+  private[sources] def stat: SnapshotStore.FileStat =
+    SnapshotStore.FileStat(path, nRows, minId, maxId, Some(nNulls),
+      value = value, bucket = bucket)
+}
+
+/** A key-splitting task's commit message: one [[SnapshotFileCommit]]
+  * per key the task actually saw.
+  */
+final case class SnapshotKeyedCommit(files: Seq[SnapshotFileCommit])
+    extends WriterCommitMessage
+
+object SnapshotKeyedCommit {
+  /** Every non-empty file a write's task messages report. */
+  def filesOf(messages: Array[WriterCommitMessage]): Seq[SnapshotFileCommit] =
+    messages.toSeq.flatMap {
+      case m: SnapshotFileCommit => Seq(m)
+      case m: SnapshotKeyedCommit => m.files
+      case _ => Nil
+    }.filter(_.nRows > 0)
+
+  /** Delete every file the messages report (abort / replayed epoch). */
+  def deleteFiles(messages: Array[WriterCommitMessage]): Unit = {
+    val conf = new Configuration()
+    filesOf(messages).foreach { m =>
+      val p = new Path(m.path)
+      val f = p.getFileSystem(conf)
+      if (f.exists(p)) f.delete(p, false)
+    }
+  }
+}
 
 /** The DSv2 APPEND: executors stream their partitions into immutable
   * parquet files under a token-unique commit directory (the same
@@ -363,9 +382,7 @@ final case class SnapshotFileCommit(path: String, nRows: Long,
   */
 final class SnapshotWrite(root: String, schema: StructType,
     queryId: String = "", overwriteAll: Boolean = false,
-    bucketSpec: Option[(Int, String)] = None,
-    partSpec: Option[String] = None,
-    composedSpec: Option[(String, Int, String)] = None)
+    keyed: SnapshotStore.Keyed = SnapshotStore.Unkeyed)
     extends Write with BatchWrite
     with org.apache.spark.sql.connector.write.streaming.StreamingWrite
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
@@ -383,60 +400,43 @@ final class SnapshotWrite(root: String, schema: StructType,
     * library write path's `repartitionByRange` (spec pins disjoint
     * intervals on a shuffled input).
     *
-    * A BUCKETED table's write clusters by the bucket transform
-    * instead (resolved through the catalog's V2 `bucket` function —
-    * the Iceberg write-distribution shape), so each bucket lands in
-    * one task and the commit is one file per present bucket. The
-    * format-route write (`df.write.format(…)`, no function catalog)
-    * cannot resolve the transform and fails at ANALYSIS — loud by
-    * design: a silently unbucketed commit would void the layout claim
-    * every storage-partitioned join depends on. Bucketed tables write
+    * A KEYED table's write clusters by its transforms instead (the
+    * Iceberg write-distribution shape), so each key lands in one task
+    * and the commit is one file per present key. Identity transforms
+    * resolve with no function catalog, so they work through every
+    * write route; a bucket transform resolves through the catalog's V2
+    * `bucket` function, and the format-route write (`df.write.format(…)`,
+    * no function catalog) fails at ANALYSIS — loud by design: a
+    * silently unbucketed commit would void the layout claim every
+    * storage-partitioned join depends on. Bucketed tables write
     * through the catalog (`INSERT INTO`) or the library.
     */
   override def requiredDistribution():
       org.apache.spark.sql.connector.distributions.Distribution = {
-    import org.apache.spark.sql.connector.expressions.Expressions
-    composedSpec match {
-      case Some((pc, n, bc)) =>
-        // BOTH transforms cluster the write — each task then sees one
-        // (value, bucket) pair and writes one file per pair
-        org.apache.spark.sql.connector.distributions.Distributions.clustered(
-          Array(Expressions.identity(pc), Expressions.bucket(n, bc)))
-      case None => bucketSpec match {
-        case Some((n, by)) =>
-          org.apache.spark.sql.connector.distributions.Distributions.clustered(
-            Array(Expressions.bucket(n, by)))
-        case None => partSpec match {
-          case Some(by) =>
-            // identity transforms resolve with no function catalog, so
-            // this path works through EVERY write route
-            org.apache.spark.sql.connector.distributions.Distributions
-              .clustered(Array(Expressions.identity(by)))
-          case None =>
-            org.apache.spark.sql.connector.distributions.Distributions.ordered(
-              Array(Expressions.sort(Expressions.column("doc_id"),
-                org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)))
-        }
-      }
-    }
+    import org.apache.spark.sql.connector.distributions.Distributions
+    if (keyed.isEmpty)
+      Distributions.ordered(requiredOrdering())
+    else Distributions.clustered(
+      keyed.transforms.toArray[org.apache.spark.sql.connector.expressions.Expression])
   }
   override def requiredOrdering():
-      Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    import org.apache.spark.sql.connector.expressions.Expressions
+      Array[org.apache.spark.sql.connector.expressions.SortOrder] =
     Array(Expressions.sort(Expressions.column("doc_id"),
       org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-  }
   /** Same file-count knob as the library write path's
     * `repartitionByRange(CommitFiles, …)` — production sizes this as
     * commit_bytes / target_file_bytes; pinning it here keeps the DSv2
     * and library commits byte-layout twins (and stops AQE from
-    * coalescing a small commit into one stats-less megafile).
+    * coalescing a small commit into one stats-less megafile). A
+    * bucket-only table pins one task per bucket; a composed one pins
+    * nothing — Spark sizes the clustered exchange, and the writer's
+    * per-(value, bucket) split fixes the file layout.
     */
-  override def requiredNumPartitions(): Int =
-    // composed: no pinned count — Spark sizes the clustered exchange,
-    // and the writer's per-(value, bucket) split fixes the file layout
-    if (composedSpec.isDefined) 0
-    else bucketSpec.map(_._1).getOrElse(SnapshotStore.CommitFiles)
+  override def requiredNumPartitions(): Int = keyed match {
+    case SnapshotStore.Keyed(Some(_), Some(_)) => 0
+    case SnapshotStore.Keyed(None, Some((n, _))) => n
+    case _ => SnapshotStore.CommitFiles
+  }
 
   override def toBatch: BatchWrite = this
   override def toStreaming:
@@ -447,90 +447,27 @@ final class SnapshotWrite(root: String, schema: StructType,
     s"GraftSnapshotWrite(root=$root)"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    SnapshotWriterFactory(dataDir, schema, bucketSpec, partSpec, composedSpec)
+    SnapshotWriterFactory(dataDir, schema, keyed)
 
-  private def commitStats(messages: Array[WriterCommitMessage],
+  /** One commit through [[SnapshotStore.commitStats]]: an overwrite
+    * always commits (an empty SELECT overwrites to the empty table,
+    * per SQL semantics); an all-empty append is a no-op, not an empty
+    * commit.
+    */
+  private def commitFiles(messages: Array[WriterCommitMessage],
       txn: Option[String] = None): Unit = {
-    if (composedSpec.isDefined) {
-      val (pc, n, bc) = composedSpec.get
-      val stats = messages.collect { case m: SnapshotComposedCommit =>
-        m.files.collect { case f if f.nRows > 0 =>
-          (f.path, f.nRows, f.minId, f.maxId, f.nNulls, f.value, f.bucket)
-        }
-      }.flatten
-      if (overwriteAll)
-        SnapshotStore.commitOverwriteStatsComposed(SparkSession.active,
-          root, stats.toIndexedSeq, schema, pc, n, bc, txn)
-      else if (stats.nonEmpty)
-        SnapshotStore.commitAppendStatsComposed(SparkSession.active,
-          root, stats.toIndexedSeq, schema, pc, n, bc, txn)
-      return
-    }
-    bucketSpec match {
-      case Some((n, by)) =>
-        val stats = messages.collect { case m: SnapshotBucketedCommit =>
-          m.files.collect { case f if f.nRows > 0 =>
-            (f.path, f.nRows, f.minId, f.maxId, f.nNulls, f.bucket)
-          }
-        }.flatten
-        if (overwriteAll)
-          SnapshotStore.commitOverwriteStatsBucketed(SparkSession.active,
-            root, stats.toIndexedSeq, schema, n, by, txn)
-        else if (stats.nonEmpty)
-          SnapshotStore.commitAppendStatsBucketed(SparkSession.active,
-            root, stats.toIndexedSeq, schema, n, by, txn)
-      case None if partSpec.isDefined =>
-        val by = partSpec.get
-        val stats = messages.collect { case m: SnapshotPartitionedCommit =>
-          m.files.collect { case f if f.nRows > 0 =>
-            (f.path, f.nRows, f.minId, f.maxId, f.nNulls, f.value)
-          }
-        }.flatten
-        if (overwriteAll)
-          SnapshotStore.commitOverwriteStatsPartitioned(SparkSession.active,
-            root, stats.toIndexedSeq, schema, by, txn)
-        else if (stats.nonEmpty)
-          SnapshotStore.commitAppendStatsPartitioned(SparkSession.active,
-            root, stats.toIndexedSeq, schema, by, txn)
-      case None =>
-        val stats = messages.collect {
-          case m: SnapshotFileCommit if m.nRows > 0 =>
-            (m.path, m.nRows, m.minId, m.maxId, m.nNulls)
-        }
-        if (overwriteAll)
-          // INSERT OVERWRITE: truncate + append as ONE snapshot — the
-          // new manifest list is exactly the new files (an empty SELECT
-          // overwrites to the empty table, per SQL semantics)
-          SnapshotStore.commitOverwriteStats(SparkSession.active, root,
-            stats.toIndexedSeq, schema, txn)
-        // an all-empty append is a no-op, not an empty commit
-        else if (stats.nonEmpty)
-          SnapshotStore.commitAppendStats(SparkSession.active, root,
-            stats.toIndexedSeq, schema, txn)
-    }
+    val stats = SnapshotKeyedCommit.filesOf(messages).map(_.stat)
+    if (overwriteAll || stats.nonEmpty)
+      SnapshotStore.commitStats(SparkSession.active, root,
+        if (keyed.isEmpty) SnapshotStore.Range else keyed,
+        stats, schema, overwriteAll, txn)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    commitStats(messages)
-
-  private def deleteReported(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
-    def drop(path: String): Unit = if (path.nonEmpty) {
-      val p = new Path(path)
-      val f = p.getFileSystem(conf)
-      if (f.exists(p)) f.delete(p, false)
-    }
-    messages.foreach {
-      case m: SnapshotFileCommit => drop(m.path)
-      case m: SnapshotBucketedCommit => m.files.foreach(f => drop(f.path))
-      case m: SnapshotPartitionedCommit => m.files.foreach(f => drop(f.path))
-      case m: SnapshotComposedCommit => m.files.foreach(f => drop(f.path))
-      case _ => ()
-    }
-  }
+    commitFiles(messages)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    deleteReported(messages)
+    SnapshotKeyedCommit.deleteFiles(messages)
 
   // ---- the STREAMING sink: one CAS-committed snapshot per epoch ----
   //
@@ -553,8 +490,7 @@ final class SnapshotWrite(root: String, schema: StructType,
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo):
       org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    SnapshotStreamingWriterFactory(dataDir, schema, bucketSpec, partSpec,
-      composedSpec)
+    SnapshotStreamingWriterFactory(dataDir, schema, keyed)
 
   private def epochMarkerName(epochId: Long): String = {
     val q = if (queryId == null || queryId.isEmpty) "q" else queryId
@@ -579,83 +515,53 @@ final class SnapshotWrite(root: String, schema: StructType,
         // durable commit, so it always means "landed"
         case None => true
       }
-      if (landed) { deleteReported(messages); return } // replay: skip
+      if (landed) { SnapshotKeyedCommit.deleteFiles(messages); return } // replay: skip
       f.delete(marker, false) // crashed attempt's leftover: recommit
     }
-    commitStats(messages, Some(epochMarkerName(epochId)))
+    commitFiles(messages, Some(epochMarkerName(epochId)))
   }
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    deleteReported(messages)
+    SnapshotKeyedCommit.deleteFiles(messages)
 }
 
 final case class SnapshotStreamingWriterFactory(dataDir: String,
-    schema: StructType, bucketSpec: Option[(Int, String)] = None,
-    partSpec: Option[String] = None,
-    composedSpec: Option[(String, Int, String)] = None)
+    schema: StructType, keyed: SnapshotStore.Keyed = SnapshotStore.Unkeyed)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    if (composedSpec.isDefined)
-      new SnapshotComposedWriter(s"$dataDir/e$epochId", schema,
-        partitionId, taskId, composedSpec.get._1, composedSpec.get._2,
-        composedSpec.get._3)
-    else bucketSpec match {
-      case Some((n, by)) =>
-        new SnapshotBucketedWriter(s"$dataDir/e$epochId", schema,
-          partitionId, taskId, n, by)
-      case None if partSpec.isDefined =>
-        new SnapshotPartitionedWriter(s"$dataDir/e$epochId", schema,
-          partitionId, taskId, partSpec.get)
-      case None =>
-        new SnapshotFileWriter(s"$dataDir/e$epochId", schema, partitionId, taskId)
-    }
+    SnapshotWriterFactory(s"$dataDir/e$epochId", schema, keyed)
+      .createWriter(partitionId, taskId)
 }
 
+/** A plain table's tasks write one [[SnapshotFileWriter]] file each; a
+  * keyed table's tasks split through [[SnapshotKeyedWriter]].
+  */
 final case class SnapshotWriterFactory(dataDir: String, schema: StructType,
-    bucketSpec: Option[(Int, String)] = None,
-    partSpec: Option[String] = None,
-    composedSpec: Option[(String, Int, String)] = None)
+    keyed: SnapshotStore.Keyed = SnapshotStore.Unkeyed)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    if (composedSpec.isDefined)
-      new SnapshotComposedWriter(dataDir, schema, partitionId, taskId,
-        composedSpec.get._1, composedSpec.get._2, composedSpec.get._3)
-    else bucketSpec match {
-      case Some((n, by)) =>
-        new SnapshotBucketedWriter(dataDir, schema, partitionId, taskId, n, by)
-      case None if partSpec.isDefined =>
-        new SnapshotPartitionedWriter(dataDir, schema, partitionId, taskId,
-          partSpec.get)
-      case None =>
-        new SnapshotFileWriter(dataDir, schema, partitionId, taskId)
-    }
+    if (keyed.isEmpty) new SnapshotFileWriter(dataDir, schema, partitionId, taskId)
+    else new SnapshotKeyedWriter(dataDir, schema, partitionId, taskId, keyed)
 }
 
-/** One bucketed file's stats inside a [[SnapshotBucketedCommit]]. */
-final case class SnapshotBucketedFile(path: String, nRows: Long,
-    minId: Long, maxId: Long, nNulls: Long, bucket: Int)
-
-/** A bucketed task's commit message: one stats entry per bucket the
-  * task actually saw.
+/** Executor-side KEY-SPLITTING writer: routes each row to the
+  * [[SnapshotFileWriter]] of its (partition value?, bucket?) key — one
+  * file per key the task sees (one, under the keyed required
+  * distribution; the split is still enforced here so the LAYOUT never
+  * depends on how Spark happened to partition). NULL partition values
+  * are refused at the row — the library writer's contract; null bucket
+  * keys route to bucket 0 (`floorMod(key, n)`, [[GraftBucketFunction]]'s
+  * arithmetic exactly).
   */
-final case class SnapshotBucketedCommit(files: Seq[SnapshotBucketedFile])
-    extends WriterCommitMessage
-
-/** Executor-side BUCKET-SPLITTING writer: routes each row to its
-  * bucket's [[SnapshotFileWriter]] (`floorMod(key, n)`, null keys to
-  * bucket 0 — [[GraftBucketFunction]]'s arithmetic exactly). Under the
-  * bucket-clustered required distribution every task sees one bucket
-  * and writes one file; the split is still enforced here so the
-  * LAYOUT never depends on how Spark happened to partition (a task
-  * handed two colliding buckets writes two single-bucket files).
-  */
-final class SnapshotBucketedWriter(dataDir: String, schema: StructType,
-    partitionId: Int, taskId: Long, nBuckets: Int, by: String)
+final class SnapshotKeyedWriter(dataDir: String, schema: StructType,
+    partitionId: Int, taskId: Long, keyed: SnapshotStore.Keyed)
     extends DataWriter[InternalRow] {
-  private val byIdx = schema.fieldIndex(by)
-  private val open = mutable.Map.empty[Int, SnapshotFileWriter]
+  private val pIdx = keyed.part.map(schema.fieldIndex)
+  private val bIdx = keyed.bucket.map { case (_, by) => schema.fieldIndex(by) }
+  private val open =
+    mutable.LinkedHashMap.empty[(Option[String], Option[Int]), SnapshotFileWriter]
   private var fieldOff = -1
 
   override def write(row: InternalRow): Unit = {
@@ -664,145 +570,31 @@ final class SnapshotBucketedWriter(dataDir: String, schema: StructType,
       require(fieldOff >= 0,
         s"write row has ${row.numFields} fields for a ${schema.fields.length}-column schema")
     }
-    val b =
-      if (row.isNullAt(byIdx + fieldOff)) 0
-      else Math.floorMod(row.getLong(byIdx + fieldOff), nBuckets.toLong).toInt
-    open.getOrElseUpdate(b,
-      new SnapshotFileWriter(dataDir, schema, partitionId, taskId,
-        s"-b$b")).write(row)
-  }
-
-  override def commit(): WriterCommitMessage =
-    SnapshotBucketedCommit(open.toSeq.sortBy(_._1).flatMap { case (b, w) =>
-      w.commit() match {
-        case f: SnapshotFileCommit if f.nRows > 0 =>
-          Some(SnapshotBucketedFile(f.path, f.nRows, f.minId, f.maxId,
-            f.nNulls, b))
-        case _ => None
+    val v = pIdx.map { i =>
+      require(!row.isNullAt(i + fieldOff),
+        s"identity-partitioned table: NULL ${schema(i).name} values are not allowed")
+      schema(i).dataType match {
+        case StringType => row.getUTF8String(i + fieldOff).toString
+        case LongType => row.getLong(i + fieldOff).toString
+        case IntegerType => row.getInt(i + fieldOff).toString
+        case other => throw new UnsupportedOperationException(
+          s"identity partition column type: $other")
       }
-    })
-
-  override def abort(): Unit = open.values.foreach(_.abort())
-  override def close(): Unit = open.values.foreach(_.close())
-}
-
-/** One identity-partitioned file's stats inside a
-  * [[SnapshotPartitionedCommit]].
-  */
-final case class SnapshotPartitionedFile(path: String, nRows: Long,
-    minId: Long, maxId: Long, nNulls: Long, value: String)
-
-/** A partitioned task's commit message: one stats entry per partition
-  * value the task actually saw.
-  */
-final case class SnapshotPartitionedCommit(files: Seq[SnapshotPartitionedFile])
-    extends WriterCommitMessage
-
-/** Executor-side VALUE-SPLITTING writer — the identity twin of
-  * [[SnapshotBucketedWriter]]: one file per distinct partition value
-  * the task sees (one, under the identity-clustered required
-  * distribution). NULL partition values are refused at the row — the
-  * same loud contract as [[SnapshotStore.appendPartitioned]].
-  */
-final class SnapshotPartitionedWriter(dataDir: String, schema: StructType,
-    partitionId: Int, taskId: Long, by: String)
-    extends DataWriter[InternalRow] {
-  private val byIdx = schema.fieldIndex(by)
-  private val open = mutable.LinkedHashMap.empty[String, SnapshotFileWriter]
-  private var fieldOff = -1
-
-  override def write(row: InternalRow): Unit = {
-    if (fieldOff < 0) {
-      fieldOff = row.numFields - schema.fields.length
-      require(fieldOff >= 0,
-        s"write row has ${row.numFields} fields for a ${schema.fields.length}-column schema")
     }
-    require(!row.isNullAt(byIdx + fieldOff),
-      s"identity-partitioned table: NULL $by values are not allowed")
-    val v = schema(byIdx).dataType match {
-      case StringType => row.getUTF8String(byIdx + fieldOff).toString
-      case LongType => row.getLong(byIdx + fieldOff).toString
-      case IntegerType => row.getInt(byIdx + fieldOff).toString
-      case other => throw new UnsupportedOperationException(
-        s"identity partition column type: $other")
+    val b = bIdx.map { i =>
+      if (row.isNullAt(i + fieldOff)) 0
+      else Math.floorMod(row.getLong(i + fieldOff), keyed.bucket.get._1.toLong).toInt
     }
-    open.getOrElseUpdate(v,
-      new SnapshotFileWriter(dataDir, schema, partitionId, taskId,
-        s"-p${open.size}")).write(row)
-  }
-
-  override def commit(): WriterCommitMessage =
-    SnapshotPartitionedCommit(open.toSeq.flatMap { case (v, w) =>
-      w.commit() match {
-        case f: SnapshotFileCommit if f.nRows > 0 =>
-          Some(SnapshotPartitionedFile(f.path, f.nRows, f.minId, f.maxId,
-            f.nNulls, v))
-        case _ => None
-      }
-    })
-
-  override def abort(): Unit = open.values.foreach(_.abort())
-  override def close(): Unit = open.values.foreach(_.close())
-}
-
-/** One composed-layout file's stats inside a
-  * [[SnapshotComposedCommit]].
-  */
-final case class SnapshotComposedFile(path: String, nRows: Long,
-    minId: Long, maxId: Long, nNulls: Long, value: String, bucket: Int)
-
-/** A composed task's commit message: one stats entry per
-  * (partition value, bucket) pair the task actually saw.
-  */
-final case class SnapshotComposedCommit(files: Seq[SnapshotComposedFile])
-    extends WriterCommitMessage
-
-/** Executor-side TWO-LEVEL-SPLITTING writer — the composed twin of
-  * [[SnapshotPartitionedWriter]]/[[SnapshotBucketedWriter]]: one file
-  * per distinct (partition value, bucket) pair the task sees (one,
-  * under the composed clustered required distribution; the split is
-  * still enforced here so the LAYOUT never depends on how Spark
-  * happened to partition). NULL partition values are refused at the
-  * row; null bucket keys route to bucket 0 like the bucket writer.
-  */
-final class SnapshotComposedWriter(dataDir: String, schema: StructType,
-    partitionId: Int, taskId: Long, partBy: String, nBuckets: Int,
-    bucketBy: String)
-    extends DataWriter[InternalRow] {
-  private val pIdx = schema.fieldIndex(partBy)
-  private val bIdx = schema.fieldIndex(bucketBy)
-  private val open = mutable.LinkedHashMap.empty[(String, Int), SnapshotFileWriter]
-  private var fieldOff = -1
-
-  override def write(row: InternalRow): Unit = {
-    if (fieldOff < 0) {
-      fieldOff = row.numFields - schema.fields.length
-      require(fieldOff >= 0,
-        s"write row has ${row.numFields} fields for a ${schema.fields.length}-column schema")
-    }
-    require(!row.isNullAt(pIdx + fieldOff),
-      s"composed-partitioned table: NULL $partBy values are not allowed")
-    val v = schema(pIdx).dataType match {
-      case StringType => row.getUTF8String(pIdx + fieldOff).toString
-      case LongType => row.getLong(pIdx + fieldOff).toString
-      case IntegerType => row.getInt(pIdx + fieldOff).toString
-      case other => throw new UnsupportedOperationException(
-        s"composed partition column type: $other")
-    }
-    val b =
-      if (row.isNullAt(bIdx + fieldOff)) 0
-      else Math.floorMod(row.getLong(bIdx + fieldOff), nBuckets.toLong).toInt
     open.getOrElseUpdate((v, b),
       new SnapshotFileWriter(dataDir, schema, partitionId, taskId,
-        s"-x${open.size}")).write(row)
+        s"-k${open.size}")).write(row)
   }
 
   override def commit(): WriterCommitMessage =
-    SnapshotComposedCommit(open.toSeq.flatMap { case ((v, b), w) =>
+    SnapshotKeyedCommit(open.toSeq.flatMap { case ((v, b), w) =>
       w.commit() match {
         case f: SnapshotFileCommit if f.nRows > 0 =>
-          Some(SnapshotComposedFile(f.path, f.nRows, f.minId, f.maxId,
-            f.nNulls, v, b))
+          Some(f.copy(value = v, bucket = b))
         case _ => None
       }
     })
@@ -983,25 +775,13 @@ final class SnapshotReplaceWrite(root: String, scanSnapshot: Long,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     SnapshotWriterFactory(dataDir, schema)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val stats = messages.collect {
-      case m: SnapshotFileCommit if m.nRows > 0 =>
-        (m.path, m.nRows, m.minId, m.maxId, m.nNulls)
-    }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
     SnapshotStore.commitReplaceFiles(SparkSession.active, root,
-      scanSnapshot, op.scannedPaths.toIndexedSeq, stats.toIndexedSeq, schema)
-  }
+      scanSnapshot, op.scannedPaths.toIndexedSeq,
+      SnapshotKeyedCommit.filesOf(messages).map(_.stat), schema)
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
-    messages.foreach {
-      case m: SnapshotFileCommit =>
-        val p = new Path(m.path)
-        val f = p.getFileSystem(conf)
-        if (f.exists(p)) f.delete(p, false)
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    SnapshotKeyedCommit.deleteFiles(messages)
 }
 
 /** DELTA-BASED (merge-on-read) SQL DELETE / UPDATE / MERGE INTO: Spark
@@ -1082,7 +862,7 @@ final class SnapshotDeltaWrite(root: String, scanSnapshot: Long,
     val posFiles = parts.collect {
       case m if m.posRows > 0L => (m.posPath, m.posRows) }
     val dataStats = parts.flatMap(_.dataFile).collect {
-      case f if f.nRows > 0L => (f.path, f.nRows, f.minId, f.maxId, f.nNulls) }
+      case f if f.nRows > 0L => f.stat }
     // a mutation matching nothing commits nothing
     if (posFiles.nonEmpty || dataStats.nonEmpty) {
       if (dataStats.isEmpty)
@@ -1241,20 +1021,27 @@ final class SnapshotScanBuilder(root: String, k: Long, tableSchema: StructType,
   private var required: StructType = tableSchema
   private var aggPlan: Option[(StructType, Array[Array[Any]])] = None
 
-  /** The category-clustered store's declared clustering column, if
-    * snapshot k's manifest carries string bounds (one metadata read).
+  /** Snapshot k's layout (branch heads carry no layout claim). */
+  private lazy val layout: SnapshotStore.Layout =
+    if (mlist.isDefined) SnapshotStore.Range
+    else SnapshotStore.layoutOf(SparkSession.active, root, k)
+
+  /** The category-clustered store's clustering column, whose string
+    * bounds prune equality/IN on it.
     */
-  private lazy val catCol: Option[String] =
-    if (mlist.isDefined) None // branch heads carry no clustering claim
-    else SnapshotStore.catColOf(SparkSession.active, root, k)
+  private lazy val catCol: Option[String] = layout match {
+    case SnapshotStore.Cat(by) => Some(by)
+    case _ => None
+  }
 
   /** The identity-partition column, if the snapshot declares one —
     * equality/IN on it prunes files by EXACT per-file partition value
     * (the hive partition-pruning contract).
     */
-  private lazy val partColB: Option[String] =
-    if (mlist.isDefined) None
-    else SnapshotStore.partSpecOf(SparkSession.active, root, k)
+  private lazy val partColB: Option[String] = layout match {
+    case SnapshotStore.Keyed(part, _) => part
+    case _ => None
+  }
 
   /** Intersection of every pushed equality/IN value set on the
     * partition column; None = unconstrained.
@@ -1591,7 +1378,7 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     * partition planning, and a runtime-filtered re-plan. O(#files)
     * driver metadata, the Iceberg planner shape.
     */
-  private lazy val mRows: (Array[org.apache.spark.sql.Row], Boolean, Boolean) = {
+  private lazy val mRows: (Array[org.apache.spark.sql.Row], StructType) = {
     val s = SparkSession.active
     import org.apache.spark.sql.functions.col
     // a branch read resolves through its manifest-list override (the
@@ -1608,12 +1395,10 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
             m.withColumn("kind", org.apache.spark.sql.functions
               .coalesce(col("kind"), org.apache.spark.sql.functions.lit("data")))
           else m.withColumn("kind", org.apache.spark.sql.functions.lit("data"))
-        (withKind.collect(), m.columns.contains("min_chars"),
-          m.columns.contains("min_cat"))
+        (withKind.collect(), withKind.schema)
       case None =>
         val (schema, rows) = SnapshotStore.manifestRowsOf(s, root, k)
-        (rows.toArray, schema.fieldNames.contains("min_chars"),
-          schema.fieldNames.contains("min_cat"))
+        (rows.toArray, schema)
     }
   }
 
@@ -1633,7 +1418,7 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     */
   override def estimateStatistics(): Statistics = statsCache
   private lazy val statsCache: Statistics = {
-    val (rows, _, _) = mRows
+    val (rows, _) = mRows
     val kept = rows.filter(r => r.getAs[String]("kind") == "data" && hits(r))
     val deleted = rows.iterator
       .filter(_.getAs[String]("kind") != "data")
@@ -1664,147 +1449,60 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     }
   }
 
-  /** The snapshot's bucket layout, derived from the ALREADY-COLLECTED
-    * manifest rows (no second metadata pass): Some((n, col)) iff every
-    * data file declares the same spec with a non-null bucket id. A
-    * row-level-operation scan never reports one — its replace-commit
-    * write is not bucket-preserving, so claiming alignment there could
-    * let Spark skip a shuffle the rewrite actually needs.
+  /** The snapshot's key grouping, read from the ALREADY-COLLECTED
+    * manifest rows (no second metadata pass) by the store's one layout
+    * reader ([[SnapshotStore.layoutOfRows]]): a claim every data file
+    * honors. A branch read and a row-level-operation scan never report
+    * one — the replace-commit write is not key-preserving, so claiming
+    * alignment there could let Spark skip a shuffle the rewrite
+    * actually needs.
     */
-  private lazy val rawBucketClaim: Option[(Int, String)] = {
-    if (mlist.isDefined || rowLevelOp.isDefined) None
+  private lazy val keyed: SnapshotStore.Keyed =
+    if (mlist.isDefined || rowLevelOp.isDefined) SnapshotStore.Unkeyed
     else {
-      val (rows, _, _) = mRows
-      val data = rows.filter(_.getAs[String]("kind") == "data")
-      if (data.isEmpty) None
-      else {
-        val sch = data.head.schema
-        if (!sch.fieldNames.contains("bucket_id") ||
-          !sch.fieldNames.contains("bucket_n") ||
-          !sch.fieldNames.contains("bucket_col")) None
-        else if (data.exists(r => r.isNullAt(r.fieldIndex("bucket_id")) ||
-          r.isNullAt(r.fieldIndex("bucket_n")) ||
-          r.isNullAt(r.fieldIndex("bucket_col")))) None
-        else {
-          val specs = data.map(r =>
-            (r.getAs[Int]("bucket_n"), r.getAs[String]("bucket_col"))).distinct
-          if (specs.length == 1) Some(specs.head) else None
-        }
+      val (rows, schema) = mRows
+      SnapshotStore.layoutOfRows(schema, rows.toIndexedSeq) match {
+        case kd: SnapshotStore.Keyed => kd
+        case _ => SnapshotStore.Unkeyed
       }
     }
-  }
 
-  private lazy val rawPartClaim: Option[String] = {
-    if (mlist.isDefined || rowLevelOp.isDefined) None
-    else {
-      val (rows, _, _) = mRows
-      val data = rows.filter(_.getAs[String]("kind") == "data")
-      if (data.isEmpty) None
-      else {
-        val sch = data.head.schema
-        if (!sch.fieldNames.contains("part_col") ||
-          !sch.fieldNames.contains("part_val")) None
-        else if (data.exists(r => r.isNullAt(r.fieldIndex("part_col")) ||
-          r.isNullAt(r.fieldIndex("part_val")))) None
-        else {
-          val cols = data.map(_.getAs[String]("part_col")).distinct
-          if (cols.length == 1) Some(cols.head) else None
-        }
-      }
-    }
-  }
-
-  /** The COMPOSED layout (identity × bucket — VERDICT r16
-    * what's-missing 2): both claims held by every data file. Wins the
-    * dispatch over either single-level claim (which a composed store
-    * also satisfies): the scan reports the two-transform key grouping,
-    * so partition-column rollups AND bucket-key SPJs both skip their
-    * exchanges on the same table.
+  /** (partition value?, bucket id?) → its STATICALLY-planned data files
+    * (pushed bounds applied; runtime join keys NOT): group membership
+    * must be stable between `outputPartitioning()` and a runtime-
+    * filtered re-plan, so a runtime filter may empty a group's file
+    * list but never remove the group — `KeyGroupedPartitioning
+    * .numPartitions` stays the number the exchange planner already
+    * committed to.
     */
-  private lazy val composedSpec: Option[(String, Int, String)] =
-    for { p <- rawPartClaim; nb <- rawBucketClaim } yield (p, nb._1, nb._2)
-
-  /** The snapshot's bucket-ONLY layout (composed stores report the
-    * two-transform grouping instead).
-    */
-  private lazy val bucketSpec: Option[(Int, String)] =
-    if (composedSpec.isDefined) None else rawBucketClaim
-
-  /** The snapshot's identity-partition layout (part_col), when every
-    * data file honors one and no bucket or composed layout claims
-    * first. Identity transforms resolve WITHOUT a function catalog,
-    * so this reporting elides exchanges through any read route,
-    * including plain `format().load()` temp views.
-    */
-  private lazy val partSpec: Option[String] =
-    if (composedSpec.isDefined || bucketSpec.isDefined) None
-    else rawPartClaim
-
-  /** Partition value → its statically-planned data files — the
-    * identity twin of [[bucketGroups]] (same stability contract under
-    * runtime re-plans).
-    */
-  private lazy val partGroups: Array[(String, Array[org.apache.spark.sql.Row])] = {
-    val (rows, _, _) = mRows
+  private lazy val keyGroups:
+      Array[((Option[String], Option[Int]), Array[org.apache.spark.sql.Row])] = {
+    val (rows, _) = mRows
     rows.filter(r => r.getAs[String]("kind") == "data" && staticHits(r))
-      .groupBy(_.getAs[String]("part_val")).toArray.sortBy(_._1)
-  }
-
-  /** Bucket id → its STATICALLY-planned data files (pushed bounds
-    * applied; runtime join keys NOT): group membership must be stable
-    * between `outputPartitioning()` and a runtime-filtered re-plan, so
-    * a runtime filter may empty a group's file list but never remove
-    * the group — `KeyGroupedPartitioning.numPartitions` stays the
-    * number the exchange planner already committed to.
-    */
-  private lazy val bucketGroups: Array[(Int, Array[org.apache.spark.sql.Row])] = {
-    val (rows, _, _) = mRows
-    rows.filter(r => r.getAs[String]("kind") == "data" && staticHits(r))
-      .groupBy(_.getAs[Int]("bucket_id")).toArray.sortBy(_._1)
-  }
-
-  /** (partition value, bucket id) → its statically-planned data files
-    * — the composed-layout key groups (same stability contract).
-    */
-  private lazy val composedGroups:
-      Array[((String, Int), Array[org.apache.spark.sql.Row])] = {
-    val (rows, _, _) = mRows
-    rows.filter(r => r.getAs[String]("kind") == "data" && staticHits(r))
-      .groupBy(r => (r.getAs[String]("part_val"), r.getAs[Int]("bucket_id")))
+      .groupBy(r => (keyed.part.map(_ => r.getAs[String]("part_val")),
+        keyed.bucket.map(_ => r.getAs[Int]("bucket_id"))))
       .toArray.sortBy(_._1)
   }
 
-  /** KEY-GROUPED OUTPUT (`SupportsReportPartitioning`): a bucketed
-    * snapshot reports `KeyGroupedPartitioning(bucket(n, key))`, one
-    * partition per present bucket — what Spark's storage-partitioned
-    * join consumes to align two co-bucketed tables WITHOUT an exchange
-    * on either side (`spark.sql.sources.v2.bucketing.enabled`). The
-    * transform resolves through the catalog's V2 `bucket` function
+  /** KEY-GROUPED OUTPUT (`SupportsReportPartitioning`): a keyed
+    * snapshot reports `KeyGroupedPartitioning` over its transforms
+    * (identity first, bucket second — both sides of an SPJ report the
+    * same order), one partition per present key — what Spark's
+    * storage-partitioned join consumes to align two co-keyed tables
+    * WITHOUT an exchange on either side
+    * (`spark.sql.sources.v2.bucketing.enabled`), and what lets a GROUP
+    * BY on the partition column skip its exchange. A bucket transform
+    * resolves through the catalog's V2 `bucket` function
     * ([[GraftBucketFunction]]), whose arithmetic is the writer's
-    * `floorMod(key, n)` exactly.
+    * `floorMod(key, n)` exactly; identity needs no catalog.
     */
   override def outputPartitioning():
       org.apache.spark.sql.connector.read.partitioning.Partitioning =
-    composedSpec match {
-      case Some((pc, n, bc)) =>
-        // the TWO-TRANSFORM grouping: identity(part) first, bucket
-        // second — both sides of an SPJ must report the same order
-        new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-          Array(Expressions.identity(pc), Expressions.bucket(n, bc)),
-          composedGroups.length)
-      case None => bucketSpec match {
-        case Some((n, by)) =>
-          new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-            Array(Expressions.bucket(n, by)), bucketGroups.length)
-        case None => partSpec match {
-          case Some(by) =>
-            new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-              Array(Expressions.identity(by)), partGroups.length)
-          case None =>
-            new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
-        }
-      }
-    }
+    if (keyed.isEmpty)
+      new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
+    else new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
+      keyed.transforms.toArray[org.apache.spark.sql.connector.expressions.Expression],
+      keyGroups.length)
 
   /** Whether a data-file manifest row survives the pushed bounds (and
     * any runtime join keys) — shared by statistics and planning.
@@ -1817,7 +1515,9 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     * filter can never change the group count.
     */
   private def staticHits(r: org.apache.spark.sql.Row): Boolean = {
-    val (_, has2D, hasCat) = mRows
+    val (_, schema) = mRows
+    val has2D = schema.fieldNames.contains("min_chars")
+    val hasCat = schema.fieldNames.contains("min_cat")
     def live(c: String, loF: String, hiF: String): Boolean =
       bounds.get(c) match {
         case Some((lo, hi)) =>
@@ -1876,7 +1576,7 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     * per-partition copy (VERDICT r15 what's-wrong 1).
     */
   private lazy val eqDeleteMap: (Array[Long], Array[Long]) = {
-    val (rows, _, _) = mRows
+    val (rows, _) = mRows
     val delRows = rows.filter(_.getAs[String]("kind") == "delete")
     if (delRows.isEmpty) (Array.empty[Long], Array.empty[Long])
     else {
@@ -1895,7 +1595,7 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val s = SparkSession.active
-    val (rows, _, _) = mRows
+    val (rows, _) = mRows
     // FILE PRUNING from the manifest stats — the pushed bounds decide
     // which files can possibly hold a matching row (1-D always, both
     // dimensions on a Z store); [[hits]] is shared with statistics
@@ -1982,55 +1682,35 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
           Array.empty[Long]), len,
         eqFiles, if (posPerTask) allPosPaths else Nil, fLo, fHi)
     }
-    composedSpec match {
-      case Some((pc, _, _)) =>
-        // one KEY GROUP per present (value, bucket) pair — the
-        // composed SPJ/rollup contract; runtime keys and partition-
-        // value pruning empty a group's files but never drop the group
-        val kt = tableSchema.fields.find(_.name == pc)
-          .map(_.dataType).getOrElse(StringType)
-        return composedGroups.map { case ((v, b), rs) =>
-          SnapshotComposedPartition(v, kt, b,
-            rs.filter(runtimeHits).map(filePart).toSeq): InputPartition
-        }
-      case None => ()
-    }
-    bucketSpec match {
-      case Some(_) =>
-        // one KEY GROUP per present bucket (HasPartitionKey); runtime
-        // keys prune files WITHIN a group but never drop the group —
-        // the reported numPartitions must survive the re-plan
-        bucketGroups.map { case (b, rs) =>
-          SnapshotBucketPartition(b,
-            rs.filter(runtimeHits).map(filePart).toSeq): InputPartition
-        }
-      case None => partSpec match {
-        case Some(by) =>
-          val kt = tableSchema.fields.find(_.name == by)
-            .map(_.dataType).getOrElse(StringType)
-          partGroups.map { case (v, rs) =>
-            SnapshotValuePartition(v, kt,
-              rs.filter(runtimeHits).map(filePart).toSeq): InputPartition
-          }
-        case None =>
-          // LIMIT file-prefix truncation — only when nothing else can
-          // drop rows (the prefix must deliver AT LEAST `n` rows;
-          // Spark's retained limit trims the excess)
-          val limited = limitHint match {
-            case Some(n) if bounds.isEmpty && strBounds.isEmpty &&
-                partVals.isEmpty && runtimeKeys.isEmpty &&
-                delRows.isEmpty && posRows.isEmpty =>
-              var acc = 0L
-              chosen.takeWhile { r =>
-                val keep = acc < n
-                acc += r.getAs[Long]("n_rows")
-                keep
-              }
-            case _ => chosen
-          }
-          SnapshotTableSource.lastPlannedFiles.put(root, limited.length)
-          limited.map(r => filePart(r): InputPartition)
+    if (!keyed.isEmpty) {
+      // one KEY GROUP per present key (HasPartitionKey); runtime keys
+      // and partition-value pruning empty a group's files but never
+      // drop the group — the reported numPartitions must survive the
+      // re-plan
+      val kt = keyed.part.flatMap(p => tableSchema.fields.find(_.name == p))
+        .map(_.dataType).getOrElse(StringType)
+      keyGroups.map { case ((v, b), rs) =>
+        SnapshotKeyPartition(v, kt, b,
+          rs.filter(runtimeHits).map(filePart).toSeq): InputPartition
       }
+    } else {
+      // LIMIT file-prefix truncation — only when nothing else can
+      // drop rows (the prefix must deliver AT LEAST `n` rows;
+      // Spark's retained limit trims the excess)
+      val limited = limitHint match {
+        case Some(n) if bounds.isEmpty && strBounds.isEmpty &&
+            partVals.isEmpty && runtimeKeys.isEmpty &&
+            delRows.isEmpty && posRows.isEmpty =>
+          var acc = 0L
+          chosen.takeWhile { r =>
+            val keep = acc < n
+            acc += r.getAs[Long]("n_rows")
+            keep
+          }
+        case _ => chosen
+      }
+      SnapshotTableSource.lastPlannedFiles.put(root, limited.length)
+      limited.map(r => filePart(r): InputPartition)
     }
   }
 
@@ -2041,7 +1721,7 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     // or broadcast structure); the threshold re-check here mirrors
     // planInputPartitions' decision without holding scan state
     val eqRowsTotal = {
-      val (rows, _, _) = mRows
+      val (rows, _) = mRows
       rows.filter(_.getAs[String]("kind") == "delete")
         .map(_.getAs[Long]("n_rows")).sum
     }
@@ -2052,7 +1732,7 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     // scan-uniform columnar decision (Spark refuses mixed partitions):
     // no metadata columns, no residual bound enforcement, and no live
     // delete file of either kind anywhere in the snapshot
-    val (rows, _, _) = mRows
+    val (rows, _) = mRows
     val anyDeletes = rows.exists(_.getAs[String]("kind") != "data")
     val columnar = bounds.isEmpty && !anyDeletes &&
       !required.fieldNames.exists(SnapshotVectorCore.MetaCols)
@@ -2061,52 +1741,26 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
   }
 }
 
-/** One KEY GROUP of a bucketed snapshot: every data file holding
-  * bucket `bucket`'s rows. `HasPartitionKey` is the executor-side half
-  * of the storage-partitioned-join contract — Spark aligns groups
-  * with equal keys across the two scans instead of exchanging rows.
+/** One KEY GROUP of a keyed snapshot: every data file holding one
+  * (partition value?, bucket?) key's rows. `HasPartitionKey` is the
+  * executor-side half of the storage-partitioned-join contract — Spark
+  * aligns groups with equal keys across the two scans instead of
+  * exchanging rows. The key row matches the scan's transforms: the
+  * identity value first — carried canonically as a string in the
+  * manifest and re-typed by `keyType` (the table schema's type for the
+  * partition column), so a LONG-partitioned store's joins and exchange
+  * elision see genuine longs — then the bucket id.
   */
-final case class SnapshotBucketPartition(bucket: Int,
+final case class SnapshotKeyPartition(value: Option[String],
+    keyType: DataType, bucket: Option[Int],
     files: Seq[SnapshotFilePartition]) extends InputPartition
     with HasPartitionKey {
   override def partitionKey(): InternalRow =
-    new GenericInternalRow(Array[Any](bucket))
-}
-
-/** One KEY GROUP of an identity-partitioned snapshot: every data file
-  * holding partition value `value`'s rows. The manifest carries the
-  * value canonically as a string; `keyType` (the table schema's type
-  * for the partition column) re-types the key row, so a LONG-
-  * partitioned store's storage-partitioned joins and exchange elision
-  * see genuine longs.
-  */
-final case class SnapshotValuePartition(value: String, keyType: DataType,
-    files: Seq[SnapshotFilePartition]) extends InputPartition
-    with HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(Array[Any](keyType match {
-      case LongType => value.toLong
-      case IntegerType => value.toInt
-      case _ => UTF8String.fromString(value)
-    }))
-}
-
-/** One KEY GROUP of a COMPOSED (identity × bucket) snapshot: every
-  * data file holding (partition value, bucket)'s rows. The two-field
-  * key row matches the scan's two-transform `KeyGroupedPartitioning`
-  * — identity value first (re-typed from the table schema), bucket id
-  * second.
-  */
-final case class SnapshotComposedPartition(value: String,
-    keyType: DataType, bucket: Int,
-    files: Seq[SnapshotFilePartition]) extends InputPartition
-    with HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(Array[Any](keyType match {
-      case LongType => value.toLong
-      case IntegerType => value.toInt
-      case _ => UTF8String.fromString(value)
-    }, bucket))
+    new GenericInternalRow((value.map[Any](v => keyType match {
+      case LongType => v.toLong
+      case IntegerType => v.toInt
+      case _ => UTF8String.fromString(v)
+    }).toSeq ++ bucket).toArray)
 }
 
 /** The connector's reader factory: every data file streams through
@@ -2148,9 +1802,7 @@ final class SnapshotReaderFactory(
   private def filesOf(partition: InputPartition): Seq[SnapshotFilePartition] =
     partition match {
       case f: SnapshotFilePartition => Seq(f)
-      case b: SnapshotBucketPartition => b.files
-      case v: SnapshotValuePartition => v.files
-      case c: SnapshotComposedPartition => c.files
+      case kp: SnapshotKeyPartition => kp.files
     }
 
   /** Columnar iff the SCAN decided no per-row work is needed anywhere

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * a function registration anywhere else would let a query's session
   * depend on which harness or operator ran first — this spec fails on
   * any of them. It also keeps standing artifacts on ONE freshness
-  * protocol (`StandingIndex.ensureArtifact`/`refresh`).
+  * protocol (`StandingIndex.ensureArtifact`/`refresh`), and snapshot
+  * layouts on ONE layout value (`SnapshotStore.layoutOf`).
   */
 class InstallGuardSpec extends AnyFunSuite {
 
@@ -41,6 +42,7 @@ class InstallGuardSpec extends AnyFunSuite {
   private val Builder = """SparkSession\s*\.\s*builder"""
   private val LatchValue = """\bemptyDataFrame\b"""
   private val RuleAssign = """extra(?:Optimizations|Strategies)\s*(?:\+\+|:\+|\+)?=(?!=)"""
+  private val LayoutColumn = """"(?:bucket_col|part_col|cat_col)""""
   private val FunctionRegistration =
     """\b(?:createOrReplaceTempFunction|registerFunction)\s*\(|\budf\s*\.\s*register\s*\("""
 
@@ -70,5 +72,14 @@ class InstallGuardSpec extends AnyFunSuite {
     val bad = offenders(LatchValue, Set("StandingIndex.scala"))
     assert(bad.isEmpty,
       s"use StandingIndex.ensureArtifact for standing artifacts:\n${bad.mkString("\n")}")
+  }
+
+  test("snapshot layout claims are decoded only in SnapshotStore") {
+    // a manifest layout column read anywhere else is a second layout
+    // detector; readers go through SnapshotStore.layoutOf
+    assert(matchesIn(LayoutColumn, "SnapshotStore.scala"))
+    val bad = offenders(LayoutColumn, Set("SnapshotStore.scala"))
+    assert(bad.isEmpty,
+      s"read layouts through SnapshotStore.layoutOf:\n${bad.mkString("\n")}")
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.SnapshotStore
+import graft.sources.{SnapshotStore, SnapshotTableSource}
 
 /** q203–q205 — the snapshot-manifest store: manifest-last commits
   * (torn writes invisible), time travel by manifest, file-level diff,
@@ -1491,6 +1491,62 @@ class SnapshotStoreSpec extends AnyFunSuite {
       assert(SnapshotStore.readCat(spark, root, cur, v).count() == n, s"readCat($v)")
       assert(dsv2.filter(col("lang") === v).count() == n, s"DSv2 lang = $v")
       assert(dsv2.filter(col("lang").isin(v, "a")).count() == n, s"DSv2 lang IN ($v, a)")
+    }
+  }
+
+  test("one layout value: compact, binPack and foldDeletes keep every layout's rows, layout and pruning (null ids included)") {
+    import SnapshotStore.{Cat, Keyed, Range, Z}
+    val base = docs.select(col("doc_id"), col("lang"), col("n_chars"))
+    // 7/8 of the first commit's ids are NULL, so some files hold only
+    // null ids: every writer (Z included) records the open interval
+    val first = base.filter(pmod(col("doc_id"), lit(2)) === 0)
+      .withColumn("doc_id", when(pmod(col("doc_id"), lit(8)) === 0, col("doc_id")))
+    val second = base.filter(pmod(col("doc_id"), lit(2)) === 1)
+    val small = base.filter(col("doc_id") < 12) // a small commit for binPack
+    val idPred = col("doc_id").between(1, 2)
+    val dePred = col("lang") === "de"
+    val cases: Seq[(SnapshotStore.Layout, org.apache.spark.sql.Column)] = Seq(
+      (Range, idPred),
+      (Z, col("doc_id").between(1, 60) && col("n_chars").between(47, 110)),
+      (Cat("lang"), dePred),
+      (Keyed(None, Some((8, "doc_id"))), idPred),
+      (Keyed(Some("lang"), None), dePred),
+      (Keyed(Some("lang"), Some((8, "doc_id"))), dePred))
+    for ((layout, pred) <- cases) {
+      val root = Files.createTempDirectory("graft_layout_").toString + "/store"
+      Seq(first, second, small).foreach(SnapshotStore.append(spark, root, _, layout))
+      def check(op: String, before: Long, after: Long): Unit = {
+        val label = s"$layout after $op"
+        assert(after == before + 1, s"$label must commit")
+        assert(SnapshotStore.layoutOf(spark, root, after) == layout, s"$label: layout")
+        assert(rows(SnapshotStore.readSnapshot(spark, root, after)) ==
+          rows(SnapshotStore.readSnapshot(spark, root, before)), s"$label: rows")
+        val want = rows(SnapshotStore.readSnapshot(spark, root, after).filter(pred))
+        val got = spark.read.format("graft.sources.SnapshotTableSource")
+          .option("root", root).option("snapshot", after.toString).load()
+          .filter(pred)
+        assert(rows(got) == want, s"$label: DSv2 $pred")
+        val nFiles = SnapshotStore.metaFiles(spark, root, after)
+          .filter(col("kind") === "data").count()
+        assert(SnapshotTableSource.lastPlannedFiles.get(root) < nFiles,
+          s"$label: $pred must prune the $nFiles files")
+        layout match {
+          case Z => assert(rows(SnapshotStore.readRange2D(spark, root, after,
+            1L, 60L, 47L, 110L)) == want, s"$label: readRange2D")
+          case Cat(_) => assert(rows(SnapshotStore.readCat(spark, root, after, "de")) ==
+            want, s"$label: readCat")
+          case _ => ()
+        }
+      }
+      val k0 = SnapshotStore.currentSnapshot(spark, root)
+      assert(SnapshotStore.layoutOf(spark, root, k0) == layout)
+      val minRows = SnapshotStore.manifest(spark, root, k0)
+        .filter(col("commit_id") === k0).agg(max(col("n_rows"))).head().getLong(0) + 1L
+      check("binPack", k0, SnapshotStore.binPack(spark, root, minRows, minRows))
+      val k1 = SnapshotStore.deleteKeys(spark, root,
+        base.filter(pmod(col("doc_id"), lit(7)) === 0).select("doc_id"))
+      check("foldDeletes", k1, SnapshotStore.foldDeletes(spark, root))
+      check("compact", k1 + 1, SnapshotStore.compact(spark, root))
     }
   }
 }
