@@ -348,7 +348,7 @@ object SnapshotProcedures {
     },
     proc("vacuum", "delete unreferenced files older than older_than_ms",
       Seq("table" -> StringType, "older_than_ms" -> LongType),
-      Seq("removed" -> "reclaimed file count")) { (s, base, in) =>
+      Seq("removed" -> "reclaimed files and emptied commit dirs")) { (s, base, in) =>
       Seq(SnapshotStore.vacuum(s, s"$base/${str(in, 0)}", in.getLong(1))
         .length.toLong)
     },

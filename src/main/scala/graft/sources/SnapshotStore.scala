@@ -809,12 +809,7 @@ object SnapshotStore {
           .write.mode("overwrite").parquet(dataDir)
     }
     val f = fs(s, root)
-    def parquetFiles(p: Path): Seq[String] = f.listStatus(p).toSeq.flatMap { st =>
-      if (st.isDirectory) parquetFiles(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath.toString)
-      else Nil
-    }
-    val files = parquetFiles(new Path(dataDir))
+    val files = parquetUnder(s, root, new Path(dataDir)).map(_.getPath.toString)
     if (files.isEmpty) return Nil
     val layoutAggs: Seq[Column] = layout match {
       case Z => Seq(min(col("n_chars")).cast("long"), max(col("n_chars")).cast("long"))
@@ -870,6 +865,18 @@ object SnapshotStore {
       }
     }
   }
+
+  /** Every `.parquet` file at any depth under `dir` — a keyed commit
+    * nests its files under `__gpart=<v>/` and `__gbucket=<b>/`. Paths
+    * are the `listStatus` strings manifest rows record.
+    */
+  private def parquetUnder(s: SparkSession, root: String,
+      dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs(s, root).listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) parquetUnder(s, root, st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+      else Nil
+    }
 
   /** A committed file's on-disk length, recorded into its manifest row
     * at commit time (the Iceberg `file_size_in_bytes` shape) — one
@@ -1406,44 +1413,132 @@ object SnapshotStore {
       else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
   }
 
+  // ---- the FILE PREDICATE: can this data file hold a matching row? --
+
+  /** The order of the manifest's string bounds: Spark's `UTF8String`
+    * binary (UTF-8 byte) order, which the writer's `min`/`max` used —
+    * not Java's UTF-16 code-unit order, which disagrees on
+    * supplementary characters (U+1F600 sorts after U+FF21 in UTF-8,
+    * before it in UTF-16).
+    */
+  private val CatOrder: Ordering[String] =
+    Ordering.fromLessThan((a, b) =>
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0)
+
+  /** The ONE per-file predicate over manifest stats — every pruned
+    * library read, the DSv2 scan (pushed and runtime filters) and the
+    * merge/fold affected-file probes decide "can this data file hold a
+    * matching row?" through [[hits]] (the connector predicate summary a
+    * Presto planner prunes partitions and files against). Each field
+    * constrains one stats dimension; None leaves it unconstrained:
+    *   - `id` / `chars`: [lo, hi] against `min_id`/`max_id` and
+    *     `min_chars`/`max_chars`;
+    *   - `cat`: [lo, hi] against `min_cat`/`max_cat`, in [[CatOrder]];
+    *   - `partVals`: the file's `part_val` must be one of these;
+    *   - `keys`: SORTED keys, one of which must land in the file's id
+    *     interval (a binary search — O(log #keys) per file).
+    * THE OPEN-INTERVAL RULE, stated once: a missing stats column, a
+    * NULL bound, or the all-null-id sentinel (Long.MinValue,
+    * Long.MaxValue) never prunes — a file whose writer recorded no
+    * bound for a dimension must still scan. Only `kind = data` rows can
+    * hit; delete files are applied, never read as data. A new prunable
+    * stat is one more field here.
+    */
+  private[graft] final case class FileFilter(
+      id: Option[(Long, Long)] = None, chars: Option[(Long, Long)] = None,
+      cat: Option[(String, String)] = None, partVals: Option[Set[String]] = None,
+      keys: Option[Array[Long]] = None) {
+    import FileFilter.{bounds, cell, overlaps}
+
+    def hits(r: org.apache.spark.sql.Row): Boolean =
+      cell[String](r, "kind").forall(_ == "data") &&
+        id.forall(overlaps(r, "min_id", "max_id")) &&
+        chars.forall(overlaps(r, "min_chars", "max_chars")) &&
+        cat.forall { case (lo, hi) =>
+          (cell[String](r, "min_cat"), cell[String](r, "max_cat")) match {
+            case (Some(mn), Some(mx)) => CatOrder.gteq(mx, lo) && CatOrder.lteq(mn, hi)
+            case _ => true
+          }
+        } &&
+        partVals.forall(vs => cell[String](r, "part_val").forall(vs)) &&
+        keys.forall(ks => bounds(r, "min_id", "max_id").forall { case (mn, mx) =>
+          val i = java.util.Arrays.binarySearch(ks, mn)
+          val next = if (i >= 0) i else -(i + 1)
+          next < ks.length && ks(next) <= mx
+        })
+  }
+
+  private[graft] object FileFilter {
+    /** The category bounds spanning `values` in [[CatOrder]] (None when
+      * empty) — how an IN list or repeated equality becomes `cat`.
+      */
+    def span(values: Iterable[String]): Option[(String, String)] =
+      if (values.isEmpty) None else Some((values.min(CatOrder), values.max(CatOrder)))
+
+    /** A manifest cell; None when the column is missing or NULL. */
+    private def cell[A](r: org.apache.spark.sql.Row, f: String): Option[A] = {
+      val i = r.schema.indexWhere(_.name == f)
+      if (i < 0 || r.isNullAt(i)) None else Some(r.getAs[A](i))
+    }
+
+    /** A file's (lo, hi) stats on one dimension; None = the open
+      * interval (missing, NULL, or the sentinel).
+      */
+    private def bounds(r: org.apache.spark.sql.Row, lo: String,
+        hi: String): Option[(Long, Long)] =
+      (cell[Long](r, lo), cell[Long](r, hi)) match {
+        case (Some(Long.MinValue), Some(Long.MaxValue)) => None
+        case (Some(mn), Some(mx)) => Some((mn, mx))
+        case _ => None
+      }
+
+    private def overlaps(r: org.apache.spark.sql.Row, lo: String, hi: String)(
+        b: (Long, Long)): Boolean =
+      bounds(r, lo, hi).forall { case (mn, mx) => mx >= b._1 && mn <= b._2 }
+  }
+
+  /** The data files of snapshot k that `filter` hits, with their commit
+    * ids — a driver-side pass over the memoized O(#files) manifest
+    * rows: the Iceberg shape where the planner prunes the FILE LIST
+    * from manifest stats before the engine ever sees a path.
+    */
+  private def hitFiles(s: SparkSession, root: String, k: Long,
+      filter: FileFilter): Seq[(String, Long)] =
+    manifestRowsOf(s, root, k)._2.filter(filter.hits)
+      .map(r => (r.getAs[String]("path"), r.getAs[Long]("commit_id"))).toIndexedSeq
+
   /** The file paths a doc_id range [lo, hi] can possibly touch in
-    * snapshot k — manifest rows whose [min_id, max_id] intersect the
-    * range. A driver-side filter over O(#files) metadata rows: the
-    * Iceberg shape where the planner prunes the FILE LIST from
-    * manifest stats before the engine ever sees a path.
+    * snapshot k.
     */
   private[graft] def prunedPaths(s: SparkSession, root: String, k: Long,
-      lo: Long, hi: Long): Seq[String] = {
-    val (_, rows) = manifestRowsOf(s, root, k)
-    rows.filter(r => r.getAs[String]("kind") == "data" &&
-        !r.isNullAt(r.fieldIndex("max_id")) && !r.isNullAt(r.fieldIndex("min_id")) &&
-        r.getAs[Long]("max_id") >= lo && r.getAs[Long]("min_id") <= hi)
-      .map(_.getAs[String]("path")).toIndexedSeq
+      lo: Long, hi: Long): Seq[String] =
+    hitFiles(s, root, k, FileFilter(id = Some((lo, hi)))).map(_._1)
+
+  /** THE PRUNED READ: rows of snapshot k matching `residual`, scanning
+    * only the data files `filter` hits, through the snapshot's live
+    * equality and position delete files ([[readWithDeletes]]) — exactly
+    * `readSnapshot(k).filter(residual)` whenever `residual` implies
+    * `filter`. The manifest prunes whole FILES; the residual pushes
+    * into the surviving scans' row groups. Unlike [[ClusteredStore]]'s
+    * zones, these stats live IN the manifest, maintained by every
+    * write, so new data is prunable the moment its commit lands.
+    */
+  private[graft] def readWhere(s: SparkSession, root: String, k: Long,
+      filter: FileFilter, residual: Column): DataFrame = {
+    val (_, del, pos, nDel, nPos) = splitManifest(s, root, k)
+    alignToSchema(
+      readWithDeletes(s, root, k, hitFiles(s, root, k, filter), del, pos.map(_._1),
+        nDel, nPos),
+      tableSchema(s, root, k)).filter(residual)
   }
 
   /** MANIFEST-PRUNED RANGE READ: rows of snapshot k with doc_id in
-    * [lo, hi], scanning only the files whose manifest stats intersect
-    * the range. Two skipping layers compose: the manifest prunes
-    * whole FILES here (commits are range-clustered, so most files
-    * miss most ranges), and the residual row filter pushes into the
-    * surviving parquet scans' row groups as usual. Distinct from
-    * [[ClusteredStore]]'s zone pruning: these stats live IN the
-    * snapshot manifest (per file, per commit, maintained by `append`
-    * itself), not in a separately-built stats artifact — new data is
-    * prunable the moment its commit lands.
+    * [lo, hi] (commits are range-clustered, so most files miss most
+    * ranges).
     */
   def readRange(s: SparkSession, root: String, k: Long,
-      lo: Long, hi: Long): DataFrame = {
-    val (dat, del, pos, nDel, nPos) = splitManifest(s, root, k)
-    val pruned = {
-      val hitSet = prunedPaths(s, root, k, lo, hi).toSet
-      dat.filter(p => hitSet(p._1))
-    }
-    if (pruned.isEmpty)
-      return readSnapshot(s, root, k).filter(lit(false))
-    readWithDeletes(s, root, k, pruned, del, pos.map(_._1), nDel, nPos)
-      .filter(col("doc_id") >= lo && col("doc_id") <= hi)
-  }
+      lo: Long, hi: Long): DataFrame =
+    readWhere(s, root, k, FileFilter(id = Some((lo, hi))), col("doc_id").between(lo, hi))
 
   /** SNAPSHOT DIFF: rows appended after snapshot j, as of snapshot k
     * (j < k) — append-only makes this the files with `commit_id > j`
@@ -1556,14 +1651,9 @@ object SnapshotStore {
     */
   private def affectedByCollect(s: SparkSession, m: DataFrame,
       changes: DataFrame): Set[String] = {
-    val keys = changes.select(col("doc_id").cast("long"))
-      .distinct().collect().map(_.getLong(0)).sorted
-    m.collect().filter { r =>
-      val (mn, mx) = (r.getAs[Long]("min_id"), r.getAs[Long]("max_id"))
-      val i = java.util.Arrays.binarySearch(keys, mn)
-      val next = if (i >= 0) i else -(i + 1)
-      next < keys.length && keys(next) <= mx
-    }.map(_.getString(0)).toSet
+    val hit = FileFilter(keys = Some(changes.select(col("doc_id").cast("long"))
+      .distinct().collect().map(_.getLong(0)).sorted))
+    m.collect().filter(hit.hits).map(_.getAs[String]("path")).toSet
   }
 
   /** COPY-ON-WRITE MERGE (upsert) of `changes` keyed by doc_id, as
@@ -1777,7 +1867,7 @@ object SnapshotStore {
           else s.read.parquet(posRows.map(_.getAs[String]("path")).toIndexedSeq: _*)
             .select("path").distinct().collect().map(_.getString(0)).toSet
         val dataRows = mfull.filter(col("kind") === "data")
-          .select("path", "commit_id", "min_id", "max_id", "mpath").collect()
+          .select("path", "commit_id", "min_id", "max_id", "kind", "mpath").collect()
         // equality targets: a data file is hit iff some key lands in
         // its stats interval AND the delete postdates it (the sequence
         // rule). Below the threshold the keys collect (sorted) and
@@ -1793,21 +1883,15 @@ object SnapshotStore {
         val eqAffected: Set[String] =
           if (delRows.isEmpty) Set.empty
           else if (totalEqRows <= deleteMapThreshold(s)) {
-            val keysByCid: Seq[(Long, Array[Long])] =
+            val hitByCid: Seq[(Long, FileFilter)] =
               delRows.groupBy(_.getAs[Long]("commit_id")).toSeq.map { case (cid, fs) =>
-                cid -> s.read.parquet(fs.map(_.getAs[String]("path")).toIndexedSeq: _*)
-                  .select(col("doc_id")).collect().map(_.getLong(0)).sorted
+                cid -> FileFilter(keys = Some(
+                  s.read.parquet(fs.map(_.getAs[String]("path")).toIndexedSeq: _*)
+                    .select(col("doc_id")).collect().map(_.getLong(0)).sorted))
               }
             dataRows.filter { r =>
-              val (mn, mx) = (r.getAs[Long]("min_id"), r.getAs[Long]("max_id"))
               val cid = r.getAs[Long]("commit_id")
-              keysByCid.exists { case (dcid, keys) =>
-                dcid > cid && keys.nonEmpty && {
-                  val i = java.util.Arrays.binarySearch(keys, mn)
-                  val next = if (i >= 0) i else -(i + 1)
-                  next < keys.length && keys(next) <= mx
-                }
-              }
+              hitByCid.exists { case (dcid, hit) => dcid > cid && hit.hits(r) }
             }.map(_.getAs[String]("path")).toSet
           } else {
             val delDf = delRows.groupBy(_.getAs[Long]("commit_id")).toSeq
@@ -2513,29 +2597,9 @@ object SnapshotStore {
     * intersect BOTH intervals — the read the Z layout exists for.
     */
   def readRange2D(s: SparkSession, root: String, k: Long,
-      iLo: Long, iHi: Long, cLo: Long, cHi: Long): DataFrame = {
-    // NULL char-stats = the OPEN interval, never a prune: a mixed
-    // store (a plain append or a 1-D maintenance rewrite landing on a
-    // Z table) records no n_chars bounds for those files — they must
-    // still scan, or their rows silently vanish from 2-D reads
-    val paths = {
-      val (_, rows) = manifestRowsOf(s, root, k)
-      def lv(r: org.apache.spark.sql.Row, f: String): Option[Long] =
-        if (r.isNullAt(r.fieldIndex(f))) None else Some(r.getAs[Long](f))
-      // driver-side mirror of the old SQL filter, NULL-for-NULL: a null
-      // id bound drops the row (SQL null predicate), null char stats =
-      // the open interval
-      rows.filter { r =>
-        lv(r, "max_id").exists(_ >= iLo) && lv(r, "min_id").exists(_ <= iHi) &&
-          (lv(r, "min_chars").isEmpty ||
-            (lv(r, "max_chars").exists(_ >= cLo) && lv(r, "min_chars").exists(_ <= cHi)))
-      }.map(_.getAs[String]("path")).toIndexedSeq
-    }
-    if (paths.isEmpty) return readSnapshot(s, root, k).filter(lit(false))
-    s.read.option("mergeSchema", "true").parquet(paths: _*)
-      .filter(col("doc_id").between(iLo, iHi) &&
-        col("n_chars").between(cLo, cHi))
-  }
+      iLo: Long, iHi: Long, cLo: Long, cHi: Long): DataFrame =
+    readWhere(s, root, k, FileFilter(id = Some((iLo, iHi)), chars = Some((cLo, cHi))),
+      col("doc_id").between(iLo, iHi) && col("n_chars").between(cLo, cHi))
 
   /** Seed the Z-clustered fixture table: the q203 two-commit split,
     * each commit Z-ordered on (doc_id, n_chars).
@@ -2672,39 +2736,16 @@ object SnapshotStore {
       by: String): Long =
     append(s, root, df, Cat(by))
 
-  /** The order of the manifest's string bounds: Spark's `UTF8String`
-    * binary (UTF-8 byte) order, which the writer's `min`/`max` used —
-    * not Java's UTF-16 code-unit order, which disagrees on
-    * supplementary characters (U+1F600 sorts after U+FF21 in UTF-8,
-    * before it in UTF-16).
-    */
-  private[graft] val CatOrder: Ordering[String] =
-    Ordering.fromLessThan((a, b) =>
-      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0)
-
   /** CATEGORY-PRUNED READ: rows with cat = value, scanning only files
-    * whose manifest string bounds contain the value (null bounds = the
-    * open interval, never pruned) — the categorical twin of
-    * [[readRange]].
+    * whose manifest string bounds can contain the value — the
+    * categorical twin of [[readRange]].
     */
-  def readCat(s: SparkSession, root: String, k: Long, value: String): DataFrame = {
-    val by = layoutOf(s, root, k) match {
-      case Cat(c) => c
+  def readCat(s: SparkSession, root: String, k: Long, value: String): DataFrame =
+    layoutOf(s, root, k) match {
+      case Cat(by) => readWhere(s, root, k, FileFilter(cat = Some((value, value))),
+        col(by) === value)
       case _ => throw new IllegalArgumentException(s"$root@$k is not category-clustered")
     }
-    val paths = {
-      val (_, rows) = manifestRowsOf(s, root, k)
-      def sv(r: org.apache.spark.sql.Row, f: String): Option[String] =
-        if (r.isNullAt(r.fieldIndex(f))) None else Some(r.getAs[String](f))
-      rows.filter(r => sv(r, "min_cat").isEmpty ||
-          (sv(r, "max_cat").exists(CatOrder.gteq(_, value)) &&
-            sv(r, "min_cat").exists(CatOrder.lteq(_, value))))
-        .map(_.getAs[String]("path")).toIndexedSeq
-    }
-    if (paths.isEmpty) return readSnapshot(s, root, k).filter(lit(false))
-    s.read.option("mergeSchema", "true").parquet(paths: _*)
-      .filter(col(by) === value)
-  }
 
   // ---- BUCKET-CLUSTERED commits (storage-partitioned joins) ----------
 
@@ -2807,7 +2848,8 @@ object SnapshotStore {
     * safe when no writer is in flight — the spec's setting).
     * Complements [[expire]], which reclaims files that dropped
     * manifests referenced; vacuum reclaims files NOTHING ever
-    * referenced. Returns the deleted paths. O(#files) metadata — one
+    * referenced. Returns the deleted paths, the emptied commit
+    * directories included. O(#files) metadata — one
     * recursive listing diffed against the unioned manifest path sets.
     */
   def vacuum(s: SparkSession, root: String, olderThanMs: Long): Seq[String] = {
@@ -2836,21 +2878,22 @@ object SnapshotStore {
         .select("path").distinct()
         .collect().map(_.getString(0)).toSet
     val now = System.currentTimeMillis()
-    val orphans = f.listStatus(dataDir).toSeq.flatMap { d =>
-      if (!d.isDirectory) Seq(d) else f.listStatus(d.getPath).toSeq
-    }.filter(st => st.isFile &&
-      st.getPath.getName.endsWith(".parquet") && // committer markers stay with their dir
-      !referenced.contains(st.getPath.toString) &&
-      now - st.getModificationTime >= olderThanMs)
+    val dirs = f.listStatus(dataDir).toSeq.filter(_.isDirectory)
+    // at ANY depth: a keyed commit's files sit under its key dirs
+    // (committer markers stay with their dir)
+    val orphans = parquetUnder(s, root, dataDir)
+      .filter(st => !referenced.contains(st.getPath.toString) &&
+        now - st.getModificationTime >= olderThanMs)
       .map(_.getPath)
     orphans.foreach(p => f.delete(p, false))
-    // drop commit-attempt dirs the sweep emptied of data (whatever
-    // committer markers remain go with the dir)
-    f.listStatus(dataDir).foreach { d =>
-      if (d.isDirectory &&
-        !f.listStatus(d.getPath).exists(_.getPath.getName.endsWith(".parquet")))
-        f.delete(d.getPath, true)
-    }
+    // drop commit-attempt dirs the sweep left with no data file at any
+    // depth (whatever committer markers remain go with the dir) — under
+    // the same age floor, so an in-flight writer's dir survives
+    val deadDirs = dirs
+      .filter(d => now - d.getModificationTime >= olderThanMs &&
+        parquetUnder(s, root, d.getPath).isEmpty)
+      .map(_.getPath)
+    deadDirs.foreach(p => f.delete(p, true))
     // manifest-FILE orphans: f<token> dirs no committed list names —
     // a lost claim race's or crashed attempt's metadata, same age
     // floor as its data
@@ -2874,7 +2917,7 @@ object SnapshotStore {
           now - d.getModificationTime >= olderThanMs)
         .map(_.getPath)
     deadCdc.foreach(p => f.delete(p, true))
-    (orphans ++ deadM ++ deadCdc).map(_.toString)
+    (orphans ++ deadDirs ++ deadM ++ deadCdc).map(_.toString)
   }
 
   /** Seed the fixture snapshot table: TWO deterministic commits over

@@ -37,7 +37,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * drops the consumed predicates from the plan):
   *   - `SupportsPushDownFilters`: range/equality filters on `doc_id`
   *     (and `n_chars`) become [lo, hi] bounds that PRUNE THE FILE LIST
-  *     from the per-file manifest stats at plan time — 1-D stats on
+  *     from the per-file manifest stats at plan time, through the
+  *     store's one file predicate (`SnapshotStore.FileFilter`) — 1-D stats on
   *     every store, both dimensions on a Z-clustered store (q227's
   *     `min_chars`/`max_chars`) — and a residual row filter inside the
   *     reader. Everything else is reported unsupported and stays a
@@ -1012,11 +1013,12 @@ final class SnapshotScanBuilder(root: String, k: Long, tableSchema: StructType,
 
   /** Accumulated [lo, hi] bounds per pushable column. */
   private val bounds = mutable.Map.empty[String, (Long, Long)]
-  /** Accumulated string [lo, hi] bounds on the clustering column —
-    * PRUNE-ONLY (the predicate stays in the plan; the bounds just
-    * shrink the file list, the parquet row-group-skipping contract).
+  /** Every value an equality/IN on the clustering column names —
+    * PRUNE-ONLY (the predicate stays in the plan; the span of these
+    * values just shrinks the file list, the parquet row-group-skipping
+    * contract).
     */
-  private val strBounds = mutable.Map.empty[String, (String, String)]
+  private var catVals = Set.empty[String]
   private var pushed = Array.empty[Filter]
   private var required: StructType = tableSchema
   private var aggPlan: Option[(StructType, Array[Array[Any]])] = None
@@ -1064,7 +1066,7 @@ final class SnapshotScanBuilder(root: String, k: Long, tableSchema: StructType,
     */
   private def planAgg(aggregation: Aggregation):
       Option[(StructType, Array[Array[Any]])] = {
-    if (bounds.nonEmpty || strBounds.nonEmpty || partVals.isDefined ||
+    if (bounds.nonEmpty || catVals.nonEmpty || partVals.isDefined ||
       mlist.isDefined || pruneOnly) return None
     def isDocId(e: org.apache.spark.sql.connector.expressions.Expression): Boolean =
       e match {
@@ -1196,20 +1198,14 @@ final class SnapshotScanBuilder(root: String, k: Long, tableSchema: StructType,
       case _ => ()
     }
     // categorical equality/IN on the clustering column: PRUNE-ONLY —
-    // the string bounds shrink the file list from the manifest's
-    // (min_cat, max_cat); the filter itself stays in `rest`, so Spark
-    // re-applies it on rows (sound under any bound); bounds widen in
-    // the manifest's UTF-8 byte order
-    val ord = SnapshotStore.CatOrder
+    // the values' span shrinks the file list from the manifest's
+    // category bounds; the filter itself stays in `rest`, so Spark
+    // re-applies it on rows (sound under any bound)
     rest.foreach {
-      case EqualTo(c, v: String) if catCol.contains(c) =>
-        val (l0, h0) = strBounds.getOrElse(c, (v, v))
-        strBounds(c) = (ord.min(v, l0), ord.max(v, h0))
+      case EqualTo(c, v: String) if catCol.contains(c) => catVals += v
       case In(c, vs) if catCol.contains(c) &&
           vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        val ss = vs.map(_.asInstanceOf[String])
-        val (l0, h0) = strBounds.getOrElse(c, (ss.min(ord), ss.max(ord)))
-        strBounds(c) = ((ss :+ l0).min(ord), (ss :+ h0).max(ord))
+        catVals ++= vs.map(_.asInstanceOf[String])
       // identity-partition pruning: equality/IN on the partition
       // column keeps EXACTLY the named values' files — also PRUNE-ONLY
       // (the filter stays residual; contradictory equalities intersect
@@ -1255,8 +1251,9 @@ final class SnapshotScanBuilder(root: String, k: Long, tableSchema: StructType,
     case None =>
       SnapshotTableSource.lastAggPushed.put(root, false)
       new SnapshotScan(root, k, tableSchema, required, bounds.toMap,
-        strBounds.toMap, pushed, mlist, rowLevelOp, partVals,
-        if (pruneOnly) None else limitHint)
+        SnapshotStore.FileFilter(bounds.get("doc_id"), bounds.get("n_chars"),
+          SnapshotStore.FileFilter.span(catVals), partVals),
+        pushed, mlist, rowLevelOp, if (pruneOnly) None else limitHint)
   }
 }
 
@@ -1322,11 +1319,10 @@ final case class SnapshotFilePartition(
 
 final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     required: StructType, bounds: Map[String, (Long, Long)],
-    strBounds: Map[String, (String, String)],
+    static: SnapshotStore.FileFilter,
     pushed: Array[Filter],
     mlist: Option[Seq[String]] = None,
     rowLevelOp: Option[SnapshotRowLevelOperation] = None,
-    partVals: Option[Set[String]] = None,
     limitHint: Option[Int] = None)
     extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics
@@ -1338,8 +1334,9 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     * re-prunes the FILE LIST against the manifest stats — the
     * table-format analog of dynamic partition pruning, file-level and
     * best-effort (the join re-filters rows, so a superset is sound).
+    * The delivered keys become this scan's RUNTIME file filter.
     */
-  @volatile private var runtimeKeys: Option[Array[Long]] = None
+  @volatile private var runtime = SnapshotStore.FileFilter()
 
   override def filterAttributes(): Array[NamedReference] =
     // only when the scan output still carries it — Spark resolves
@@ -1360,7 +1357,7 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
       }
       // only a fully-numeric value list is a sound pruner (a NULL or
       // odd-typed value would silently widen to "prune everything")
-      if (ls.length == vs.length) runtimeKeys = Some(ls.sorted)
+      if (ls.length == vs.length) runtime = SnapshotStore.FileFilter(keys = Some(ls.sorted))
     case _ => ()
   }
 
@@ -1419,7 +1416,7 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
   override def estimateStatistics(): Statistics = statsCache
   private lazy val statsCache: Statistics = {
     val (rows, _) = mRows
-    val kept = rows.filter(r => r.getAs[String]("kind") == "data" && hits(r))
+    val kept = rows.filter(hits)
     val deleted = rows.iterator
       .filter(_.getAs[String]("kind") != "data")
       .map(_.getAs[Long]("n_rows")).sum
@@ -1478,7 +1475,7 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
   private lazy val keyGroups:
       Array[((Option[String], Option[Int]), Array[org.apache.spark.sql.Row])] = {
     val (rows, _) = mRows
-    rows.filter(r => r.getAs[String]("kind") == "data" && staticHits(r))
+    rows.filter(static.hits)
       .groupBy(r => (keyed.part.map(_ => r.getAs[String]("part_val")),
         keyed.bucket.map(_ => r.getAs[Int]("bucket_id"))))
       .toArray.sortBy(_._1)
@@ -1504,67 +1501,13 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
       keyed.transforms.toArray[org.apache.spark.sql.connector.expressions.Expression],
       keyGroups.length)
 
-  /** Whether a data-file manifest row survives the pushed bounds (and
-    * any runtime join keys) — shared by statistics and planning.
+  /** Whether a data-file manifest row survives the pushed filters and
+    * any runtime join keys — shared by statistics and planning. Group
+    * membership keys off the `static` part alone, so a runtime filter
+    * can never change the group count.
     */
   private def hits(r: org.apache.spark.sql.Row): Boolean =
-    staticHits(r) && runtimeHits(r)
-
-  /** The PLAN-TIME part of [[hits]] — pushed bounds and category
-    * bounds only. Bucket-group membership keys off this, so a runtime
-    * filter can never change the group count.
-    */
-  private def staticHits(r: org.apache.spark.sql.Row): Boolean = {
-    val (_, schema) = mRows
-    val has2D = schema.fieldNames.contains("min_chars")
-    val hasCat = schema.fieldNames.contains("min_cat")
-    def live(c: String, loF: String, hiF: String): Boolean =
-      bounds.get(c) match {
-        case Some((lo, hi)) =>
-          // NULL stats = the open interval (a mixed store's file with
-          // no bounds recorded for this column must still scan)
-          r.isNullAt(r.fieldIndex(loF)) ||
-            (r.getAs[Long](hiF) >= lo && r.getAs[Long](loF) <= hi)
-        case None => true
-      }
-    // string bounds on the clustering column: null stats = the
-    // open interval (an all-null-category file is never pruned)
-    def liveCat: Boolean = strBounds.forall { case (_, (lo, hi)) =>
-      !hasCat || r.isNullAt(r.fieldIndex("min_cat")) || {
-        SnapshotStore.CatOrder.gteq(r.getAs[String]("max_cat"), lo) &&
-          SnapshotStore.CatOrder.lteq(r.getAs[String]("min_cat"), hi)
-      }
-    }
-    // identity-partition pruning: exact per-file value membership
-    // (null / absent part_val = the open interval, never pruned)
-    def livePartVal: Boolean = partVals.forall { vs =>
-      !r.schema.fieldNames.contains("part_val") || {
-        val i = r.fieldIndex("part_val")
-        r.isNullAt(i) || vs.contains(r.getString(i))
-      }
-    }
-    live("doc_id", "min_id", "max_id") &&
-      (!has2D || live("n_chars", "min_chars", "max_chars")) &&
-      liveCat && livePartVal
-  }
-
-  /** The RUNTIME part of [[hits]]: a file lives iff its [min_id,
-    * max_id] interval holds at least one delivered join key (binary
-    * search over the sorted key array — O(log #keys) per file);
-    * sentinel (all-null-id) stats never prune.
-    */
-  private def runtimeHits(r: org.apache.spark.sql.Row): Boolean =
-    runtimeKeys.forall { keys =>
-      val iLo = r.fieldIndex("min_id")
-      r.isNullAt(iLo) || {
-        val (mn, mx) = (r.getAs[Long]("min_id"), r.getAs[Long]("max_id"))
-        mn == Long.MinValue && mx == Long.MaxValue || {
-          val i = java.util.Arrays.binarySearch(keys, mn)
-          val next = if (i >= 0) i else -(i + 1)
-          next < keys.length && keys(next) <= mx
-        }
-      }
-    }
+    static.hits(r) && runtime.hits(r)
 
   /** Equality-delete keys of the snapshot, collected ONCE per scan and
     * folded into a binary-searchable map: sorted unique keys with each
@@ -1596,10 +1539,6 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val s = SparkSession.active
     val (rows, _) = mRows
-    // FILE PRUNING from the manifest stats — the pushed bounds decide
-    // which files can possibly hold a matching row (1-D always, both
-    // dimensions on a Z store); [[hits]] is shared with statistics
-    val dataRows = rows.filter(_.getAs[String]("kind") == "data")
     val delRows = rows.filter(_.getAs[String]("kind") == "delete")
     val posRows = rows.filter(_.getAs[String]("kind") == "posdelete")
     // the newest delete commit: files at or past it can never have an
@@ -1631,7 +1570,9 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
       else s.read.parquet(allPosPaths: _*)
         .collect().map(r => (r.getString(0), r.getLong(1)))
         .groupBy(_._1).map { case (p, a) => p -> a.map(_._2).distinct.sorted }
-    val chosen = dataRows.filter(hits)
+    // FILE PRUNING from the manifest stats through the store's one
+    // file predicate ([[hits]], shared with statistics)
+    val chosen = rows.filter(hits)
     SnapshotTableSource.lastPlannedFiles.put(root, chosen.length)
     // a row-level operation replaces exactly the files its scan
     // finally planned — record them (last plan wins; a runtime group
@@ -1691,15 +1632,14 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
         .map(_.dataType).getOrElse(StringType)
       keyGroups.map { case ((v, b), rs) =>
         SnapshotKeyPartition(v, kt, b,
-          rs.filter(runtimeHits).map(filePart).toSeq): InputPartition
+          rs.filter(runtime.hits).map(filePart).toSeq): InputPartition
       }
     } else {
       // LIMIT file-prefix truncation — only when nothing else can
       // drop rows (the prefix must deliver AT LEAST `n` rows;
       // Spark's retained limit trims the excess)
       val limited = limitHint match {
-        case Some(n) if bounds.isEmpty && strBounds.isEmpty &&
-            partVals.isEmpty && runtimeKeys.isEmpty &&
+        case Some(n) if static == SnapshotStore.FileFilter() && runtime.keys.isEmpty &&
             delRows.isEmpty && posRows.isEmpty =>
           var acc = 0L
           chosen.takeWhile { r =>

@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * a function registration anywhere else would let a query's session
   * depend on which harness or operator ran first — this spec fails on
   * any of them. It also keeps standing artifacts on ONE freshness
-  * protocol (`StandingIndex.ensureArtifact`/`refresh`), and snapshot
-  * layouts on ONE layout value (`SnapshotStore.layoutOf`).
+  * protocol (`StandingIndex.ensureArtifact`/`refresh`), snapshot
+  * layouts on ONE layout value (`SnapshotStore.layoutOf`), and snapshot
+  * file pruning on ONE file predicate (`SnapshotStore.FileFilter`).
   */
 class InstallGuardSpec extends AnyFunSuite {
 
@@ -43,6 +44,8 @@ class InstallGuardSpec extends AnyFunSuite {
   private val LatchValue = """\bemptyDataFrame\b"""
   private val RuleAssign = """extra(?:Optimizations|Strategies)\s*(?:\+\+|:\+|\+)?=(?!=)"""
   private val LayoutColumn = """"(?:bucket_col|part_col|cat_col)""""
+  private val PruningStat = """"(?:min_cat|max_cat|min_chars|max_chars)"|\bCatOrder\b"""
+  private val KeyProbe = """Arrays\s*\.\s*binarySearch"""
   private val FunctionRegistration =
     """\b(?:createOrReplaceTempFunction|registerFunction)\s*\(|\budf\s*\.\s*register\s*\("""
 
@@ -81,5 +84,20 @@ class InstallGuardSpec extends AnyFunSuite {
     val bad = offenders(LayoutColumn, Set("SnapshotStore.scala"))
     assert(bad.isEmpty,
       s"read layouts through SnapshotStore.layoutOf:\n${bad.mkString("\n")}")
+  }
+
+  test("snapshot files are pruned only through SnapshotStore's one file predicate") {
+    // a stats column or the category order read by another snapshot
+    // source is a second pruning filter; a second key probe in the store
+    // is a second copy of FileFilter's. The reader's per-row delete-key
+    // lookups in SnapshotTableSource are not file pruning.
+    assert(matchesIn(PruningStat, "SnapshotStore.scala"))
+    val notOtherSnapshot = sources.map(_.getFileName.toString)
+      .filterNot(n => n.startsWith("Snapshot") && n != "SnapshotStore.scala").toSet
+    val bad = offenders(PruningStat, notOtherSnapshot)
+    assert(bad.isEmpty, s"prune through SnapshotStore.FileFilter:\n${bad.mkString("\n")}")
+    val store = sources.filter(_.getFileName.toString == "SnapshotStore.scala")
+    val probes = store.map(p => KeyProbe.r.findAllMatchIn(text(p)).size).sum
+    assert(probes == 1, s"SnapshotStore.scala has $probes key probes; use FileFilter.keys")
   }
 }

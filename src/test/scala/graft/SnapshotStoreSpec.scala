@@ -841,6 +841,19 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // ...and is reclaimed once old enough (grace elapsed ⇒ floor 0)
     assert(SnapshotStore.vacuum(spark, root, olderThanMs = 0L).nonEmpty)
     assert(!Files.exists(Paths.get(s"$root/data/cinflight")))
+    // a KEYED store nests its files under key dirs: the committed ones
+    // must survive, a nested orphan must be reclaimed
+    val kroot = Files.createTempDirectory("graft_vacuum_keyed_").toString + "/store"
+    SnapshotStore.appendPartitioned(spark, kroot, docs, "lang")
+    SnapshotStore.append(spark, kroot, docs.limit(5).withColumn("doc_id", col("doc_id") + 1000L))
+    val whole = rows(SnapshotStore.readSnapshot(spark, kroot, 2L))
+    docs.limit(6).write.partitionBy("lang").parquet(s"$kroot/data/cdeadkeyed")
+    val kdeleted = SnapshotStore.vacuum(spark, kroot, olderThanMs = 0L)
+    assert(kdeleted.nonEmpty && kdeleted.forall(_.contains("cdeadkeyed")),
+      s"vacuum must delete exactly the nested orphan: $kdeleted")
+    assert(!Files.exists(Paths.get(s"$kroot/data/cdeadkeyed")))
+    assert(rows(SnapshotStore.readSnapshot(spark, kroot, 2L)) == whole,
+      "a keyed store must read back whole after vacuum")
   }
 
   test("change feed: inserts/updates/deletes recovered from rewrite commits; verbatim rewrites excluded") {
@@ -1547,6 +1560,132 @@ class SnapshotStoreSpec extends AnyFunSuite {
         base.filter(pmod(col("doc_id"), lit(7)) === 0).select("doc_id"))
       check("foldDeletes", k1, SnapshotStore.foldDeletes(spark, root))
       check("compact", k1 + 1, SnapshotStore.compact(spark, root))
+    }
+  }
+
+  test("readRange2D and readCat apply equality and position deletes (they read deleted rows before)") {
+    import spark.implicits._
+    val langs = Seq("de", "en", "fr", "zh")
+    val df = (1 to 400).map(i => (i.toLong, langs(i % 4), (i * 7 % 500).toLong))
+      .toDF("doc_id", "lang", "n_chars")
+    val keys = (100L to 200L).toDF("doc_id")
+    val zroot = Files.createTempDirectory("graft_zdel_").toString + "/store"
+    SnapshotStore.appendZ(spark, zroot, df)
+    val zPred = col("doc_id").between(50, 300) && col("n_chars").between(0, 500)
+    for ((commit, n) <- Seq[(() => Long, Long)](
+        (() => SnapshotStore.deleteKeys(spark, zroot, keys), 150L),
+        (() => SnapshotStore.deleteWhere(spark, zroot, col("doc_id") === 250L), 149L))) {
+      val k = commit()
+      val got = rows(SnapshotStore.readRange2D(spark, zroot, k, 50L, 300L, 0L, 500L))
+      assert(got.size == n && got == rows(SnapshotStore.readSnapshot(spark, zroot, k)
+        .filter(zPred)), s"readRange2D at snapshot $k")
+    }
+    val croot = Files.createTempDirectory("graft_catdel_").toString + "/store"
+    SnapshotStore.appendClustered(spark, croot, df, "lang")
+    val k = SnapshotStore.deleteKeys(spark, croot, (1L to 100L).toDF("doc_id"))
+    val got = rows(SnapshotStore.readCat(spark, croot, k, "de"))
+    assert(got.size == 75 && got == rows(SnapshotStore.readSnapshot(spark, croot, k)
+      .filter(col("lang") === "de")))
+  }
+
+  test("one file predicate: FileFilter.hits over bounded, null, sentinel and missing stats on every dimension") {
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import SnapshotStore.FileFilter
+    val longCols = Set("min_id", "max_id", "min_chars", "max_chars")
+    def row(cells: (String, Any)*): org.apache.spark.sql.Row =
+      new GenericRowWithSchema(cells.map(_._2).toArray, StructType(cells.map { case (c, _) =>
+        StructField(c, if (longCols(c)) LongType else StringType) }))
+    def data(cells: (String, Any)*) = row(("kind" -> "data") +: cells: _*)
+    val (lo, hi) = (Long.MinValue, Long.MaxValue)
+    val fullA = "\uff21"
+    val emoji = new String(Character.toChars(0x1F600))
+    val id = FileFilter(id = Some((10L, 20L)))
+    val chars = FileFilter(chars = Some((10L, 20L)))
+    val cat = FileFilter(cat = Some(("de", "de")))
+    val part = FileFilter(partVals = Some(Set("de", "fr")))
+    val keys = FileFilter(keys = Some(Array(5L, 15L, 40L)))
+    val noKeys = FileFilter(keys = Some(Array.empty[Long]))
+    val cases: Seq[(String, FileFilter, org.apache.spark.sql.Row, Boolean)] = Seq(
+      ("id bounded, overlapping", id, data("min_id" -> 18L, "max_id" -> 30L), true),
+      ("id bounded, disjoint", id, data("min_id" -> 21L, "max_id" -> 30L), false),
+      ("id null", id, data("min_id" -> null, "max_id" -> null), true),
+      ("id sentinel", id, data("min_id" -> lo, "max_id" -> hi), true),
+      ("id column missing", id, data(), true),
+      ("chars bounded, overlapping", chars, data("min_chars" -> 1L, "max_chars" -> 10L), true),
+      ("chars bounded, disjoint", chars, data("min_chars" -> 1L, "max_chars" -> 9L), false),
+      ("chars null", chars, data("min_chars" -> null, "max_chars" -> null), true),
+      ("chars sentinel", chars, data("min_chars" -> lo, "max_chars" -> hi), true),
+      ("chars column missing", chars, data("min_id" -> 1L, "max_id" -> 2L), true),
+      ("cat bounded, containing", cat, data("min_cat" -> "de", "max_cat" -> "en"), true),
+      ("cat bounded, disjoint", cat, data("min_cat" -> "en", "max_cat" -> "fr"), false),
+      ("cat in UTF-8 byte order", FileFilter(cat = Some((emoji, emoji))),
+        data("min_cat" -> fullA, "max_cat" -> emoji), true),
+      ("cat null", cat, data("min_cat" -> null, "max_cat" -> null), true),
+      ("cat column missing", cat, data(), true),
+      ("part value listed", part, data("part_val" -> "fr"), true),
+      ("part value not listed", part, data("part_val" -> "en"), false),
+      ("part value null", part, data("part_val" -> null), true),
+      ("part column missing", part, data(), true),
+      ("keys, one inside", keys, data("min_id" -> 12L, "max_id" -> 20L), true),
+      ("keys, none inside", keys, data("min_id" -> 16L, "max_id" -> 39L), false),
+      ("keys, bound equals a key", keys, data("min_id" -> 40L, "max_id" -> 50L), true),
+      ("keys null", keys, data("min_id" -> null, "max_id" -> null), true),
+      ("keys sentinel", noKeys, data("min_id" -> lo, "max_id" -> hi), true),
+      ("keys empty, bounded", noKeys, data("min_id" -> 1L, "max_id" -> 2L), false),
+      ("keys column missing", keys, data(), true),
+      ("every dimension at once", FileFilter(Some((10L, 20L)), Some((10L, 20L)),
+        Some(("de", "de")), Some(Set("de")), Some(Array(15L))),
+        data("min_id" -> 12L, "max_id" -> 20L, "min_chars" -> 1L, "max_chars" -> 10L,
+          "min_cat" -> "de", "max_cat" -> "de", "part_val" -> "de"), true),
+      ("unconstrained, data", FileFilter(), data("min_id" -> 1L, "max_id" -> 2L), true),
+      ("no kind column reads as data", id, row("min_id" -> 12L, "max_id" -> 14L), true),
+      ("equality-delete row", FileFilter(), row("kind" -> "delete", "min_id" -> 1L,
+        "max_id" -> 2L), false),
+      ("position-delete row", id, row("kind" -> "posdelete", "min_id" -> lo,
+        "max_id" -> hi), false))
+    val wrong = cases.filter { case (_, f, r, want) => f.hits(r) != want }.map(_._1)
+    assert(wrong.isEmpty, s"FileFilter.hits disagrees on: ${wrong.mkString(", ")}")
+  }
+
+  test("one pruned read: library, readSnapshot and DSv2 SQL agree on every pruning layout after MOR deletes; DSv2 plans the library's hits") {
+    import SnapshotStore.{Cat, FileFilter, Keyed, Range, Z}
+    val base = docs.select(col("doc_id"), col("lang"), col("n_chars"))
+    val dePred = "lang = 'de'"
+    val de = FileFilter(cat = Some(("de", "de")))
+    val cases: Seq[(SnapshotStore.Layout, String, FileFilter,
+        (String, Long) => org.apache.spark.sql.DataFrame)] = Seq(
+      (Range, "doc_id BETWEEN 1 AND 60", FileFilter(id = Some((1L, 60L))),
+        (root, k) => SnapshotStore.readRange(spark, root, k, 1L, 60L)),
+      (Z, "doc_id BETWEEN 1 AND 60 AND n_chars BETWEEN 47 AND 110",
+        FileFilter(id = Some((1L, 60L)), chars = Some((47L, 110L))),
+        (root, k) => SnapshotStore.readRange2D(spark, root, k, 1L, 60L, 47L, 110L)),
+      (Cat("lang"), dePred, de,
+        (root, k) => SnapshotStore.readCat(spark, root, k, "de")),
+      (Keyed(Some("lang"), None), dePred, FileFilter(partVals = Some(Set("de"))),
+        (root, k) => SnapshotStore.readWhere(spark, root, k,
+          FileFilter(partVals = Some(Set("de"))), expr(dePred))))
+    for ((layout, pred, filter, library) <- cases) {
+      val root = Files.createTempDirectory("graft_pruned_").toString + "/store"
+      Seq(base.filter(pmod(col("doc_id"), lit(2)) === 0),
+        base.filter(pmod(col("doc_id"), lit(2)) === 1))
+        .foreach(SnapshotStore.append(spark, root, _, layout))
+      SnapshotStore.deleteKeys(spark, root,
+        base.filter(pmod(col("doc_id"), lit(7)) === 0).select("doc_id"))
+      val k = SnapshotStore.deleteWhere(spark, root, pmod(col("doc_id"), lit(11)) === 0)
+      val want = rows(SnapshotStore.readSnapshot(spark, root, k).filter(expr(pred)))
+      assert(want.nonEmpty, s"$layout: $pred must select rows")
+      assert(rows(library(root, k)) == want, s"$layout: library pruned read")
+      val v = s"graft_pruned_${layout.toString.filter(_.isLetter).toLowerCase}"
+      spark.read.format("graft.sources.SnapshotTableSource")
+        .option("root", root).load().createOrReplaceTempView(v)
+      assert(rows(spark.sql(s"SELECT * FROM $v WHERE $pred")) == want, s"$layout: DSv2 SQL")
+      val (_, mrows) = SnapshotStore.manifestRowsOf(spark, root, k)
+      val nData = mrows.count(_.getAs[String]("kind") == "data")
+      val planned = SnapshotTableSource.lastPlannedFiles.get(root)
+      assert(planned == mrows.count(filter.hits) && planned < nData,
+        s"$layout: DSv2 planned $planned files, the library hits " +
+          s"${mrows.count(filter.hits)} of $nData")
     }
   }
 }
