@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Engine
@@ -46,70 +46,74 @@ object GraphOps {
     */
   val PageRankIters = 3
 
-  /** Canonical co-purchase edge list (pa < pb, n_orders ≥ cut) WITH the
-    * co-order count — q93/q94 project the structure, q116's association
-    * rules consume the counts.
-    *
-    * Scale shape: the per-order pair expansion is quadratic in BASKET
-    * size, not corpus size — baskets are bounded (an order has O(10)
-    * items), so the expansion is a constant-factor flatMap. The pair
-    * counting groupBy is map-side combinable; only (pa, pb, partial
-    * count) triples shuffle. A skewed "mega-basket" would be the one
-    * hazard at 100 TB; AQE skew-join handles the downstream joins and
-    * the expansion itself can be capped per order upstream if a source
-    * ever produces unbounded baskets.
+  /** Per-order sorted distinct-part baskets (collect_set dedups
+    * map-side) — a LAZY lineitem subtree, never held in storage: the
+    * edge build and q116's supports each plan it inline. A basket table
+    * kept for the session is corpus-sized, and holding it in storage
+    * memory changes eviction for every later query of the session.
+    */
+  private def orderBaskets(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "lineitem")
+      .groupBy(col("l_orderkey"))
+      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+
+  /** The graph family's one stored table, materialized once per
+    * (session, dir): q93's iterations, q94's wedge joins, q116's rules
+    * and q117's rounds plan against it instead of replaying the pair
+    * expansion per reference.
     */
   private val edgeCache =
     new graft.SessionCache
 
-  private val basketCache =
-    new graft.SessionCache
-
-  /** Per-order sorted distinct-part baskets — the ONE lineitem pass the
-    * whole co-purchase family derives from (collect_set dedups
-    * map-side). Cached per (session, dir) like the LlmOps signature
-    * tables: the edge build AND q116's per-part supports / basket
-    * total all read it, so within a session the lineitem scan + basket
-    * shuffle run once (MEMORY_AND_DISK — spills, never recomputes).
+  /** Canonical co-purchase edge list (pa < pb, n_orders ≥ cut) WITH the
+    * co-order count — q93/q94/q117 project the structure, q116's
+    * association rules consume the counts.
+    *
+    * One fused lineitem → basket → pair-count pipeline, in basket form
+    * rather than a self-join: the ordered pairs explode map-side from
+    * the sorted basket, so each basket ships once (a self-join on
+    * l_orderkey would shuffle the scan twice and materialize the join).
+    * The quadratic pair fan-out is per BASKET (an order has O(10)
+    * items), never per corpus. The pair-counting groupBy is map-side
+    * combinable; only (pa, pb, partial count) triples shuffle. A skewed
+    * "mega-basket" would be the one hazard at 100 TB; AQE skew-join
+    * handles the downstream joins and the expansion itself can be
+    * capped per order upstream if a source ever produces unbounded
+    * baskets. Only the thresholded edge list (~n_edges ≪ the pair
+    * expansion: 3.6k rows at sf0.1) is materialized.
     */
-  private[operators] def orderBaskets(s: SparkSession, dir: String): DataFrame =
-    basketCache.getOrElseUpdate(s, dir)(
-      t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        .cache())
-
-  /** The thresholded pair counting over a basket table — basket form,
-    * not a self-join: the ordered pairs explode map-side from the
-    * sorted basket; a self-join on l_orderkey would shuffle the scan
-    * twice and materialize the join; this ships each basket once. The
-    * quadratic pair fan-out is per-basket (bounded, O(10) items),
-    * never per-corpus.
-    */
-  private def basketPairs(baskets: DataFrame): DataFrame =
-    baskets
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> transform(slice(ps, i + 2, size(ps)), y -> named_struct('pa', x, 'pb', y))))"))
-        .as("e"))
-      .select(col("e.pa").as("pa"), col("e.pb").as("pb"))
-      .groupBy(col("pa"), col("pb"))
-      .agg(count(lit(1)).as("n_orders"))
-      .filter(col("n_orders") >= CoPurchaseMinOrders)
-
-  private[operators] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    coPurchaseEdgesFrom(s, dir, orderBaskets(s, dir))
-
-  private def coPurchaseEdgesFrom(s: SparkSession, dir: String,
-      baskets: => DataFrame): DataFrame =
+  private[graft] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
     edgeCache.getOrElseUpdate(s, dir)(
-      // the thresholded edge list is ~n_edges ≪ the pair expansion
-      // (3.6k rows at sf0.1): materialize it eagerly ONCE — q93's
-      // iterations and q94's wedge joins then plan against a flat
-      // in-memory table instead of replaying the expansion per
-      // reference, and the pair-count scan never runs twice across
-      // the q93/q94 pair (same per-(session, dir) discipline as the
-      // LlmOps signature caches)
-      basketPairs(baskets).materialize(true))
+      orderBaskets(s, dir)
+        .select(explode(expr(
+          "flatten(transform(ps, (x, i) -> transform(slice(ps, i + 2, size(ps)), y -> named_struct('pa', x, 'pb', y))))"))
+          .as("e"))
+        .select(col("e.pa").as("pa"), col("e.pb").as("pb"))
+        .groupBy(col("pa"), col("pb"))
+        .agg(count(lit(1)).as("n_orders"))
+        .filter(col("n_orders") >= CoPurchaseMinOrders)
+        .materialize(true))
+
+  /** The one edge-cleaning step of the graph kernels (pageRank,
+    * triangleStats, bfsHops and LlmOps.connectedComponents): keep the
+    * two endpoint columns as named and drop null endpoints and
+    * self-loops. A (x, x) edge would feed rank back to its own node,
+    * close phantom wedges or give a singleton a component row, and a
+    * null would form a phantom node.
+    */
+  private[operators] def cleanEdges(e: DataFrame): DataFrame = {
+    val Array(a, b) = e.columns.map(col)
+    e.filter(a.isNotNull && b.isNotNull && a =!= b)
+  }
+
+  /** Both directions of a cleaned undirected edge list as (src, dst):
+    * the adjacency pageRank and bfsHops walk.
+    */
+  private def bothDirections(e0: DataFrame): DataFrame = {
+    val e = cleanEdges(e0.toDF("pa", "pb"))
+    e.select(col("pa").as("src"), col("pb").as("dst"))
+      .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+  }
 
   /** q93: PageRank over the co-purchase graph — [[PageRankIters]]
     * damped iterations (d = 0.85) in fixed-point longs.
@@ -127,14 +131,7 @@ object GraphOps {
     * → (node, deg, rank_fp).
     */
   def pageRank(e0: DataFrame, iters: Int = PageRankIters): DataFrame = {
-    // null endpoints and self-loops are dropped ONCE here (same hygiene
-    // as connectedComponents): a (x, x) edge would otherwise feed rank
-    // back to its own node and a null would form a phantom node
-    val e = e0.toDF("pa", "pb")
-      .filter(col("pa").isNotNull && col("pb").isNotNull &&
-        col("pa") =!= col("pb"))
-    val edges = e.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+    val edges = bothDirections(e0)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val nRow = deg.agg(count(lit(1)).as("n"))
     // node table: degree + per-corpus constants (teleport term, r0);
@@ -190,13 +187,8 @@ object GraphOps {
     */
   def triangleStats(edges: DataFrame): DataFrame = {
     // edge-list-sized; referenced three times below (degrees, wedge
-    // sides via `oriented`, and the closing join) — materialize once.
-    // Null endpoints / self-loops dropped with the same policy as
-    // pageRank and connectedComponents.
-    val e0 = edges.toDF("pa", "pb")
-      .filter(col("pa").isNotNull && col("pb").isNotNull &&
-        col("pa") =!= col("pb"))
-      .materialize(true)
+    // sides via `oriented`, and the closing join) — materialize once
+    val e0 = cleanEdges(edges.toDF("pa", "pb")).materialize(true)
     val deg = e0.select(col("pa").as("node"))
       .unionAll(e0.select(col("pb").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -251,50 +243,37 @@ object GraphOps {
   /** Multi-source BFS hop counts over a canonical undirected edge list:
     * (node, hops) with hops = shortest hop distance to ANY seed.
     *
-    * Frontier-based: each round expands only the nodes discovered in
-    * the previous round (one equi-join + one left-anti against the
-    * settled set, both map-side combinable aggregations after), and
-    * the loop stops the first round that discovers nothing — O(diameter)
-    * rounds, per-round shuffles proportional to the FRONTIER, never
-    * the graph. The settled table is materialized per round (the q62
-    * lesson: keep iterative lineage flat). Hop counts are integers, so
-    * the result is deterministic under any partitioning.
+    * Frontier-based over ONE flat settled table: round k expands only
+    * the nodes settled at hops k − 1 (one equi-join, one distinct and
+    * one left-anti against the settled table), appends what it finds
+    * at hops k, and checkpoints the result — one materialization per
+    * round, whose row count (observed on the way) ends the loop the
+    * first round that discovers nothing: O(diameter) rounds, per-round
+    * joins proportional to the FRONTIER. Each round plans over one
+    * checkpointed leaf (the q62 lesson: keep iterative lineage flat),
+    * and so does the returned table. Hop counts are integers, so the
+    * result is deterministic under any partitioning.
     */
   def bfsHops(e0: DataFrame, seeds: DataFrame, maxRounds: Int = BfsMaxHops): DataFrame = {
-    val e = e0.toDF("pa", "pb")
-      .filter(col("pa").isNotNull && col("pb").isNotNull &&
-        col("pa") =!= col("pb"))
-    val edges = e.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
-      .materialize(true)
-    var frontier = seeds.toDF("node").distinct()
+    val edges = bothDirections(e0).materialize(true)
+    var dist = seeds.toDF("node").distinct()
       .select(col("node"), lit(0L).as("hops"))
       .materialize(true)
-    // the settled set is the UNION OF FRONTIERS — each frontier is its
-    // round's eager checkpoint (plan flatness preserved), but the union
-    // is left lazy: the old per-round `dist.unionAll(next).materialize`
-    // re-copied EVERY settled node each round (O(rounds × nodes)
-    // checkpoint traffic + one extra job per round) just to flatten a
-    // union of already-flat tables. Frontiers are disjoint by
-    // construction (the anti-join), so the union IS dist.
-    val frontiers = scala.collection.mutable.ArrayBuffer(frontier)
     var round = 0
     var done = false
     while (!done && round < maxRounds) {
       round += 1
-      val settled = frontiers.reduce(_ unionAll _)
-      val next = frontier.join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), (col("hops") + 1).as("hops"))
-        .groupBy(col("node")).agg(min(col("hops")).as("hops"))
-        .join(settled.select(col("node")), Seq("node"), "left_anti")
+      val next = dist.filter(col("hops") === round - 1)
+        .join(edges, col("node") === col("src"))
+        .select(col("dst").as("node")).distinct()
+        .join(dist.select(col("node")), Seq("node"), "left_anti")
+      val found = Observation()
+      dist = dist.unionAll(next.select(col("node"), lit(round.toLong).as("hops"))
+          .observe(found, count(lit(1)).as("n")))
         .materialize(true)
-      if (next.isEmpty) done = true
-      else {
-        frontiers += next
-        frontier = next
-      }
+      done = found.get("n").asInstanceOf[Long] == 0L
     }
-    frontiers.reduce(_ unionAll _)
+    dist
   }
 
   /** q117: product blast radius — hop distance from the seed set
@@ -321,35 +300,31 @@ object GraphOps {
   /** q116: association rules over co-purchase pairs — support,
     * directional confidence, and lift for the part pairs that share
     * baskets (the frequent-itemset / market-basket staple, k = 2).
-    * Reuses the cached co-purchase counts; the per-part supports are
-    * one map-side-combinable count and join back as a dimension-sized
-    * table; the basket total is a broadcast 1-row aggregate. Ranking
-    * on rounded lift with (pa, pb) tiebreaks keeps the top-k
-    * engine-stable.
+    * Reuses the stored co-purchase counts. The per-part supports are
+    * one parts-sized checkpoint over the lazy basket subtree (one
+    * map-side-combinable count of the exploded baskets; collect_set
+    * already dedups each order's parts), and the basket total is
+    * observed on the same pass — one lineitem scan, nothing
+    * corpus-sized kept. Ranking on rounded lift with (pa, pb)
+    * tiebreaks keeps the top-k engine-stable.
     */
   val q116AssocRules: Q = (s, dir) => {
-    // ONE lineitem pass feeds everything (guide §1.2/§2.4): the cached
-    // basket table is shared by the edge build, the per-part supports
-    // (explode of the deduped baskets ≡ the old distinct-(okey, part)
-    // groupBy — collect_set already dedups), and the basket total (one
-    // basket row per distinct l_orderkey ≡ the old double-distinct
-    // count). The old form planned the (okey, part)-distinct subtree
-    // twice more on top of the edge build's own scan: 3 lineitem scans
-    // + 2 distinct shuffles → 1 scan + 1 basket shuffle, cached.
-    val baskets = orderBaskets(s, dir)
-    val nOrders = baskets.agg(count(lit(1)).as("nt"))
-    val psup = baskets.select(explode(col("ps")).as("part"))
+    val baskets = Observation()
+    val psup = orderBaskets(s, dir)
+      .observe(baskets, count(lit(1)).as("n"))
+      .select(explode(col("ps")).as("part"))
       .groupBy(col("part")).agg(count(lit(1)).as("c_part"))
-    coPurchaseEdgesFrom(s, dir, baskets)
+      .materialize(true)
+    val nt = lit(baskets.get("n").asInstanceOf[Long])
+    coPurchaseEdges(s, dir)
       .withColumnRenamed("n_orders", "c_ab")
       .join(psup.select(col("part").as("pa"), col("c_part").as("c_a")), Seq("pa"))
       .join(psup.select(col("part").as("pb"), col("c_part").as("c_b")), Seq("pb"))
-      .crossJoin(broadcast(nOrders))
       .select(col("pa"), col("pb"), col("c_ab"), col("c_a"), col("c_b"),
-        round(col("c_ab").cast("double") / col("nt"), 6).as("support"),
+        round(col("c_ab").cast("double") / nt, 6).as("support"),
         round(col("c_ab").cast("double") / col("c_a"), 6).as("conf_a_b"),
         round(col("c_ab").cast("double") / col("c_b"), 6).as("conf_b_a"),
-        round(col("nt") * col("c_ab").cast("double") /
+        round(nt * col("c_ab").cast("double") /
           (col("c_a") * col("c_b")), 6).as("lift"))
       .orderBy(col("lift").desc, col("pa").asc, col("pb").asc)
       .limit(AssocTopK)

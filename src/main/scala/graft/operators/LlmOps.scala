@@ -1515,14 +1515,11 @@ object LlmOps {
   def connectedComponents(
       pairs: DataFrame,
       smallLimit: Long = SmallGraphEdgeLimit): DataFrame = {
-    // Self-loops and null endpoints are dropped ONCE here so both
-    // regimes agree: a node whose only edge is (x,x) is a singleton and
-    // emits no row (callers label singletons via their left join), on
-    // the fast path exactly as on the large/small-star path.
-    val p = pairs.toDF("src", "dst")
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .persist()
+    // cleaned ONCE here so both regimes agree: a node whose only edge
+    // is (x,x) is a singleton and emits no row (callers label
+    // singletons via their left join), on the fast path exactly as on
+    // the large/small-star path
+    val p = GraphOps.cleanEdges(pairs.toDF("src", "dst")).persist()
     val nEdges = p.count()
     val out =
       if (nEdges <= smallLimit) {
@@ -1536,9 +1533,10 @@ object LlmOps {
     out
   }
 
-  /** Large-star/small-star connected components (big-graph path).
-    * Invariant: the edge set is kept canonical (a < b, distinct). Each
-    * round applies large-star (every node points its larger neighbors
+  /** Large-star/small-star connected components (big-graph path) over
+    * [[connectedComponents]]' cleaned (src, dst) pairs. Invariant: the
+    * edge set is kept canonical (a < b, distinct). Each round applies
+    * large-star (every node points its larger neighbors
     * at its neighborhood minimum) then small-star (every node's smaller
     * neighbors collapse onto the minimum), materialized once via
     * localCheckpoint. Converged when the edge set reaches its fixpoint:
@@ -1547,7 +1545,7 @@ object LlmOps {
     * guard is a correctness backstop, not a tuning knob.
     */
   private def largeSmallStarCC(pairs: DataFrame): DataFrame = {
-    var edges = pairs.filter(col("src") =!= col("dst"))
+    var edges = pairs
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()

@@ -953,7 +953,7 @@ object SnapshotStore {
   // ---- FIELD-ID mapping: rename-capable schema evolution -----------
 
   /** Read the whole content of a tiny sidecar file as UTF-8. */
-  private def readSidecar(s: SparkSession, p: Path): Option[String] = {
+  private[sources] def readSidecar(s: SparkSession, p: Path): Option[String] = {
     val f = fs(s, p.toString)
     if (!f.exists(p)) return None
     val in = f.open(p)
@@ -4239,8 +4239,6 @@ object SnapshotStore {
     */
   val q244SnapshotSpj: (SparkSession, String) => DataFrame = (s, dir) => {
     val (left, right) = ensureBucketedPair(s, dir)
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     val lt = catalogName(s, left)
     val rt = catalogName(s, right)
     s.sql(
@@ -4283,8 +4281,6 @@ object SnapshotStore {
     */
   val q245SnapshotPartitioned: (SparkSession, String) => DataFrame = (s, dir) => {
     val root = ensurePartitioned(s, dir)
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     val tbl = catalogName(s, root)
     s.sql(
       s"""SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars,
@@ -4324,9 +4320,6 @@ object SnapshotStore {
     */
   val q251SnapshotComposed: (SparkSession, String) => DataFrame = (s, dir) => {
     val root = ensureComposed(s, dir)
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     val tbl = catalogName(s, root)
     s.sql(
       s"""SELECT a.lang AS lang, count(*) AS n_docs,

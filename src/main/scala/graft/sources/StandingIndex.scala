@@ -135,32 +135,38 @@ object StandingIndex {
       table: String): (Long, Long) =
     tableSig(s, dir, table, Engine.table(s, dir, table).columns.toSeq)
 
+  /** The freshness meta row's one file, `<root>/meta`: one line
+    * "format_version n_docs corpus_sig", read and written on the driver
+    * through the Hadoop FileSystem like SnapshotStore's sidecars, so
+    * revalidating a fresh artifact launches no Spark job of its own.
+    */
+  private def metaPath(root: String) = new org.apache.hadoop.fs.Path(s"$root/meta")
+
+  /** The whole row, newline included: a torn write never parses. */
+  private val MetaRow = """(-?\d+) (-?\d+) (-?\d+)\n""".r
+
   /** Write the freshness meta row. Private: [[refresh]] is its one
-    * caller, so the commit marker is always written last.
+    * caller, so the commit marker is always written last. The delete
+    * also clears a row stored in the old parquet-directory form.
     */
   private def writeMeta(s: SparkSession, root: String,
       sig: (Long, Long)): Unit = {
-    import s.implicits._
-    Seq((MetaVersion, sig._1, sig._2))
-      .toDF("format_version", "n_docs", "corpus_sig")
-      .write.mode("overwrite").parquet(s"$root/meta")
+    val p = metaPath(root)
+    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    f.delete(p, true)
+    val out = f.create(p, false)
+    try out.write(s"$MetaVersion ${sig._1} ${sig._2}\n".getBytes("UTF-8"))
+    finally out.close()
   }
 
-  /** The stored meta row, if the artifact has a readable one. The
-    * existence pre-check keeps a first build (no artifact yet — the
-    * COMMON case on a fresh machine) from detouring through an
-    * AnalysisException that Spark logs as a full ERROR stack trace.
+  /** The stored meta row, if the artifact has a readable one. A
+    * missing, torn or unparseable row — or one in the old
+    * parquet-directory form — reads as absent, so the artifact
+    * rebuilds.
     */
   private[graft] def readMeta(s: SparkSession, root: String): Option[(Long, Long, Long)] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$root/meta")
-      if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-        return None
-      s.read.parquet(s"$root/meta").collect() match {
-        case Array(r) => Some((r.getAs[Long]("format_version"),
-          r.getAs[Long]("n_docs"), r.getAs[Long]("corpus_sig")))
-        case _ => None
-      }
+    try SnapshotStore.readSidecar(s, metaPath(root)).collect {
+      case MetaRow(v, n, sig) => (v.toLong, n.toLong, sig.toLong)
     } catch { case _: Exception => None }
 
   /** True iff the stored artifact at `root` was built from exactly the
@@ -213,7 +219,7 @@ object StandingIndex {
     * under [[SimIndex.RebuildKey]]) rebuild through the same path.
     */
   private[graft] def invalidate(s: SparkSession, root: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/meta")
+    val p = metaPath(root)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     latch.remove(s, root)
   }

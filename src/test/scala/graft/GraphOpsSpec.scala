@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Union
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GraphOps
@@ -76,6 +78,11 @@ class GraphOpsSpec extends AnyFunSuite {
     val triNoisy = GraphOps.triangleStats(noisy.toDF("pa", "pb"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(triNoisy == tri(clean))
+    def hops(edges: DataFrame): Map[Long, Long] =
+      GraphOps.bfsHops(edges, Seq(1L).toDF("node"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(hops(noisy.toDF("pa", "pb")) == hops(clean.toDF("pa", "pb")))
+    assert(hops(noisy.toDF("pa", "pb")) == Map(1L -> 0L, 2L -> 1L, 3L -> 1L))
   }
 
   test("bfsHops: multi-source levels on a known graph, frontier terminates") {
@@ -97,6 +104,27 @@ class GraphOpsSpec extends AnyFunSuite {
     val got = GraphOps.bfsHops(edges.toDF("pa", "pb"), Seq(1L).toDF("node"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 0L, 2L -> 1L, 5L -> 1L, 3L -> 2L, 4L -> 2L))
+  }
+
+  test("the graph family keeps no cached table and bfsHops returns one checkpointed leaf") {
+    val dir = "/root/testdata/sf0.001"
+    // every spec in the suite JVM shares this session's cache manager:
+    // start from an empty one so only the four graph queries count
+    spark.catalog.clearCache()
+    Seq("q93_pagerank", "q94_triangles", "q116_assoc_rules", "q117_bfs_hops")
+      .foreach(q => GraphOps.queries(q)(spark, dir)
+        .write.format("noop").mode("overwrite").save())
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a graph query left a table in the session's cache")
+    val e = GraphOps.coPurchaseEdges(spark, dir).select(col("pa"), col("pb"))
+    val dist = GraphOps.bfsHops(e,
+      e.select(col("pa").as("node")).filter(col("node") < GraphOps.BfsSeedBelow))
+    val plan = dist.queryExecution.analyzed
+    assert(plan.collect { case u: Union => u }.isEmpty,
+      s"bfsHops returned a union of frontiers:\n$plan")
+    assert(plan.collectLeaves().map(_.getClass.getSimpleName) == Seq("LogicalRDD"),
+      s"bfsHops did not return one checkpointed table:\n$plan")
+    assert(dist.count() > 0L)
   }
 
   test("pageRank matches the reference on random graphs (property)") {
