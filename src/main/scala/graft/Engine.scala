@@ -10,11 +10,10 @@ import org.apache.spark.sql.execution.SparkStrategy
   *
   * Scale notes (SURVEY.md §6): every knob here is chosen so the same code
   * runs unchanged on a real multi-executor cluster — local[32] is only the
-  * test harness. Shuffle partitions default to 32 to match local cores;
-  * on a cluster this is overridden by AQE coalescing
-  * (spark.sql.adaptive.coalescePartitions.enabled) which re-sizes
-  * post-shuffle partitions from runtime statistics, so the setting is a
-  * floor, not a hand-tuned constant.
+  * test harness. Shuffle partitions are a fixed 32, whatever the master;
+  * AQE coalescing (spark.sql.adaptive.coalescePartitions.enabled)
+  * re-sizes post-shuffle partitions from runtime statistics, so 32 is
+  * the count AQE coalesces down from.
   */
 object Engine {
 

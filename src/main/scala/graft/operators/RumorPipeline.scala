@@ -18,11 +18,11 @@ import graft.sources.RumorSource
   * Order sensitivity (SURVEY §1.4): Spark relations are unordered, so
   * crawl encounter order is carried explicitly as
   * (subject_idx, page_no, doc_pos) and every dedup/sort pins ties on it
-  * — never bare dropDuplicates. Every per-tag window (fill-forward,
-  * 80-per-page cap, per-tag dedup, 150-cap) partitions by subject_idx
-  * first, which the key-grouped page scan (one task per subject)
-  * already satisfies; the only exchange is the global first-wins dedup
-  * on the 152-char key.
+  * — never bare dropDuplicates. The page scan reads as one partition
+  * (RumorSource.elementRows), which satisfies every per-tag window
+  * (fill-forward, 80-per-page cap, per-tag dedup, 150-cap), the global
+  * first-wins dedup on the 152-char key and the final top-n: a request
+  * plans no exchange and runs one job.
   */
 object RumorPipeline {
 
@@ -192,9 +192,9 @@ object RumorPipeline {
     * dbg counts only the pages actually fetched, and it records a
     * page{n}Error key only if the cap didn't stop the crawl before page
     * n (fetchRumors.js:133-148). Our DSv2 scan reads every existing
-    * page, subjects in parallel (bounded by the 10-page cap; results
-    * are identical because the 150-cap filter discards the rest), so the
-    * observes collect PER-(slug,page) sums and the driver re-applies
+    * page (bounded by the 10-page cap; results are identical because
+    * the 150-cap filter discards the rest), so the observes collect
+    * PER-(slug,page) sums and the driver re-applies
     * the reference's stop rule when assembling the envelope: pages
     * fetched = up to the cap-crossing page if the tag crossed 150,
     * otherwise every existing page.

@@ -5,24 +5,20 @@ import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 implementation of the paginated tag-page scan
   * (SURVEY.md §2A#1-3 "custom work"): one `InputPartition` per
-  * (slug, page), each keyed on its subject (`HasPartitionKey`), with
+  * (slug, page), in subject then page order, with
   * `SupportsPushDownLimit` so `LIMIT n` stops each page's element
   * emission early (the reference's per-page cap shape,
-  * fetchRumors.js:119).
-  *
-  * The scan reports `KeyGroupedPartitioning(identity(subject_idx))`, so
-  * Spark reads each subject's pages in one task, in page order — the
-  * reference's per-tag crawl (fetchRumors.js:133-151) — and every
-  * per-subject window downstream needs no exchange.
+  * fetchRumors.js:119). [[RumorSource.elementRows]] reads the
+  * partitions as one task, in that order — the reference's sequential
+  * crawl (fetchRumors.js:133-151).
   *
   * Pagination follows the reference's permissive error semantics: page
   * existence is probed at planning time, sequentially per slug, and the
@@ -111,14 +107,12 @@ final class RumorPagesScanBuilder(corpusSpec: String, slugsCsv: String, maxPages
   override def build(): Scan = new RumorPagesScan(corpusSpec, slugsCsv, maxPages, limit)
 }
 
-/** One page of one subject's crawl; the subject is its key group. */
+/** One page of one subject's crawl. */
 final case class RumorPagePartition(slug: String, subjectIdx: Int, pageNo: Int)
-    extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow = new GenericInternalRow(Array[Any](subjectIdx))
-}
+    extends InputPartition
 
 final class RumorPagesScan(corpusSpec: String, slugsCsv: String, maxPages: Int,
-    limit: Int) extends Scan with Batch with SupportsReportPartitioning {
+    limit: Int) extends Scan with Batch {
   override def readSchema(): StructType = RumorPagesSource.Schema
   override def toBatch: Batch = this
   override def description(): String =
@@ -128,8 +122,7 @@ final class RumorPagesScan(corpusSpec: String, slugsCsv: String, maxPages: Int,
   /** Sequential EXISTENCE probe per slug (PageProvider.exists — stat /
     * HEAD, never a body read); first missing page ends the tag
     * (permissive error semantics). Bodies are fetched exactly once, in
-    * the executors' readers. Planned once per scan, so the reported
-    * partitioning and the planned partitions always agree.
+    * the executors' readers. Planned once per scan.
     */
   private lazy val pages: Array[InputPartition] = {
     val provider = RumorPagesSource.providerFromSpec(corpusSpec)
@@ -143,11 +136,6 @@ final class RumorPagesScan(corpusSpec: String, slugsCsv: String, maxPages: Int,
   }
 
   override def planInputPartitions(): Array[InputPartition] = pages
-
-  /** One key group per subject with at least one page. */
-  override def outputPartitioning(): Partitioning =
-    new KeyGroupedPartitioning(Array(Expressions.identity("subject_idx")),
-      pages.collect { case p: RumorPagePartition => p.subjectIdx }.distinct.length)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new RumorPagesReaderFactory(corpusSpec, limit)

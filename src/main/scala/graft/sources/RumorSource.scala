@@ -116,11 +116,14 @@ object RumorSource {
     }
   }
 
-  /** The distributed element-row scan through the DataSource V2 source
-    * (RumorPagesSource): one input partition per (slug, page), grouped
-    * into one task per subject, fetch + parse in executors, limit
-    * pushdown supported. `corpusSpec` is "dir:<path>" or
-    * "classpath:<prefix>".
+  /** The element-row scan through the DataSource V2 source
+    * (RumorPagesSource): one input partition per (slug, page), read as
+    * ONE task that fetches and parses. A request reads at most MaxPages
+    * pages per subject, so one task costs less than a shuffle, and its
+    * `SinglePartition` satisfies every window and the final top-n of
+    * the pipeline: no exchange, one job. A DSv2 scan cannot report
+    * `SinglePartition` itself, hence the coalesce. `corpusSpec` is
+    * "dir:<path>" or "classpath:<prefix>".
     */
   def elementRows(spark: SparkSession, corpusSpec: String,
       slugs: Seq[String]): DataFrame =
@@ -129,4 +132,5 @@ object RumorSource {
       .option("slugs", slugs.mkString(","))
       .option("maxPages", MaxPages.toString)
       .load()
+      .coalesce(1)
 }

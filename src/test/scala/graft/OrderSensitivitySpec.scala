@@ -37,15 +37,14 @@ class OrderSensitivitySpec extends AnyFunSuite {
     }
   }
 
-  test("a duplicate-subject request gives the same payload over the key-grouped scan as repartitioned") {
-    // subject 2 crawls the same tag as subject 0; the key-grouped scan
-    // reads each subject's pages in one task, repartition(17) scatters
-    // every page's rows
+  test("a duplicate-subject request: one-task scan and repartition(17) agree") {
+    // subject 2 crawls the same tag as subject 0; the scan reads every
+    // page in one task, repartition(17) scatters every page's rows
     val rows = RumorSource.elementRows(spark, RumorPipeline.BundledCorpus,
       Seq("jalen_brunson", "new_york_knicks", "jalen_brunson"))
-    val grouped = pipelineFrom(rows)
-    assert(grouped.length == 8)
-    assert(pipelineFrom(rows.repartition(17)) == grouped)
+    val oneTask = pipelineFrom(rows)
+    assert(oneTask.length == 8)
+    assert(pipelineFrom(rows.repartition(17)) == oneTask)
   }
 
   test("first-wins dedup keeps the crawl-order winner regardless of partitioning") {

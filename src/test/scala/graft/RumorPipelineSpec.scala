@@ -3,17 +3,12 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.connector.read.HasPartitionKey
-import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ResultQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.RumorPipeline
-import graft.sources.{HtmlDom, RumorPagesScan, RumorPagesSource, RumorSource}
+import graft.sources.{HtmlDom, RumorPagePartition, RumorPagesScan, RumorPagesSource, RumorSource}
 
 /** Reference-semantics golden tests (SURVEY.md §5 item 3): the frozen
   * corpus through the full pipeline, each assertion pinned to a cited
@@ -287,19 +282,18 @@ class RumorPipelineSpec extends AnyFunSuite {
       s"""{"subject":"a${bs}bb${bs}fc${bs}ud800d${bs}udc00e$emoji","items":[]}""")
   }
 
-  test("a three-subject request plans exactly one shuffle: the global dedup") {
+  test("a duplicate-subject request plans no exchange and runs one job") {
+    // the one-partition scan satisfies every window and the final top-n
     val df = RumorPipeline.run(spark, RumorPipeline.BundledCorpus,
-      RumorPipeline.DefaultSubjects + ", Nobody Atall")
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan) // the initial plan
-      case other => Seq(other)
-    }.flatten
-    val exchanges = nodes(df.queryExecution.executedPlan).collect {
-      case e: ShuffleExchangeExec => e
-    }
-    assert(exchanges.length == 1, df.queryExecution.executedPlan.toString)
-    assert(exchanges.head.outputPartitioning.asInstanceOf[HashPartitioning]
-      .expressions.map(_.asInstanceOf[Attribute].name) == Seq("key"))
+      RumorPipeline.DefaultSubjects + ", Nobody Atall, Jalen Brunson")
+    val aqe = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+    assert(aqe.executedPlan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      aqe.executedPlan.toString) // the initial plan
+    assert(df.collect().length == 8)
+    // the final plan's one query stage is the result stage: no map stage
+    // ran before it
+    assert(aqe.executedPlan.collect { case q: QueryStageExec => q }
+      .map(_.getClass) == Seq(classOf[ResultQueryStageExec]), aqe.executedPlan.toString)
   }
 
   test("500 envelope carries debug context (fetchRumors.js:216)") {
@@ -311,24 +305,21 @@ class RumorPipelineSpec extends AnyFunSuite {
 
   test("DSv2 source: one input partition per (slug, page); limit pushdown") {
     // the scan plans one partition per page (2 jb pages + 1 knicks
-    // page), each keyed on its subject; Spark groups them into one task
-    // per subject
+    // page), in crawl order; elementRows reads them as one partition
     val scan = new RumorPagesScan(RumorPipeline.BundledCorpus,
       "jalen_brunson,new_york_knicks", RumorSource.MaxPages, Int.MaxValue)
-    val parts = scan.planInputPartitions()
-    assert(parts.length == 3)
-    assert(parts.map(_.asInstanceOf[HasPartitionKey].partitionKey().getInt(0)).toSeq ==
-      Seq(0, 0, 1))
-    scan.outputPartitioning() match {
-      case k: KeyGroupedPartitioning =>
-        assert(k.keys().map(_.describe()).toSeq == Seq("subject_idx"))
-        assert(k.numPartitions() == 2)
-      case other => fail(s"expected key-grouped output, got $other")
-    }
-    val df = RumorSource.elementRows(spark, RumorPipeline.BundledCorpus,
-      Seq("jalen_brunson", "new_york_knicks"))
-    assert(df.rdd.getNumPartitions == 2) // one task per subject
-    val lim = df.limit(5)
+    assert(scan.planInputPartitions().toSeq == Seq(
+      RumorPagePartition("jalen_brunson", 0, 1),
+      RumorPagePartition("jalen_brunson", 0, 2),
+      RumorPagePartition("new_york_knicks", 1, 1)))
+    assert(RumorSource.elementRows(spark, RumorPipeline.BundledCorpus,
+      Seq("jalen_brunson", "new_york_knicks")).rdd.getNumPartitions == 1)
+    // the coalesce above the scan blocks limit pushdown, so check it on
+    // the raw read
+    val lim = spark.read.format("graft.sources.RumorPagesSource")
+      .option("corpus", RumorPipeline.BundledCorpus)
+      .option("slugs", "jalen_brunson,new_york_knicks")
+      .load().limit(5)
     assert(lim.queryExecution.executedPlan.toString.contains("pushedLimit=5"))
     assert(lim.count() == 5)
   }
@@ -350,6 +341,22 @@ class RumorPipelineSpec extends AnyFunSuite {
       s"expected 3 body fetches, got ${CountingCorpus.fetches.get()}")
     assert(CountingCorpus.probes.get() == 5,
       s"expected 5 existence probes, got ${CountingCorpus.probes.get()}")
+  }
+
+  test("handle() fetches each (subject occurrence, page) once, debug or not") {
+    RumorPagesSource.registerScheme("counting", p => new CountingCorpus(p))
+    val spec = "counting:" + RumorPipeline.BundledCorpus.stripPrefix("classpath:")
+    val q = RumorPipeline.DefaultSubjects + ", Jalen Brunson"
+    // jb pages 1-2, knicks page 1, jb pages 1-2 again: 5 body reads; the
+    // scan probes jb 1-3, knicks 1-2 and jb 1-3 again
+    CountingCorpus.reset()
+    assert(RumorPipeline.handle(spark, spec, q).contains(""""items":[{"""))
+    assert((CountingCorpus.fetches.get(), CountingCorpus.probes.get()) == (5, 8))
+    // debug adds one probe pass per distinct slug for the page errors
+    CountingCorpus.reset()
+    val dbg = RumorPipeline.handle(spark, spec, q, debug = true)
+    assert(dbg.contains(""""returning":8"""), dbg)
+    assert((CountingCorpus.fetches.get(), CountingCorpus.probes.get()) == (5, 13))
   }
 
   test("HtmlDom container fallback chain (fetchRumors.js:79-84)") {
