@@ -1,18 +1,17 @@
 package graft
 
-/** Dev utility: print the executed physical plan of one or more declared
-  * queries against a fixture dir — the `.explain` feedback loop the
-  * scale-audit workflow uses (`sbt "runMain graft.Explain q138_domain_cap"`).
-  * SPARK_GRAFT_SF_DIR overrides the default sf0.001 fixtures.
+/** Dev utility: print the executed physical plan of each selected query
+  * (every declared query by default, see [[Harness]]) — the `.explain`
+  * feedback loop the scale-audit workflow uses
+  * (`SPARK_GRAFT_QUERIES=q138_domain_cap sbt "runMain graft.Explain"`).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = Engine.session(master = "local[4]")
-    args.foreach { name =>
+    val h = new Harness("explain")
+    h.names.foreach { name =>
       println(s"==== $name ====")
-      SparkEntry.queries(name)(spark, dir).explain("formatted")
+      h.query(name).explain("formatted")
     }
-    spark.stop()
+    h.stop()
   }
 }

@@ -1,31 +1,27 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import graft.functions.ScalarOps.jsonString
+/** Driver-run correctness dump (`runMain graft.Verify <sfDir> <outDir>`):
+  * each selected query's result (every declared query by default, see
+  * [[Harness]]) → parquet, plus oracle_sql.json, for the driver's DuckDB
+  * compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.session(s"local[$cpus]")
+    val h = new Harness("verify", sfDir)
     new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (the driver always runs unfiltered):
-    // SPARK_GRAFT_QUERIES=q93_pagerank,q94_triangles
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
     // canonical sidecar (VERDICT r6 #1): per-query sha256 over sorted row
     // text, computed from the WRITTEN parquet (same bytes the driver's
     // DuckDB compare reads, so parquet type round-trips are captured),
     // plus the sorted row text itself for value-by-value diffing.
-    val sidecar = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val sidecar = scala.collection.mutable.Map.empty[String, String]
     val MaxDumpRows = 200000
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    h.names.foreach { name =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        h.query(name).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        val canon = Canonical.rows(spark.read.parquet(s"$outDir/$name"))
+        val canon = Canonical.rows(h.spark.read.parquet(s"$outDir/$name"))
         sidecar(name) = Canonical.sha256(canon)
         // always remove first: an over-cap result must not leave a
         // PREVIOUS run's row text next to this run's parquet/hash
@@ -38,7 +34,7 @@ object Verify {
             if (canon.isEmpty) "" else canon.mkString("", "\n", "\n"))
       }
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        h.log(s"$name failed: ${e.getMessage}")
         // a failed query must not leave a PREVIOUS run's parquet in
         // place — a reused outDir would let stale results pass the
         // driver's hash compare and mask the regression
@@ -54,25 +50,15 @@ object Verify {
         if (staleTxt.exists()) staleTxt.delete()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val hashes = sidecar
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/canonical_hashes.json"), hashes)
-    spark.stop()
+    // both files list their keys in the declared maps' own order, the
+    // order these files have always had
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
+    val selected = h.names.toSet
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.filter { case (k, _) => selected(k) }))
+    Files.writeString(Paths.get(s"$outDir/canonical_hashes.json"),
+      obj(SparkEntry.queries.keys.toSeq.flatMap(k => sidecar.get(k).map(k -> _))))
+    h.stop()
   }
 }

@@ -98,6 +98,32 @@ object ScalarOps {
     sb.toString
   }
 
+  /** JSON string literal as `JSON.stringify` writes it (ES2019): the
+    * two-character escapes for backspace, form feed, newline, return and
+    * tab, and a six-character lowercase-hex escape for every other
+    * control character and for a lone surrogate.
+    */
+  def jsonString(s: String): String = {
+    val sb = new StringBuilder("\"")
+    for (i <- 0 until s.length) s.charAt(i) match {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\b' => sb.append("\\b")
+      case '\f' => sb.append("\\f")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c if Character.isHighSurrogate(c) &&
+          i + 1 < s.length && Character.isLowSurrogate(s.charAt(i + 1)) => sb.append(c)
+      case c if Character.isLowSurrogate(c) &&
+          i > 0 && Character.isHighSurrogate(s.charAt(i - 1)) => sb.append(c)
+      case c if Character.isSurrogate(c) => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"').toString
+  }
+
   private val AnchorEnd = Pattern.compile(
     "<a[^>]*href=\"([^\"]+)\"[^>]*>([^<]+)</a>\\s*$", Pattern.CASE_INSENSITIVE)
   private val TrailingSlashes = Pattern.compile("/+$")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ScalarOps, Scalars}
+import graft.functions.ScalarOps.jsonString
 import graft.sources.RumorSource
 
 /** The reference's signature query pipeline, end-to-end, Spark-first
@@ -210,8 +211,8 @@ object RumorPipeline {
     // issuing fresh network probes from an error handler could block on
     // the very origin that just failed
     def dbgBase: String =
-      s""""subjects":[${subjects.map(jsonStr).mkString(",")}],""" +
-        s""""slugs":[${slugs.map(jsonStr).mkString(",")}]"""
+      s""""subjects":[${subjects.map(jsonString).mkString(",")}],""" +
+        s""""slugs":[${slugs.map(jsonString).mkString(",")}]"""
     try {
       if (!debug) return jsonEnvelope(qRaw, run(spark, corpusSpec, qRaw))
       import org.apache.spark.sql.Observation
@@ -294,14 +295,14 @@ object RumorPipeline {
       val errsDeduped = errs.distinctBy(_._1)
       val dbgJson =
         s""""debug":{$dbgBase""" +
-          errsDeduped.map { case (k, v) => s",${jsonStr(k)}:${jsonStr(v)}" }.mkString +
+          errsDeduped.map { case (k, v) => s",${jsonString(k)}:${jsonString(v)}" }.mkString +
           s""","scannedNodes":${seqSum(oScan)},"parsedItemsOnPage":${seqSum(oParsed)},""" +
           s""""totalMerged":${metric(oMerged, "n")},"totalAfterDedup":${metric(oDedup, "n")},""" +
           s""""returning":${rows8.length}}"""
       base.dropRight(1) + "," + dbgJson + "}"
     } catch {
       case e: Exception => // 500 envelope includes debug (ref fetchRumors.js:216)
-        s"""{"error":${jsonStr(Option(e.getMessage).getOrElse("Unknown error"))},""" +
+        s"""{"error":${jsonString(Option(e.getMessage).getOrElse("Unknown error"))},""" +
           s""""debug":{$dbgBase}}"""
     }
   }
@@ -309,32 +310,6 @@ object RumorPipeline {
   // ---------------------------------------------------------------
   // Sinks
   // ---------------------------------------------------------------
-
-  /** JSON string literal as `JSON.stringify` writes it (ES2019): the
-    * two-character escapes for backspace, form feed, newline, return and
-    * tab, and a six-character lowercase-hex escape for every other
-    * control character and for a lone surrogate.
-    */
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    for (i <- 0 until s.length) s.charAt(i) match {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\b' => sb.append("\\b")
-      case '\f' => sb.append("\\f")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c if Character.isHighSurrogate(c) &&
-          i + 1 < s.length && Character.isLowSurrogate(s.charAt(i + 1)) => sb.append(c)
-      case c if Character.isLowSurrogate(c) &&
-          i > 0 && Character.isHighSurrogate(s.charAt(i - 1)) => sb.append(c)
-      case c if Character.isSurrogate(c) => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
 
   /** JSON response envelope {subject, items[]} (fetchRumors.js:211-214,
     * 220-226), field order matching JSON.stringify of the reference's
@@ -346,14 +321,14 @@ object RumorPipeline {
   def jsonEnvelopeRows(subject: String,
       collected: Array[org.apache.spark.sql.Row]): String = {
     val rows = collected.map { r =>
-      s"""{"date":${jsonStr(r.getAs[String]("date"))},""" +
-        s""""date_pretty":${jsonStr(r.getAs[String]("date_pretty"))},""" +
-        s""""snippet_html":${jsonStr(r.getAs[String]("snippet_html"))},""" +
-        s""""sourceName":${jsonStr(r.getAs[String]("sourceName"))},""" +
-        s""""sourceUrl":${jsonStr(r.getAs[String]("sourceUrl"))},""" +
+      s"""{"date":${jsonString(r.getAs[String]("date"))},""" +
+        s""""date_pretty":${jsonString(r.getAs[String]("date_pretty"))},""" +
+        s""""snippet_html":${jsonString(r.getAs[String]("snippet_html"))},""" +
+        s""""sourceName":${jsonString(r.getAs[String]("sourceName"))},""" +
+        s""""sourceUrl":${jsonString(r.getAs[String]("sourceUrl"))},""" +
         s""""suppressSource":${r.getAs[Boolean]("suppressSource")}}"""
     }
-    s"""{"subject":${jsonStr(subject)},"items":[${rows.mkString(",")}]}"""
+    s"""{"subject":${jsonString(subject)},"items":[${rows.mkString(",")}]}"""
   }
 
   /** Footer renderer (ref index.html:52-61). */

@@ -4385,10 +4385,12 @@ object SnapshotStore {
       val dataBefore = withKind(manifest(s, root, 1L))
         .filter(col("kind") === "data")
         .select("path").collect().map(_.getString(0)).toSet
-      val tbl = catalogName(s, root)
-      s.conf.set(DeleteModeKey, "merge-on-read")
-      try s.sql(s"DELETE FROM $tbl WHERE lang = 'de'")
-      finally s.conf.unset(DeleteModeKey)
+      // an isolated session carries the mode conf, so the shared
+      // session's own setting (if any) survives the build
+      val ms = s.newSession()
+      val tbl = catalogName(ms, root)
+      ms.conf.set(DeleteModeKey, "merge-on-read")
+      ms.sql(s"DELETE FROM $tbl WHERE lang = 'de'")
       require(currentSnapshot(s, root) == 2L,
         "the MOR DELETE must land as one commit")
       val m2 = withKind(manifest(s, root, 2L))

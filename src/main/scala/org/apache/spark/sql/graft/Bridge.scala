@@ -23,4 +23,10 @@ object Bridge {
     */
   def sessionUuid(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
+
+  /** Block until every event posted so far has reached every listener
+    * (`private[spark]`): a job count read after it is exact.
+    */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

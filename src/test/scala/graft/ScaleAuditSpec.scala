@@ -82,11 +82,34 @@ class ScaleAuditSpec extends AnyFunSuite {
     */
   private lazy val fleet: Seq[(String, Seq[SparkPlan])] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
+      val before = spark.conf.getAll
       val plan =
         try q(spark, dir).queryExecution.executedPlan
         catch { case e: Throwable => fail(s"$name failed to plan: $e") }
+      val after = spark.conf.getAll
+      (before.keySet ++ after.keySet)
+        .filter(k => before.get(k) != after.get(k) && !sessionConfOk(k))
+        .foreach(k => confLeaks += s"$name: $k ${before.get(k)} -> ${after.get(k)}")
       name -> wholePlan(plan)
     }
+
+  /** Session conf a query may leave behind: only the snapshot catalog's
+    * registration (`SnapshotStore.catalogName`), which every SQL route
+    * into the store sets to the same constant values, so it reads the
+    * same whichever query set it first.
+    */
+  private val sessionConfOk =
+    Set("spark.sql.catalog.graft_snap", "spark.sql.catalog.graft_snap.base")
+
+  /** Filled while `fleet` builds: one line per conf key a query's
+    * construction or planning changed.
+    */
+  private val confLeaks = scala.collection.mutable.ArrayBuffer.empty[String]
+
+  test("no query's construction or planning leaves session conf behind") {
+    assert(fleet.nonEmpty)
+    assert(confLeaks.isEmpty, s"session conf leaks:\n${confLeaks.mkString("\n")}")
+  }
 
   test("no query plans a CartesianProduct or an unbounded global window") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]

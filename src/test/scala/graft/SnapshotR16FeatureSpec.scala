@@ -180,4 +180,18 @@ class SnapshotR16FeatureSpec extends AnyFunSuite {
     assert(!SnapshotTableSource.lastAggPushed.get(root),
       "a non-partition GROUP BY column must decline the metadata path")
   }
+
+  test("the q247 build runs its merge-on-read DELETE without touching the caller's delete mode") {
+    val dir = "/root/testdata/sf0.001"
+    // a fresh session and an absent store: the build really runs
+    val ss = spark.newSession()
+    val root = new org.apache.hadoop.fs.Path(SnapshotStore.morSqlRoot(dir))
+    root.getFileSystem(ss.sparkContext.hadoopConfiguration).delete(root, true)
+    ss.conf.set(SnapshotStore.DeleteModeKey, "merge-on-read")
+    assert(SparkEntry.queries("q247_snapshot_mor_delete")(ss, dir).count() > 0L)
+    assert(SnapshotStore.currentSnapshot(ss, root.toString) == 2L,
+      "the build's DELETE landed as its second commit")
+    assert(ss.conf.getOption(SnapshotStore.DeleteModeKey).contains("merge-on-read"),
+      "a build must leave the session's own delete mode as it found it")
+  }
 }
