@@ -377,8 +377,7 @@ object IndexOps {
     import graft.sources.StandingIndex
     val root = hdrRoot(dir)
     StandingIndex.ensureArtifact(s, root)(StandingIndex.refresh(s, root,
-      StandingIndex.withLayout(StandingIndex.tableSig(s, dir, "documents",
-        Seq("doc_id", "lang", "source", "n_chars")), HdrLayout)) {
+      StandingIndex.inputSig(s, dir, Seq("documents"), HdrLayout)) {
       hdrSketch(t(s, dir, "documents"), "n_chars", Seq("lang", "source"))
         .coalesce(1).write.mode("overwrite").parquet(s"$root/sk")
     })

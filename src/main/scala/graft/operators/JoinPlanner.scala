@@ -246,27 +246,11 @@ object JoinPlanner {
   private[graft] def statsRoot(dir: String): String =
     graft.sources.StandingIndex.artifactRoot(dir, "jpstats")
 
-  /** Content signature over EVERY profiled table (all columns — the
-    * byte-width stats read the string columns too): Σ per-table
-    * multiset hash, table name folded in so moving rows between
-    * tables can't cancel. Same comparator-only discipline as
-    * [[graft.sources.StandingIndex.tableSig]].
-    */
   /** Stored-stats layout version, folded into the signature — a schema
     * change to the stats table (new columns, new convention) bumps
     * this and invalidates every stored jpstats artifact at once.
     */
   private val JpStatsLayout = 2L
-
-  private[graft] def statsSig(s: SparkSession, dir: String): (Long, Long) = {
-    val M = graft.sources.StandingIndex.SigMod
-    val per = statsTables.map { tn =>
-      val (n, sg) = graft.sources.StandingIndex.tableSig(s, dir, tn)
-      (n, Math.floorMod(
-        scala.util.hashing.MurmurHash3.stringHash(tn).toLong + sg, M))
-    }
-    (per.map(_._1).sum, Math.floorMod(per.map(_._2).sum, M))
-  }
 
   /** The planner's statistics table as a STANDING ARTIFACT — the
     * ANALYZE pass (10 per-key count aggregations) runs once per
@@ -290,7 +274,7 @@ object JoinPlanner {
   private[graft] def ensureStatsValidated(s: SparkSession, dir: String): Unit = {
     val root = statsRoot(dir)
     graft.sources.StandingIndex.refresh(s, root,
-        graft.sources.StandingIndex.withLayout(statsSig(s, dir), JpStatsLayout)) {
+        graft.sources.StandingIndex.inputSig(s, dir, statsTables, JpStatsLayout)) {
       statsPairs.map { case (r, c) => statsRow(s, dir, r, c) }
         .reduce(_ unionByName _)
         .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")

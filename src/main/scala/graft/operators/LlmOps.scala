@@ -739,9 +739,8 @@ object LlmOps {
       layout: Long)(build: String => Unit): String = {
     import graft.sources.StandingIndex
     val root = StandingIndex.artifactRoot(dir, prefix)
-    StandingIndex.refresh(s, root, StandingIndex.withLayout(
-      StandingIndex.tableSig(s, dir, "embeddings", Seq("vec_id", "embedding")),
-      layout))(build(root))
+    StandingIndex.refresh(s, root,
+      StandingIndex.inputSig(s, dir, Seq("embeddings"), layout))(build(root))
     root
   }
 

@@ -82,7 +82,7 @@ object BucketStore {
 
   /** Bucket-store layout version, folded into the signature. Bumped
     * to 2 when the bucket count became bytes-derived (the count itself
-    * is folded into the signature too, so a count change — target
+    * is folded into the layout salt too, so a count change — target
     * resize, table growth past a bucket boundary — rebuilds).
     */
   private val BktLayout = 2L
@@ -99,21 +99,20 @@ object BucketStore {
     s"graft_bkt_${t}_$key"
   }
 
-  /** Content signature of the tables a bucketed family stores: per
-    * (table, key) side — both folded in, so moving rows between tables
-    * cannot cancel and a changed key rebuilds — plus the bucket count
-    * `nb`, so a count change (target resize, table growth past a bucket
-    * boundary) rebuilds too.
+  /** [[StandingIndex.refresh]] a bucketed family stored at `root`
+    * against its sides' tables. The layout salt carries [[BktLayout]],
+    * every (table, key) side and the bucket count `nb`, so a changed
+    * key or count rebuilds; a stale store is rewritten, a fresh one
+    * re-registered in this session's catalog.
     */
-  private def bktSig(s: SparkSession, dir: String,
-      sides: Seq[(String, String)], nb: Int): (Long, Long) = {
-    val M = StandingIndex.SigMod
-    val per = sides.map { case (t, k) =>
-      val (n, sg) = StandingIndex.tableSig(s, dir, t)
-      (n, Math.floorMod(
-        scala.util.hashing.MurmurHash3.stringHash(s"$t:$k").toLong + sg, M))
-    }
-    (per.map(_._1).sum, Math.floorMod(per.map(_._2).sum + nb.toLong, M))
+  private def refreshBucketed(s: SparkSession, dir: String, root: String,
+      sides: Seq[(String, String)], name: String => String, nb: Int): Unit = {
+    val layout = scala.util.hashing.MurmurHash3
+      .stringHash(s"$BktLayout:$nb:${sides.mkString(",")}").toLong
+    if (!StandingIndex.refresh(s, root,
+        StandingIndex.inputSig(s, dir, sides.map(_._1), layout))(
+        writeBucketed(s, dir, root, sides, name, nb)))
+      registerStored(s, root, sides, name, nb)
   }
 
   /** Write each (table, key) side hash-bucketed and sorted on its key
@@ -163,14 +162,9 @@ object BucketStore {
     StandingIndex.ensureArtifact(s, bktRoot(dir))(ensureBucketedValidated(s, dir))
 
   /** The validation+registration step a NEW session runs (spec hook). */
-  private[graft] def ensureBucketedValidated(s: SparkSession, dir: String): Unit = {
-    val root = bktRoot(dir)
-    val nb = numBucketsFor(s, dir)
-    if (!StandingIndex.refresh(s, root, StandingIndex.withLayout(
-        bktSig(s, dir, Tables, nb), BktLayout))(
-        writeBucketed(s, dir, root, Tables, tableName(dir, _), nb)))
-      registerStored(s, root, Tables, tableName(dir, _), nb)
-  }
+  private[graft] def ensureBucketedValidated(s: SparkSession, dir: String): Unit =
+    refreshBucketed(s, dir, bktRoot(dir), Tables, tableName(dir, _),
+      numBucketsFor(s, dir))
 
   private def deleteDir(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteDir))
@@ -264,12 +258,8 @@ object BucketStore {
       adv: (String, String, String, String, String)): Unit = {
     val (_, lr, lk, rr, rk) = adv
     val sides = Seq(lr -> lk, rr -> rk).distinct
-    val root = advRoot(dir)
-    val nb = numBuckets(s, dir, sides.map(_._1))
-    if (!StandingIndex.refresh(s, root, StandingIndex.withLayout(
-        bktSig(s, dir, sides, nb), BktLayout))(
-        writeBucketed(s, dir, root, sides, advTableName(dir, _), nb)))
-      registerStored(s, root, sides, advTableName(dir, _), nb)
+    refreshBucketed(s, dir, advRoot(dir), sides, advTableName(dir, _),
+      numBuckets(s, dir, sides.map(_._1)))
   }
 
   /** q194: the WHOLE planner loop as one query — statistics (q179's

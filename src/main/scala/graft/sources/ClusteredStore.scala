@@ -101,8 +101,8 @@ object ClusteredStore {
   /** The validation+build step a NEW session runs (spec hook). */
   private[graft] def ensureClusteredValidated(s: SparkSession, dir: String): Unit = {
     val root = clsRoot(dir)
-    StandingIndex.refresh(s, root, StandingIndex.withLayout(
-        StandingIndex.tableSig(s, dir, "documents"), ClsLayout)) {
+    StandingIndex.refresh(s, root,
+        StandingIndex.inputSig(s, dir, Seq("documents"), ClsLayout)) {
       val zoned = withZone(s, dir)
       zoned.write.mode("overwrite").partitionBy("zid")
         .parquet(s"$root/data")

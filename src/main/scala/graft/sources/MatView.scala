@@ -30,9 +30,22 @@ object MatView {
   private[graft] def mvRoot(dir: String): String =
     StandingIndex.artifactRoot(dir, "mv")
 
-  private[graft] def mvSig(s: SparkSession, dir: String): (Long, Long) =
-    StandingIndex.withLayout(
-      StandingIndex.tableSig(s, dir, "documents"), MvLayout)
+  /** Each view family's input tables and layout version, keyed by its
+    * root: what `ensure*` builds against and [[autoRegisterAll]]
+    * checks.
+    */
+  private def inputs(dir: String): Map[String, (Seq[String], Long)] = Map(
+    mvRoot(dir) -> (Seq("documents"), MvLayout),
+    evRoot(dir) -> (Seq("events"), EvLayout),
+    jmRoot(dir) -> (Seq("lineitem", "orders"), JmLayout),
+    stRoot(dir) -> (Seq("lineitem", "orders", "customer"), StLayout))
+
+  /** [[StandingIndex.refresh]] the view at `root` against its inputs. */
+  private def refreshView(s: SparkSession, dir: String, root: String)(
+      build: => Unit): Unit = {
+    val (tables, layout) = inputs(dir)(root)
+    StandingIndex.refresh(s, root, StandingIndex.inputSig(s, dir, tables, layout))(build)
+  }
 
   // ---- persisted registration: the sidecar a fresh session reads ----
 
@@ -99,20 +112,15 @@ object MatView {
     * ones registered. No build ever happens here. Returns how many
     * views registered.
     */
-  def autoRegisterAll(s: SparkSession, dir: String): Int = {
-    val families: Seq[(String, () => (Long, Long))] = Seq(
-      (mvRoot(dir), () => mvSig(s, dir)),
-      (evRoot(dir), () => evSig(s, dir)),
-      (jmRoot(dir), () => jmSig(s, dir)),
-      (stRoot(dir), () => stSig(s, dir)))
-    families.count { case (root, sig) =>
+  def autoRegisterAll(s: SparkSession, dir: String): Int =
+    inputs(dir).count { case (root, (tables, layout)) =>
       val p = new org.apache.hadoop.fs.Path(s"$root/reg")
       val exists = p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-      val fresh = exists && StandingIndex.metaFresh(s, root, sig())
+      val fresh = exists && StandingIndex.metaFresh(s, root,
+        StandingIndex.inputSig(s, dir, tables, layout))
       if (fresh) registerFrom(s, root)
       fresh
     }
-  }
 
   /** Make the MV available and REGISTER it with the rewrite rule —
     * reuse on a matching corpus signature. Returns the MV parquet
@@ -183,7 +191,7 @@ object MatView {
 
   /** The validation+build step a NEW session runs (spec hook). */
   private[graft] def ensureMvValidated(s: SparkSession, dir: String): Unit =
-    StandingIndex.refresh(s, mvRoot(dir), mvSig(s, dir)) {
+    refreshView(s, dir, mvRoot(dir)) {
       mvAggregate(graft.Engine.table(s, dir, "documents"))
         .coalesce(1).write.mode("overwrite").parquet(s"${mvRoot(dir)}/mv")
     }
@@ -295,10 +303,6 @@ object MatView {
   private[graft] def evRoot(dir: String): String =
     StandingIndex.artifactRoot(dir, "mvev")
 
-  private[graft] def evSig(s: SparkSession, dir: String): (Long, Long) =
-    StandingIndex.withLayout(StandingIndex.tableSig(s, dir, "events",
-      Seq("event_id", "user_id", "event_type")), EvLayout)
-
   /** A COUNT-ONLY materialized view over a SECOND table — per
     * event_type counts on events. Proves the MvRewrite registry is a
     * registry: two heterogeneous views (different source table,
@@ -314,7 +318,7 @@ object MatView {
   def ensureEventsMv(s: SparkSession, dir: String): String = {
     val root = evRoot(dir)
     StandingIndex.ensureArtifact(s, root) {
-      StandingIndex.refresh(s, root, evSig(s, dir)) {
+      refreshView(s, dir, root) {
         graft.Engine.table(s, dir, "events")
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_rows"))
@@ -355,14 +359,6 @@ object MatView {
 
   private[graft] def jmRoot(dir: String): String =
     StandingIndex.artifactRoot(dir, "mvjoin")
-
-  private[graft] def jmSig(s: SparkSession, dir: String): (Long, Long) = {
-    val (nl, sl) = StandingIndex.tableSig(s, dir, "lineitem",
-      Seq("l_orderkey", "l_quantity", "l_returnflag"))
-    val (no, so) = StandingIndex.tableSig(s, dir, "orders",
-      Seq("o_orderkey", "o_orderpriority"))
-    StandingIndex.withLayout((nl + no, sl * 31L + so), JmLayout)
-  }
 
   private def sourcePaths(s: SparkSession, dir: String, table: String): Seq[String] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -430,7 +426,7 @@ object MatView {
   def ensureJoinMv(s: SparkSession, dir: String): String = {
     val root = jmRoot(dir)
     StandingIndex.ensureArtifact(s, root) {
-      StandingIndex.refresh(s, root, jmSig(s, dir)) {
+      refreshView(s, dir, root) {
         jmAggregate(s, dir).coalesce(1).write.mode("overwrite").parquet(s"$root/mv")
       }
       writeReg(s, root, kind = "star",
@@ -493,17 +489,6 @@ object MatView {
   private[graft] def stRoot(dir: String): String =
     StandingIndex.artifactRoot(dir, "mvstar")
 
-  private[graft] def stSig(s: SparkSession, dir: String): (Long, Long) = {
-    val (nl, sl) = StandingIndex.tableSig(s, dir, "lineitem",
-      Seq("l_orderkey", "l_quantity"))
-    val (no, so) = StandingIndex.tableSig(s, dir, "orders",
-      Seq("o_orderkey", "o_custkey", "o_orderpriority"))
-    val (nc, sc) = StandingIndex.tableSig(s, dir, "customer",
-      Seq("c_custkey", "c_mktsegment"))
-    StandingIndex.withLayout(
-      (nl + no + nc, (sl * 31L + so) * 31L + sc), StLayout)
-  }
-
   private def stAggregate(s: SparkSession, dir: String): DataFrame =
     graft.Engine.table(s, dir, "lineitem")
       .join(graft.Engine.table(s, dir, "orders"),
@@ -530,7 +515,7 @@ object MatView {
   def ensureStarMv(s: SparkSession, dir: String): String = {
     val root = stRoot(dir)
     StandingIndex.ensureArtifact(s, root) {
-      StandingIndex.refresh(s, root, stSig(s, dir)) {
+      refreshView(s, dir, root) {
         stAggregate(s, dir).coalesce(1).write.mode("overwrite").parquet(s"$root/mv")
       }
       writeReg(s, root, kind = "star",

@@ -71,7 +71,8 @@ object SimIndex {
 
   /** The validation+build step a NEW session runs (spec hook). */
   private[graft] def ensureValidated(s: SparkSession, dir: String): Unit =
-    StandingIndex.refresh(s, indexRoot(dir), StandingIndex.corpusSig(s, dir))(
+    StandingIndex.refresh(s, indexRoot(dir),
+        StandingIndex.inputSig(s, dir, Seq("documents")))(
       buildFrom(sideDocs(s, dir, delta = false), indexRoot(dir)))
 
   /** Standing-side documents with de-duplicated token arrays (q150's

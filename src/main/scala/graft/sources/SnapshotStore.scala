@@ -10,12 +10,12 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Snapshot-manifest table store — the mini table format that swaps
   * content-scan freshness for an O(1) snapshot id.
   *
-  * Every standing artifact in this engine keys freshness on a corpus
-  * CONTENT signature — one map-side-combinable aggregate, cheap but
-  * still a full scan. Its own scaladoc has said from the start that
-  * "at 100 TB a table-format engine swaps this content scan for the
-  * snapshot id its catalog already maintains" (StandingIndex.corpusSig).
-  * This store IS that swap, built from scratch on plain parquet the
+  * Every standing artifact in this engine keys freshness on a CONTENT
+  * signature of its input tables (StandingIndex.inputSig) — one
+  * map-side-combinable aggregate per table, cheap but still a full scan
+  * the first time a JVM sees the table. At 100 TB a table-format engine
+  * swaps this content scan for the snapshot id its catalog already
+  * maintains. This store IS that swap, built from scratch on plain parquet the
   * way Iceberg/Delta build it: immutable data files, a MANIFEST per
   * snapshot listing the table's full file set, and a commit protocol
   * where the manifest write is the commit point.
@@ -136,23 +136,19 @@ object SnapshotStore {
   val UpdateModeKey = "spark.graft.snapshot.updateMode"
   val MergeModeKey = "spark.graft.snapshot.mergeMode"
 
-  /** Conf key: total live delete-file rows (equality keys or delete
-    * positions, decided per kind from manifest `n_rows` alone) above
-    * which every delete-resolution structure switches from its
-    * driver/broadcast form to the DISTRIBUTED form (VERDICT r16
-    * what's-wrong 1): affected-file planning goes through the
-    * granule-summary range join, and scans resolve deletes PER TASK —
-    * each reader re-reads the delete files bounded to its own data
-    * file's key range / path (the Iceberg per-task delete-apply
-    * shape), so no driver or broadcast structure is ever O(|keys|).
-    * Below the threshold the collected/broadcast fast path stays — a
-    * CDC-sized delete set is cheaper to ship once than to re-read per
-    * task.
+  /** Total live delete-file rows (equality keys or delete positions,
+    * decided per kind from manifest `n_rows` alone) above which every
+    * delete-resolution structure switches from its driver/broadcast
+    * form to the DISTRIBUTED form (VERDICT r16 what's-wrong 1):
+    * affected-file planning goes through the granule-summary range
+    * join, and scans resolve deletes PER TASK — each reader re-reads
+    * the delete files bounded to its own data file's key range / path
+    * (the Iceberg per-task delete-apply shape), so no driver or
+    * broadcast structure is ever O(|keys|). Below the threshold the
+    * collected/broadcast fast path stays — a CDC-sized delete set is
+    * cheaper to ship once than to re-read per task.
     */
-  val DeleteMapThresholdKey = "spark.graft.snapshot.deleteMapThreshold"
-
-  private[graft] def deleteMapThreshold(s: SparkSession): Long =
-    s.conf.getOption(DeleteMapThresholdKey).map(_.toLong).getOrElse(262144L)
+  private[sources] val DeleteMapThreshold = 262144L
 
   /** Conf key: rows per file above which an identity-partitioned write
     * SPLITS a hot partition value into multiple doc_id-range files
@@ -180,28 +176,22 @@ object SnapshotStore {
   private[graft] def snapRoot(dir: String): String =
     StandingIndex.artifactRoot(dir, "snap")
 
-  /** The corpus signature every seeded store is validated by: the
-    * documents table under the snapshot-store layout version, further
-    * salted per store by [[ensureSeeded]].
-    */
-  private[graft] def snapSig(s: SparkSession, dir: String): (Long, Long) =
-    StandingIndex.withLayout(StandingIndex.tableSig(s, dir, "documents"), SnapLayout)
-
   /** A fixture store seeded from `documents` at `root`: validated once
-    * per session against [[snapSig]] salted with the store's `layout`;
-    * a (re)build starts from an empty root and gets the documents frame.
+    * per session by [[refreshSeeded]] under the store's `layout`; a
+    * (re)build starts from an empty root and gets the documents frame.
     */
   private def ensureSeeded(s: SparkSession, dir: String, root: String,
       layout: Long)(build: (String, DataFrame) => Unit): String =
-    StandingIndex.ensureArtifact(s, root)(refreshSeeded(s, dir, root,
-      StandingIndex.withLayout(snapSig(s, dir), layout))(build))
+    StandingIndex.ensureArtifact(s, root)(refreshSeeded(s, dir, root, layout)(build))
 
-  /** [[StandingIndex.refresh]] a seeded store against `sig`; a
+  /** [[StandingIndex.refresh]] a seeded store against the documents
+    * table under [[SnapLayout]] plus the store's own `layout`; a
     * (re)build starts from an empty root.
     */
   private def refreshSeeded(s: SparkSession, dir: String, root: String,
-      sig: (Long, Long))(build: (String, DataFrame) => Unit): Unit =
-    StandingIndex.refresh(s, root, sig) {
+      layout: Long)(build: (String, DataFrame) => Unit): Unit =
+    StandingIndex.refresh(s, root,
+        StandingIndex.inputSig(s, dir, Seq("documents"), SnapLayout + layout)) {
       fs(s, root).delete(new Path(root), true)
       build(root, graft.Engine.table(s, dir, "documents"))
     }
@@ -255,17 +245,26 @@ object SnapshotStore {
     .empty[(String, Long), (String, StructType, Seq[org.apache.spark.sql.Row])]
   private val MemoCap = 2048
 
-  /** Immutability token of a committed m<k>: the directory listing's
-    * (name, mtime, len) triples — None when the directory or its
-    * `_SUCCESS` marker is missing (torn or expired ⇒ never memoized).
+  /** Listing token of `p`: the sorted (name, mtime, len) triples of
+    * what `listStatus` returns for it (a file itself, or a directory's
+    * entries) — None when it cannot be listed. Written files carry
+    * write-unique names, so a rewrite changes the token. The one
+    * immutability check behind this store's manifest memo and
+    * [[StandingIndex.inputSig]]'s per-table memo.
+    */
+  private[sources] def listingToken(s: SparkSession, p: Path): Option[String] =
+    try Some(fs(s, p.toString).listStatus(p)
+      .map(x => s"${x.getPath.getName}:${x.getModificationTime}:${x.getLen}")
+      .sorted.mkString(","))
+    catch { case _: Exception => None }
+
+  /** Immutability token of a committed m<k>: its [[listingToken]] —
+    * None when the directory or its `_SUCCESS` marker is missing (torn
+    * or expired ⇒ never memoized).
     */
   private def mlistToken(s: SparkSession, root: String, k: Long): Option[String] =
-    try {
-      val st = fs(s, root).listStatus(new Path(s"$root/manifests/m$k"))
-      if (!st.exists(_.getPath.getName == "_SUCCESS")) None
-      else Some(st.map(x => s"${x.getPath.getName}:${x.getModificationTime}:${x.getLen}")
-        .sorted.mkString(","))
-    } catch { case _: Exception => None }
+    listingToken(s, new Path(s"$root/manifests/m$k"))
+      .filter(_.split(',').exists(_.startsWith("_SUCCESS:")))
 
   /** Snapshot k's MANIFEST LIST: the manifest-file paths composing it.
     * One tiny read of m<k> (O(#manifest files) strings) — memoized per
@@ -1674,7 +1673,15 @@ object SnapshotStore {
     * [[MergeJoinThresholdKey]] rows — large upserts never collect
     * their key set.
     */
-  def mergeInto(s: SparkSession, root: String, changes: DataFrame): Long = {
+  def mergeInto(s: SparkSession, root: String, changes: DataFrame): Long =
+    mergeInto(s, root, changes, changes.sparkSession.conf
+      .getOption(MergeJoinThresholdKey).map(_.toLong).getOrElse(100000L))
+
+  /** [[mergeInto]] with the affected-file decision switching to the
+    * granule range join at `joinThreshold` change rows.
+    */
+  def mergeInto(s: SparkSession, root: String, changes: DataFrame,
+      joinThreshold: Long): Long = {
     // The change set is read by the path decision AND the rewrite (and
     // again per claim-race retry) — but `changes` is caller-supplied
     // and may be an arbitrarily expensive unmaterialized plan, so it
@@ -1686,15 +1693,13 @@ object SnapshotStore {
     try {
       val nChanges = cached.count() // materializes the cache
       require(nChanges > 0, "mergeInto with an empty change set")
-      val threshold = changes.sparkSession.conf
-        .getOption(MergeJoinThresholdKey).map(_.toLong).getOrElse(100000L)
       commitRetry(s, root) { prev =>
         require(prev > 0, "mergeInto on an empty table")
         val k = prev + 1
         val mfull = withKind(manifestFull(s, root, prev))
         val dataOnly = mfull.filter(col("kind") === "data")
         val affected =
-          if (nChanges >= threshold) affectedByJoin(s, dataOnly, cached)
+          if (nChanges >= joinThreshold) affectedByJoin(s, dataOnly, cached)
           else affectedByCollect(s, dataOnly, cached)
         val base =
           if (affected.isEmpty) cached
@@ -1882,7 +1887,7 @@ object SnapshotStore {
         val totalEqRows = delRows.map(_.getAs[Long]("n_rows")).sum
         val eqAffected: Set[String] =
           if (delRows.isEmpty) Set.empty
-          else if (totalEqRows <= deleteMapThreshold(s)) {
+          else if (totalEqRows <= DeleteMapThreshold) {
             val hitByCid: Seq[(Long, FileFilter)] =
               delRows.groupBy(_.getAs[Long]("commit_id")).toSeq.map { case (cid, fs) =>
                 cid -> FileFilter(keys = Some(
@@ -2932,7 +2937,7 @@ object SnapshotStore {
     StandingIndex.ensureArtifact(s, snapRoot(dir))(ensureValidated(s, dir))
 
   private[graft] def ensureValidated(s: SparkSession, dir: String): Unit =
-    refreshSeeded(s, dir, snapRoot(dir), snapSig(s, dir)) { (root, docs) =>
+    refreshSeeded(s, dir, snapRoot(dir), 0L) { (root, docs) =>
       twoCommits(docs)(append(s, root, _))
     }
 
@@ -3448,7 +3453,7 @@ object SnapshotStore {
             r.getAs[Long]("commit_id") > j)
           .map(_.getAs[Long]("n_rows")).sum
         val aff =
-          if (nNewDel <= deleteMapThreshold(s)) affectedByCollect(s, mJdata, keys)
+          if (nNewDel <= DeleteMapThreshold) affectedByCollect(s, mJdata, keys)
           else affectedByJoin(s, mJdata, keys)
         val affT = datJ.filter(t => aff(t._1))
         val oldSchema = tableSchema(s, root, j)
@@ -3553,7 +3558,7 @@ object SnapshotStore {
         .withColumn("doc_id", col("doc_id") + 2000000L))
 
   /** Seed + MERGE through the DISTRIBUTED granule range join: the
-    * threshold is pinned to 1 for the build, so the affected-file
+    * threshold is 1 for the build, so the affected-file
     * decision provably runs as [[affectedByJoin]] — no key ever
     * reaches the driver — while q223's oracle hash-checks the result
     * against the same closed form the collect path would produce.
@@ -3561,13 +3566,7 @@ object SnapshotStore {
   def ensureMergedJoin(s: SparkSession, dir: String): String =
     ensureSeeded(s, dir, mjRoot(dir), MjLayout) { (root, docs) =>
       twoCommits(docs)(append(s, root, _))
-      val prev = s.conf.getOption(MergeJoinThresholdKey)
-      s.conf.set(MergeJoinThresholdKey, "1")
-      try mergeInto(s, root, mergeChangesJoin(docs))
-      finally prev match {
-        case Some(v) => s.conf.set(MergeJoinThresholdKey, v)
-        case None => s.conf.unset(MergeJoinThresholdKey)
-      }
+      mergeInto(s, root, mergeChangesJoin(docs), joinThreshold = 1L)
     }
 
   /** q223: the JOIN-path MERGE read back — same MERGE INTO semantics
@@ -4216,14 +4215,10 @@ object SnapshotStore {
     * oracle checks the joined rows.
     */
   def ensureBucketedPair(s: SparkSession, dir: String): (String, String) = {
-    lazy val sig = snapSig(s, dir) // one corpus scan validates both sides
-    def side(name: String)(rows: DataFrame => DataFrame): String = {
-      val root = bkRoot(dir, name)
-      StandingIndex.ensureArtifact(s, root)(
-        refreshSeeded(s, dir, root, StandingIndex.withLayout(sig, BkLayout)) {
-          (root, docs) => appendBucketed(s, root, rows(docs))
-        })
-    }
+    def side(name: String)(rows: DataFrame => DataFrame): String =
+      ensureSeeded(s, dir, bkRoot(dir, name), BkLayout) { (root, docs) =>
+        appendBucketed(s, root, rows(docs))
+      }
     (side("l")(identity),
       side("r")(_.select(col("doc_id"), col("lang"),
         (coalesce(col("n_chars"), lit(0L)) % 7L).as("band"))))

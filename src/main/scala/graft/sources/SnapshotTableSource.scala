@@ -1553,11 +1553,10 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     // SQL DELETE) switches to PER-TASK resolution — the partitions
     // carry delete-file PATHS and each reader re-reads them bounded to
     // its own file's range/path, so no driver structure is O(|keys|)
-    val threshold = SnapshotStore.deleteMapThreshold(s)
-    val eqPerTask = delRows.nonEmpty &&
-      delRows.iterator.map(_.getAs[Long]("n_rows")).sum > threshold
-    val posPerTask = posRows.nonEmpty &&
-      posRows.iterator.map(_.getAs[Long]("n_rows")).sum > threshold
+    val eqPerTask = delRows.nonEmpty && delRows.iterator
+      .map(_.getAs[Long]("n_rows")).sum > SnapshotStore.DeleteMapThreshold
+    val posPerTask = posRows.nonEmpty && posRows.iterator
+      .map(_.getAs[Long]("n_rows")).sum > SnapshotStore.DeleteMapThreshold
     if (delRows.nonEmpty || posRows.nonEmpty)
       SnapshotTableSource.lastDeleteResolution.put(root,
         if (eqPerTask || posPerTask) "per-task" else "broadcast")
@@ -1666,7 +1665,7 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
         .map(_.getAs[Long]("n_rows")).sum
     }
     val deletes =
-      if (eqRowsTotal > SnapshotStore.deleteMapThreshold(s)) None
+      if (eqRowsTotal > SnapshotStore.DeleteMapThreshold) None
       else if (eqDeleteMap._1.isEmpty) None
       else Some(s.sparkContext.broadcast(eqDeleteMap))
     // scan-uniform columnar decision (Spark refuses mixed partitions):

@@ -36,7 +36,7 @@ import graft.operators.{IndexOps, LlmOps}
   *
   * Artifact freshness is SIGNATURE-VALIDATED, not rebuild-always: each
   * build stamps a `meta` row with the corpus's content signature
-  * ([[corpusSig]]), and a new session's first lookup revalidates the
+  * ([[inputSig]]), and a new session's first lookup revalidates the
   * stored row against the current corpus — match ⇒ the artifact is
   * reused (the production behavior: an index outlives the session that
   * built it), mismatch ⇒ rebuild (a driver-side fixture regen can
@@ -84,56 +84,64 @@ object StandingIndex {
     */
   val MetaVersion = 1L
 
-  /** The (n_docs, corpus_sig) pair that keys artifact freshness:
-    * corpus_sig is the order-independent multiset signature
-    * Σ hash('mf:'|doc_id|'|'|text) mod [[SigMod]] — the q160/q165
-    * signature discipline applied to the SOURCE corpus. A stored
-    * artifact whose meta row matches the current corpus is provably
-    * derived from byte-identical inputs (any added/dropped/edited doc
-    * moves the sum), so `ensure` can REUSE it across sessions instead
-    * of rebuilding — while a driver-side fixture regen between
-    * sessions flips the signature and forces the rebuild the old
-    * unconditional discipline bought (EngineResilienceSpec's lesson,
-    * now at artifact granularity).
+  /** The freshness signature of an artifact derived from `tables` of
+    * the fixture dir `dir` under build recipe `layout`: (Σ rows,
+    * (Σ per-table term + layout) mod [[SigMod]]). Every standing
+    * artifact over fixture tables validates through this one function;
+    * a family names its input tables and its layout version, nothing
+    * more.
     *
-    * Scale shape: one map-side-combinable aggregate over (doc_id,
-    * text) — no shuffle, no tokenize — orders of magnitude cheaper
-    * than the build it guards. At 100 TB a table-format engine swaps
-    * this content scan for the snapshot id its catalog already
-    * maintains (Iceberg/Delta manifest comparison); the content sum is
-    * the format-free equivalent the plain-parquet fixtures support.
+    * A table's term is its row count and the order-independent multiset
+    * sum Σ pmod(hash(every column), SigMod) with the table's name folded
+    * in, so rows moving between tables cannot cancel out. Any added,
+    * dropped or edited row moves the sum, so a stored artifact whose
+    * meta row matches was built from byte-identical inputs. The hash is
+    * Spark's builtin Murmur3 over every column (arrays included):
+    * signatures face only our own comparator, never the DuckDB oracle.
+    *
+    * Each term is one map-side aggregate over the table, memoized
+    * JVM-wide per table path behind the path's listing token
+    * ([[SnapshotStore.listingToken]], the token the manifest memo
+    * already trusts): a rewritten table lists differently and
+    * recomputes, a new JVM always recomputes, and every later family
+    * and session over an unchanged table pays one directory listing
+    * instead of a content scan. The stored meta row stays the content
+    * signature, so the token only decides when to rescan.
     */
-  private[graft] def corpusSig(s: SparkSession, dir: String): (Long, Long) = {
-    val r = Engine.table(s, dir, "documents")
-      .agg(count(lit(1)).cast("long").as("n"),
-        coalesce(sum(pmod(expr(LlmOps.hashS(
-          "concat('mf:', CAST(doc_id AS STRING), '|', text)")),
-          lit(SigMod))), lit(0L)).cast("long").as("sig"))
-      .head()
-    (r.getLong(0), r.getLong(1))
+  def inputSig(s: SparkSession, dir: String, tables: Seq[String],
+      layout: Long = 0L): (Long, Long) = {
+    val terms = tables.map(tableTerm(s, dir, _))
+    withLayout((terms.map(_._1).sum, terms.map(_._2).sum), layout)
   }
 
-  /** Generic content signature of a fixture table over `cols` — the
-    * [[corpusSig]] discipline for artifacts derived from tables other
-    * than `documents` (the IVF quantizer's embeddings, say). Uses
-    * Spark's builtin Murmur3 `hash` over the columns (arrays
-    * included): signatures face only our own comparator, never the
-    * DuckDB oracle, so engine-native hashing is fine here.
-    */
-  private[graft] def tableSig(s: SparkSession, dir: String, table: String,
-      cols: Seq[String]): (Long, Long) = {
-    val r = Engine.table(s, dir, table)
-      .agg(count(lit(1)).cast("long").as("n"),
-        coalesce(sum(pmod(hash(cols.map(col): _*).cast("long"), lit(SigMod))),
-          lit(0L)).cast("long").as("sig"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  /** Per table path: (listing token, term) of the last scan. */
+  private val termMemo =
+    scala.collection.concurrent.TrieMap.empty[String, (String, (Long, Long))]
+  private val TermMemoCap = 2048
 
-  /** [[tableSig]] over every column of `table`. */
-  private[graft] def tableSig(s: SparkSession, dir: String,
-      table: String): (Long, Long) =
-    tableSig(s, dir, table, Engine.table(s, dir, table).columns.toSeq)
+  /** One table's term of [[inputSig]]: memoized while its listing
+    * token holds. The token is taken before the scan, so a table
+    * rewritten mid-scan is stored under the old token and rescans.
+    */
+  private def tableTerm(s: SparkSession, dir: String, table: String): (Long, Long) = {
+    val path = s"$dir/$table.parquet"
+    val tok = SnapshotStore.listingToken(s, new org.apache.hadoop.fs.Path(path))
+    tok.flatMap(t => termMemo.get(path).collect { case (`t`, term) => term })
+      .getOrElse {
+        val df = Engine.table(s, dir, table)
+        val r = df.agg(count(lit(1)).cast("long"),
+            coalesce(sum(pmod(hash(df.columns.toSeq.map(col): _*).cast("long"),
+              lit(SigMod))), lit(0L)).cast("long"))
+          .head()
+        val term = (r.getLong(0), Math.floorMod(
+          scala.util.hashing.MurmurHash3.stringHash(table).toLong + r.getLong(1), SigMod))
+        tok.foreach { t =>
+          if (termMemo.size >= TermMemoCap) termMemo.clear()
+          termMemo.put(path, (t, term))
+        }
+        term
+      }
+  }
 
   /** The freshness meta row's one file, `<root>/meta`: one line
     * "format_version n_docs corpus_sig", read and written on the driver
@@ -238,7 +246,7 @@ object StandingIndex {
     * can replay "next session" without constructing one).
     */
   private[graft] def ensureValidated(s: SparkSession, dir: String): Unit =
-    refresh(s, indexRoot(dir), corpusSig(s, dir))(build(s, dir))
+    refresh(s, indexRoot(dir), inputSig(s, dir, Seq("documents")))(build(s, dir))
 
   /** One corpus scan → the three persisted tables. ONE artifact write
     * path: the one-shot build IS a single-segment overwrite through the
@@ -473,7 +481,7 @@ object StandingIndex {
     */
   private[graft] def ensureIncremental(s: SparkSession, dir: String): String = {
     val root = s"${indexRoot(dir)}_inc"
-    ensureArtifact(s, root)(refresh(s, root, corpusSig(s, dir)) {
+    ensureArtifact(s, root)(refresh(s, root, inputSig(s, dir, Seq("documents"))) {
       val docs = Engine.table(s, dir, "documents")
         .withColumn("tok", expr(LlmOps.toksS))
         .withColumn("is_delta",

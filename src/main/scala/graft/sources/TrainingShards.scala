@@ -140,8 +140,8 @@ object TrainingShards {
   /** The validation+build step a NEW session runs (spec hook). */
   private[graft] def ensureShardsValidated(s: SparkSession, dir: String): Unit = {
     val out = shardOutDir(dir)
-    StandingIndex.refresh(s, metaRoot(out), StandingIndex.withLayout(
-      StandingIndex.tableSig(s, dir, "documents"), ShardLayout))(
+    StandingIndex.refresh(s, metaRoot(out),
+        StandingIndex.inputSig(s, dir, Seq("documents"), ShardLayout))(
       write(graft.Engine.table(s, dir, "documents"), out))
   }
 

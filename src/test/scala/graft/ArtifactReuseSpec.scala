@@ -95,6 +95,42 @@ class ArtifactReuseSpec extends AnyFunSuite {
     assert(Canonical.hash(stored) == Canonical.hash(fromRaw))
   }
 
+  test("positional index: a new session revalidates a fresh index with no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.Bridge
+    val dir = mkCorpus()
+    val root = StandingIndex.indexRoot(dir)
+    StandingIndex.ensureValidated(spark, dir) // session 1: builds
+    val built = newestMtime(root)
+    assert(built > 0L)
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      Bridge.drainListenerBus(spark)
+      val before = started.get
+      body
+      Bridge.drainListenerBus(spark)
+      started.get - before
+    }
+    def newSession(): SparkSession = {
+      val s2 = spark.newSession(); Engine.install(s2); s2
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Thread.sleep(1100)
+      val jobs = jobsOf(StandingIndex.ensure(newSession(), dir)) // session 2
+      assert(jobs == 0, s"revalidating an unchanged corpus ran $jobs Spark jobs")
+      assert(newestMtime(root) == built, "fresh artifact was rebuilt instead of reused")
+      poisonCorpus(dir)
+      Thread.sleep(1100)
+      val rescan = jobsOf(StandingIndex.ensure(newSession(), dir)) // session 3
+      assert(rescan > 0, "an edited corpus must be rescanned")
+      assert(newestMtime(root) > built, "edited corpus did not trigger a rebuild")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("shard store: matching signature reuses; edited corpus rewrites") {
     import graft.sources.TrainingShards
     val dir = mkCorpus()
@@ -154,12 +190,12 @@ class ArtifactReuseSpec extends AnyFunSuite {
     Thread.sleep(1100)
     // replay a new session's validation directly (the latch would
     // short-circuit in this one)
-    val sig = StandingIndex.corpusSig(spark, dir)
+    val sig = StandingIndex.inputSig(spark, dir, Seq("documents"))
     assert(StandingIndex.metaFresh(spark, incRoot, sig),
       "incremental artifact must carry a fresh meta row")
     poisonCorpus(dir)
     assert(!StandingIndex.metaFresh(spark, incRoot,
-      StandingIndex.corpusSig(spark, dir)),
+      StandingIndex.inputSig(spark, dir, Seq("documents"))),
       "signature must flip when the corpus changes")
   }
 
@@ -219,8 +255,7 @@ class ArtifactReuseSpec extends AnyFunSuite {
       "fresh pq artifact was retrained instead of reused")
     // the same one-float embedding poison the ivf test uses must flip
     // BOTH pq signatures (they key on the embeddings table)
-    val sigBefore = StandingIndex.tableSig(spark, dir, "embeddings",
-      Seq("vec_id", "embedding"))
+    val sigBefore = StandingIndex.inputSig(spark, dir, Seq("embeddings"))
     val e = spark.read.parquet(s"$dir/embeddings.parquet").collect()
     val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
     val edited = e.map { r =>
@@ -235,8 +270,7 @@ class ArtifactReuseSpec extends AnyFunSuite {
     Files.delete(Paths.get(s"$dir/embeddings.parquet"))
     regen.coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
-    assert(StandingIndex.tableSig(spark, dir, "embeddings",
-      Seq("vec_id", "embedding")) != sigBefore)
+    assert(StandingIndex.inputSig(spark, dir, Seq("embeddings")) != sigBefore)
     Thread.sleep(1100)
     LlmOps.ensurePqArtifact(spark, dir) // session 3: must retrain
     LlmOps.ensurePqrArtifact(spark, dir)
@@ -326,7 +360,7 @@ class ArtifactReuseSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_layout_").toString
     var builds = 0
     def ensure(s: SparkSession, layout: Long): Unit =
-      ensureFamily(s, root, StandingIndex.corpusSig(s, dir), layout) {
+      ensureFamily(s, root, StandingIndex.inputSig(s, dir, Seq("documents")), layout) {
         builds += 1
       }
     def newSession(): SparkSession = {
@@ -339,7 +373,7 @@ class ArtifactReuseSpec extends AnyFunSuite {
     ensure(newSession(), 2L) // same data, bumped layout
     assert(builds == 2, "a layout bump did not rebuild")
     assert(StandingIndex.metaFresh(spark, root,
-      StandingIndex.withLayout(StandingIndex.corpusSig(spark, dir), 2L)))
+      StandingIndex.withLayout(StandingIndex.inputSig(spark, dir, Seq("documents")), 2L)))
   }
 
   test("ensureArtifact: a build that throws leaves no meta row and no latch") {

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * a function registration anywhere else would let a query's session
   * depend on which harness or operator ran first — this spec fails on
   * any of them. It also keeps standing artifacts on ONE freshness
-  * protocol (`StandingIndex.ensureArtifact`/`refresh`), snapshot
+  * protocol (`StandingIndex.ensureArtifact`/`refresh`) with ONE
+  * signature function (`StandingIndex.inputSig`), snapshot
   * layouts on ONE layout value (`SnapshotStore.layoutOf`), and snapshot
   * file pruning on ONE file predicate (`SnapshotStore.FileFilter`).
   */
@@ -46,6 +47,8 @@ class InstallGuardSpec extends AnyFunSuite {
   private val LayoutColumn = """"(?:bucket_col|part_col|cat_col)""""
   private val PruningStat = """"(?:min_cat|max_cat|min_chars|max_chars)"|\bCatOrder\b"""
   private val KeyProbe = """Arrays\s*\.\s*binarySearch"""
+  private val FreshnessSig =
+    """\bdef\s+\w*Sig\s*\(|\)\s*:\s*\(Long,\s*Long\)\s*=|\bwithLayout\s*\("""
   private val FunctionRegistration =
     """\b(?:createOrReplaceTempFunction|registerFunction)\s*\(|\budf\s*\.\s*register\s*\("""
 
@@ -75,6 +78,18 @@ class InstallGuardSpec extends AnyFunSuite {
     val bad = offenders(LatchValue, Set("StandingIndex.scala"))
     assert(bad.isEmpty,
       s"use StandingIndex.ensureArtifact for standing artifacts:\n${bad.mkString("\n")}")
+  }
+
+  test("freshness signatures are composed only in StandingIndex.inputSig") {
+    // a `…Sig` helper, a def typed as a freshness signature or a
+    // hand-folded layout salt is a second freshness mechanism; a family
+    // names its input tables and layout version to inputSig. Query-output
+    // signatures (prefix_sig, zsig, postings_sig) are columns, never
+    // (Long, Long) values, so the pattern leaves them alone.
+    assert(matchesIn(FreshnessSig, "StandingIndex.scala"))
+    val bad = offenders(FreshnessSig, Set("StandingIndex.scala"))
+    assert(bad.isEmpty,
+      s"validate artifacts through StandingIndex.inputSig:\n${bad.mkString("\n")}")
   }
 
   test("snapshot layout claims are decoded only in SnapshotStore") {
